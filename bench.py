@@ -66,7 +66,7 @@ def main() -> int:
         loadavg_start = None
 
     from clickhouse_arrow_spark.queries import load_all
-    from clickhouse_arrow_spark.session import get_spark
+    from clickhouse_arrow_spark.session import _default_parallelism, get_spark
 
     spark = get_spark(app_name="cas-bench")
     registry = load_all()
@@ -251,9 +251,7 @@ def main() -> int:
                 # (round-13: the r12 8-core scaling artifact said
                 # "cpus": 32 inside its own JSON because this reported
                 # os.cpu_count() instead of $SPARK_GRAFT_CPUS)
-                "cpus": int(
-                    os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)
-                ),
+                "cpus": _default_parallelism(),
                 "cpus_machine": os.cpu_count(),
             }
         )

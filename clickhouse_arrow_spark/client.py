@@ -754,47 +754,9 @@ class Client:
 
             ch_sql = rewrite_star_apply(self.spark, ch_sql)
         ch_sql, fill = extract_with_fill(ch_sql)
-        # session-scoped SET splitby_max_substrings_includes_remaining_
-        # string = 1 (legacy remainder-in-last splitBy*) lands in the
-        # shim's namespaced conf; surface it to the dialect for this
-        # statement (a SETTINGS tail on the statement still overrides)
-        _split_mode = self.spark.conf.get(
-            "spark.clickhouse_arrow_spark.setting."
-            "splitby_max_substrings_includes_remaining_string",
-            "0",
+        sql = translate_ch_sql(
+            ch_sql, allow_hash_substitution, self._dialect_settings()
         )
-        if str(_split_mode).lower() in ("1", "true"):
-            from clickhouse_arrow_spark.dialect import (
-                set_splitby_includes_remaining,
-            )
-
-            set_splitby_includes_remaining(True)
-        # session-scoped SET formatdatetime_parsedatetime_m_is_month_
-        # name = 0 (legacy %M = minutes; modern default is month name)
-        _m_mode = self.spark.conf.get(
-            "spark.clickhouse_arrow_spark.setting."
-            "formatdatetime_parsedatetime_m_is_month_name",
-            "1",
-        )
-        if str(_m_mode).lower() in ("0", "false"):
-            from clickhouse_arrow_spark.dialect import (
-                set_formatdatetime_m_is_month_name,
-            )
-
-            set_formatdatetime_m_is_month_name(False)
-        # session-scoped SET max_fold_group_rows = n (round-10 point-
-        # statistic fold contract; a SETTINGS tail still overrides)
-        _fold_limit = self.spark.conf.get(
-            "spark.clickhouse_arrow_spark.setting.max_fold_group_rows",
-            "",
-        )
-        if str(_fold_limit).strip().isdigit():
-            from clickhouse_arrow_spark.dialect import (
-                set_max_fold_group_rows,
-            )
-
-            set_max_fold_group_rows(int(_fold_limit))
-        sql = translate_ch_sql(ch_sql, allow_hash_substitution)
         # after translation: the replacement subqueries use Spark's own
         # range() TVF, which the CH->Spark translator must not re-touch
         sql = self._rewrite_system_tables(sql)
@@ -810,6 +772,24 @@ class Client:
                 staleness=fill.get("staleness"),
             )
         return df
+
+    def _dialect_settings(self):
+        """DialectSettings from the session's SET values (the SET shim
+        keeps them in namespaced confs); a statement's own SETTINGS
+        tail still overrides them."""
+        from clickhouse_arrow_spark.dialect import (
+            HONORED_SETTINGS,
+            DialectSettings,
+            honored_setting,
+        )
+        from clickhouse_arrow_spark.settings import _PASSTHROUGH_PREFIX
+
+        overrides: dict = {}
+        for name in HONORED_SETTINGS:
+            val = self.spark.conf.get(_PASSTHROUGH_PREFIX + name, None)
+            if val is not None:
+                overrides.update(honored_setting(name, str(val)))
+        return DialectSettings(**overrides)
 
     def query_params(
         self, sql: str, params: dict[str, Any] | None = None, qid: str | None = None

@@ -16,9 +16,11 @@ parametric syntax like `quantile(0.9)(x)`, and leaves everything else
 from __future__ import annotations
 
 import re
+from contextvars import ContextVar
+from dataclasses import dataclass, replace
 from typing import Callable
 
-__all__ = ["translate_ch_sql"]
+__all__ = ["DialectSettings", "translate_ch_sql"]
 
 Args = list[str]
 
@@ -739,18 +741,30 @@ _CH_DT_EXPR_SPEC = {
          "2, '0')",
 }
 
-#: statement-scoped %M reading for formatDateTime/parseDateTime.
-#: Modern CH (23.4+): %M = full month name; the legacy minutes mode is
-#: selected with SETTINGS/SET
-#: formatdatetime_parsedatetime_m_is_month_name = 0. Reset with
-#: _SPLITBY_STATE when the outermost translate returns.
-_FORMATDT_STATE = {"m_is_month_name": True}
+@dataclass(frozen=True)
+class DialectSettings:
+    """The ClickHouse settings that change how a statement translates
+    (HONORED_SETTINGS names them). The client builds one from the
+    session's SET values; a statement's SETTINGS tail overrides it for
+    that statement only."""
+
+    #: splitBy* keeps the remainder in the last element (legacy CH)
+    #: instead of discarding it (CH 23.12+)
+    splitby_includes_remaining: bool = False
+    #: formatDateTime/parseDateTime %M is the full month name (CH
+    #: 23.4+) instead of the legacy minutes
+    m_is_month_name: bool = True
+    #: per-group row limit of the point-statistic fold contract
+    #: (engine extension, _guard_fold)
+    max_fold_group_rows: int = 10_000_000
 
 
-def set_formatdatetime_m_is_month_name(flag: bool) -> None:
-    """Statement-scoped override for the %M specifier reading
-    (ClickHouse setting formatdatetime_parsedatetime_m_is_month_name)."""
-    _FORMATDT_STATE["m_is_month_name"] = bool(flag)
+#: the settings of the statement being translated. Each statement sets
+#: it and resets it with its token (_statement), so a value never
+#: outlives its statement and a thread sees only its own statements'.
+_SETTINGS: ContextVar[DialectSettings] = ContextVar(
+    "dialect_settings", default=DialectSettings()
+)
 
 
 def _ch_dt_spec_to_java(fmt: str, fn_name: str) -> str:
@@ -771,9 +785,7 @@ def _ch_dt_spec_to_java(fmt: str, fn_name: str) -> str:
                 # modern CH default: %M = full month name; legacy
                 # minutes via formatdatetime_parsedatetime_m_is_
                 # month_name = 0 (statement/session scoped, wave 35)
-                mapped = (
-                    "MMMM" if _FORMATDT_STATE["m_is_month_name"] else "mm"
-                )
+                mapped = "MMMM" if _SETTINGS.get().m_is_month_name else "mm"
             else:
                 mapped = _CH_DT_SPEC.get(fmt[i + 1])
             if mapped is None:
@@ -7105,17 +7117,6 @@ _FORMAT_TAIL_RE = re.compile(r"(?i)\bFORMAT\s+[A-Za-z][A-Za-z0-9]*\s*;?\s*$")
 #: the lookbehind excludes `system.settings` (a table, not the clause)
 _SETTINGS_TAIL_RE = re.compile(r"(?i)(?<![.\w])SETTINGS\s+[^;]*$")
 
-#: statement-scoped splitBy* max_substrings mode. Modern ClickHouse
-#: (since ~23.12, splitby_max_substrings_includes_remaining_string = 0
-#: by default) DISCARDS everything after the first n splits;
-#: = 1 restores the legacy remainder-in-last behavior. Set per
-#: statement from the SETTINGS tail (_check_semantic_settings) or by
-#: the client from the session SET shim's namespaced conf; reset when
-#: the OUTERMOST translate_ch_sql call returns (recursion-depth
-#: counter), so it can never leak across statements.
-_SPLITBY_STATE = {"includes_remaining": False}
-_TRANSLATE_DEPTH = [0]
-
 #: round-10 (VERDICT r9 task #5): the point-statistic fold contract.
 #: Collect-fold aggregates (rankCorr, LTTB, deltaSumTimestamp,
 #: maxIntersections, entropy, intervalLengthSum, the EMA aggregate
@@ -7128,21 +7129,13 @@ _TRANSLATE_DEPTH = [0]
 #: recipe past the limit. Default generous (10M rows per group ~ the
 #: memory CH itself would burn); SET-able per statement via
 #: `SETTINGS max_fold_group_rows = n` (engine extension, documented)
-#: or session-wide through the SET shim's namespaced conf.
-_FOLD_LIMIT_STATE = {"max_rows": 10_000_000}
-
-
-def set_max_fold_group_rows(n: int) -> None:
-    """Statement/session-scoped override for the point-statistic fold
-    group-size contract (engine extension max_fold_group_rows)."""
-    _FOLD_LIMIT_STATE["max_rows"] = max(int(n), 1)
-
-
+#: or session-wide through the SET shim's namespaced conf
+#: (DialectSettings.max_fold_group_rows).
 def _guard_fold(arr_expr: str, op: str) -> str:
     """Wrap a point-statistic fold's collected array with the
     group-size contract: raise_error naming the operator and the
     recipe instead of silently materializing an unbounded array."""
-    n = _FOLD_LIMIT_STATE["max_rows"]
+    n = _SETTINGS.get().max_fold_group_rows
     msg = (
         f"{op}: group exceeds max_fold_group_rows ({n}) — this is a "
         "per-group POINT STATISTIC holding one array per group; bound "
@@ -7155,23 +7148,17 @@ def _guard_fold(arr_expr: str, op: str) -> str:
     )
 
 
-def set_splitby_includes_remaining(flag: bool) -> None:
-    """Statement-scoped override for splitBy* remainder semantics
-    (ClickHouse setting splitby_max_substrings_includes_remaining_string)."""
-    _SPLITBY_STATE["includes_remaining"] = bool(flag)
-
-
 def _split_max_substrings(s: str, sep: str, n: str) -> str:
     """Emit the Spark expression for splitBy*(sep, s, max_substrings).
 
     Modern ClickHouse discards the remainder: splitByChar(',', 'a,b,,c', 2)
     = ['a','b'] — so split one extra piece, then slice it off. Spark's own
     positive split limit keeps the remainder in the last element, which is
-    CH's LEGACY mode (setting = 1), honored via _SPLITBY_STATE. n <= 0
-    means unlimited (Spark's limit 0 would drop trailing empties, so it
-    maps to -1).
+    CH's LEGACY mode (setting = 1), honored via
+    DialectSettings.splitby_includes_remaining. n <= 0 means unlimited
+    (Spark's limit 0 would drop trailing empties, so it maps to -1).
     """
-    if _SPLITBY_STATE["includes_remaining"]:
+    if _SETTINGS.get().splitby_includes_remaining:
         return f"split({s}, {sep}, IF(({n}) <= 0, -1, {n}))"
     lit = re.fullmatch(r"\s*(-?\d+)\s*", n)
     if lit:
@@ -7225,11 +7212,40 @@ _SEMANTIC_SETTINGS: dict[str, tuple[set, str]] = {
 }
 
 
-def _check_semantic_settings(clause: str) -> bool:
+#: the ClickHouse settings that change translation -> the
+#: DialectSettings field each one sets
+HONORED_SETTINGS = {
+    "splitby_max_substrings_includes_remaining_string":
+        "splitby_includes_remaining",
+    "formatdatetime_parsedatetime_m_is_month_name": "m_is_month_name",
+    "max_fold_group_rows": "max_fold_group_rows",
+}
+
+
+def honored_setting(name: str, value: str) -> dict:
+    """The DialectSettings override {field: value} for one honored
+    setting given as SET/SETTINGS text: a flag is on for 1/true, the
+    row limit is an integer (at least 1)."""
+    field = HONORED_SETTINGS[name]
+    value = value.strip().strip("'\"").lower()
+    if field != "max_fold_group_rows":
+        return {field: value in ("1", "true")}
+    try:
+        return {field: max(int(value), 1)}
+    except ValueError:
+        raise UntranslatableFunctionError(
+            f"{name} = {value}: needs an integer row limit"
+        ) from None
+
+
+def _check_semantic_settings(clause: str) -> tuple[dict, bool]:
     """`clause` is the text after the SETTINGS keyword; raise on any
     result-changing setting whose value differs from this engine's
-    behavior. Returns True if any setting was merely STRIPPED (so the
-    caller should warn) — honored settings don't trigger the warning."""
+    behavior. Returns the honored settings as DialectSettings field
+    overrides for THIS statement, and True if any setting was merely
+    STRIPPED (so the caller should warn) — honored settings don't
+    trigger the warning."""
+    overrides: dict = {}
     any_stripped = False
     for part in clause.split(","):
         if "=" not in part:
@@ -7237,27 +7253,8 @@ def _check_semantic_settings(clause: str) -> bool:
         k, v = part.split("=", 1)
         k = k.strip().lower()
         v = v.strip().strip("'\"").lower()
-        if k == "splitby_max_substrings_includes_remaining_string":
-            # honored, not stripped: flips splitBy* to the legacy
-            # remainder-in-last mode for THIS statement
-            _SPLITBY_STATE["includes_remaining"] = v in ("1", "true")
-            continue
-        if k == "formatdatetime_parsedatetime_m_is_month_name":
-            # honored (wave 35): %M = month name (modern default) vs
-            # the legacy minutes reading, for THIS statement
-            _FORMATDT_STATE["m_is_month_name"] = v in ("1", "true")
-            continue
-        if k == "max_fold_group_rows":
-            # honored (round-10 task #5, engine extension): the
-            # point-statistic fold group-size contract for THIS
-            # statement
-            try:
-                set_max_fold_group_rows(int(v))
-            except ValueError:
-                raise UntranslatableFunctionError(
-                    f"SETTINGS max_fold_group_rows = {v}: needs an "
-                    "integer row limit"
-                ) from None
+        if k in HONORED_SETTINGS:
+            overrides.update(honored_setting(k, v))
             continue
         known = _SEMANTIC_SETTINGS.get(k)
         if known and v not in known[0]:
@@ -7266,11 +7263,13 @@ def _check_semantic_settings(clause: str) -> bool:
                 f"execution: {known[1]}"
             )
         any_stripped = True
-    return any_stripped
+    return overrides, any_stripped
 
 
-def _strip_output_clauses(sql: str) -> str:
-    """Drop the ClickHouse output-side tail clauses:
+def _strip_output_clauses(sql: str) -> tuple[str, dict]:
+    """Drop the ClickHouse output-side tail clauses. Returns the
+    statement without them and the DialectSettings overrides of its
+    SETTINGS tail.
 
     - `FORMAT <name>` names a wire serialization; the engine returns
       DataFrames, so it carries no meaning here (the reference itself
@@ -7279,7 +7278,8 @@ def _strip_output_clauses(sql: str) -> str:
       change results; the API path for enforced ones is
       client.query_with_options / QueryLimits (settings.py maps CH
       names to Spark confs). Stripped with a warning so callers know
-      the hints did not silently apply.
+      the hints did not silently apply. HONORED_SETTINGS apply to
+      this statement instead; guarded ones raise on a diverging value.
 
     `ORDER BY ... WITH FILL` is refused instead: it ADDS rows — use
     operators/timeseries.fill_gaps (sequence + outer join
@@ -7306,17 +7306,20 @@ def _strip_output_clauses(sql: str) -> str:
     if m:
         sql = sql[: m.start()].rstrip()
     m = _find_clean(_SETTINGS_TAIL_RE, sql)
-    if m:
-        if _check_semantic_settings(sql[m.start() + len("SETTINGS"):]):
-            import warnings
+    if not m:
+        return sql, {}
+    overrides, stripped = _check_semantic_settings(
+        sql[m.start() + len("SETTINGS"):]
+    )
+    if stripped:
+        import warnings
 
-            warnings.warn(
-                "SETTINGS clause stripped; per-query execution settings "
-                "go through client.query_with_options / QueryLimits",
-                stacklevel=3,
-            )
-        sql = sql[: m.start()].rstrip()
-    return sql
+        warnings.warn(
+            "SETTINGS clause stripped; per-query execution settings "
+            "go through client.query_with_options / QueryLimits",
+            stacklevel=3,
+        )
+    return sql[: m.start()].rstrip(), overrides
 
 
 _ORDER_BY_KW_RE = re.compile(r"(?i)\bORDER\s+BY\s+")
@@ -8841,32 +8844,22 @@ def _rewrite_limit_with_ties(sql: str) -> str:
     )
 
 
-def translate_ch_sql(sql: str, allow_hash_substitution: bool = False) -> str:
-    """Entry point — see _translate_ch_sql_impl for the semantics.
-
-    Wraps the recursive translator with a depth counter so statement-
-    scoped dialect state (splitBy* remainder mode from a SETTINGS tail
-    or the session shim) resets exactly when the OUTERMOST call
-    returns and can't leak into the next statement.
-    """
-    _TRANSLATE_DEPTH[0] += 1
-    try:
-        return _translate_ch_sql_impl(sql, allow_hash_substitution)
-    finally:
-        _TRANSLATE_DEPTH[0] -= 1
-        if _TRANSLATE_DEPTH[0] == 0:
-            _SPLITBY_STATE["includes_remaining"] = False
-            _FORMATDT_STATE["m_is_month_name"] = True
-            _FOLD_LIMIT_STATE["max_rows"] = 10_000_000
-
-
-def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> str:
+def translate_ch_sql(
+    sql: str,
+    allow_hash_substitution: bool = False,
+    settings: DialectSettings | None = None,
+) -> str:
     """Rewrite known ClickHouse function calls in `sql` to Spark SQL.
 
     Raises :class:`UntranslatableFunctionError` on engine-specific hash
     functions (cityHash64/sipHash64/halfMD5/farmHash64) unless
     `allow_hash_substitution=True`, which substitutes xxhash64 with a
     warning — the VALUES differ from ClickHouse's.
+
+    `settings` carries the session's dialect settings (default:
+    ClickHouse's defaults). A statement's SETTINGS tail overrides them
+    for that statement only — a subquery's tail for that subquery only
+    — so the output depends on nothing but the arguments.
 
     Statement-level: `GROUP BY ... WITH TOTALS` rewrites to the
     equivalent GROUPING SETS form (totals row keys arrive as NULL, not
@@ -8877,39 +8870,66 @@ def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> s
     Bernoulli — same fraction, different rows each run; use
     operators/sampling for reproducible selection).
     """
-    sql = _strip_output_clauses(sql)
-    sql = _refuse_ch_only_clauses(sql)
-    sql = _rewrite_numeric_conditions(sql)
-    sql = _rewrite_scalar_with(sql)
-    sql = _rewrite_qualify(sql)
-    sql = _rewrite_top(sql)
-    sql = _rewrite_bare_setops(sql)
-    sql = _rewrite_colon_casts(sql)
-    sql = _rewrite_array_join(sql)
-    # PREWHERE folds into WHERE BEFORE alias inlining so select-list
-    # aliases resolve inside it too (CH allows them there)
-    sql = _rewrite_prewhere(sql)
-    sql = _rewrite_view_tvf(sql)
-    sql = _rewrite_numbers_tvf(sql)
-    sql = _rewrite_values_tvf(sql)
-    sql = _rewrite_empty_over(sql)
-    sql = _rewrite_exp_decay(sql)
-    sql = _rewrite_in_frame(sql)
-    sql = _rewrite_select_alias_refs(sql)
-    sql = _rewrite_with_totals(sql)
-    sql = _rewrite_distinct_on(sql)
-    sql = _rewrite_limit_by(sql)
-    sql = _rewrite_limit_with_ties(sql)
-    sql = _rewrite_limit_offset(sql)
-    sql = _rewrite_collate(sql)
-    sql = _rewrite_order_nulls(sql)
-    sql = _rewrite_any_all(sql)
-    sql = _rewrite_group_by_empty(sql)
-    sql = _rewrite_in_bracket(sql)
-    sql = _rewrite_tuple_in(sql)
-    sql = _rewrite_star_modifiers(sql)
-    sql = _rewrite_tuple_index(sql)
-    sql = _rewrite_sample(sql)
+    return _statement(
+        sql, allow_hash_substitution, settings or DialectSettings()
+    )
+
+
+#: the whole-statement passes, in order. PREWHERE folds into WHERE
+#: BEFORE alias inlining so select-list aliases resolve inside it too
+#: (CH allows them there).
+_STATEMENT_PASSES = (
+    _refuse_ch_only_clauses, _rewrite_numeric_conditions,
+    _rewrite_scalar_with, _rewrite_qualify, _rewrite_top,
+    _rewrite_bare_setops, _rewrite_colon_casts, _rewrite_array_join,
+    _rewrite_prewhere, _rewrite_view_tvf, _rewrite_numbers_tvf,
+    _rewrite_values_tvf, _rewrite_empty_over, _rewrite_exp_decay,
+    _rewrite_in_frame, _rewrite_select_alias_refs, _rewrite_with_totals,
+    _rewrite_distinct_on, _rewrite_limit_by, _rewrite_limit_with_ties,
+    _rewrite_limit_offset, _rewrite_collate, _rewrite_order_nulls,
+    _rewrite_any_all, _rewrite_group_by_empty, _rewrite_in_bracket,
+    _rewrite_tuple_in, _rewrite_star_modifiers, _rewrite_tuple_index,
+    _rewrite_sample,
+)
+
+#: a parenthesised group or argument list that is itself a query
+_STATEMENT_HEAD_RE = re.compile(r"(?i)[\s(]*(?:SELECT|WITH)\b")
+
+
+def _group(sql: str, allow_hash_substitution: bool) -> str:
+    """Translate the text inside a parenthesised group or a call's
+    argument list: a subquery is a statement of its own (its SETTINGS
+    tail, its statement passes); anything else is only scanned."""
+    if _STATEMENT_HEAD_RE.match(sql):
+        return _statement(sql, allow_hash_substitution, _SETTINGS.get())
+    return _scan(sql, allow_hash_substitution)
+
+
+def _statement(
+    sql: str, allow_hash_substitution: bool, base: DialectSettings
+) -> str:
+    """One statement: its SETTINGS tail scopes `base` overrides to it,
+    then the whole-statement passes run once, then the token scan."""
+    sql, overrides = _strip_output_clauses(sql)
+    token = _SETTINGS.set(replace(base, **overrides))
+    try:
+        for rewrite in _STATEMENT_PASSES:
+            sql = rewrite(sql)
+        sql = _scan(sql, allow_hash_substitution)
+    finally:
+        _SETTINGS.reset(token)
+    # restore Spark-native range() TVFs planted by the numbers() rewrite
+    # (the scan would have mistaken `range(` for CH's array range())
+    return _fix_named_struct_positional(
+        sql.replace("__cas_range__(", "range(")
+    )
+
+
+def _scan(sql: str, allow_hash_substitution: bool) -> str:
+    """The token scan: rewrite function calls, array literals and
+    subscripts, recursing into groups (_group) without re-running the
+    statement passes."""
+
     def subscripts(expr: str, k: int, allow_space: bool = True) -> tuple[str, int]:
         # CH postfix indexing `expr[i]` is 1-based (maps: by key) —
         # exactly Spark's element_at; Spark's own `[ ]` would be 0-based.
@@ -8927,7 +8947,7 @@ def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> s
             close_b = _find_matching(sql, j2, "[", "]")
             if close_b == -1:
                 break
-            idx = translate_ch_sql(sql[j2 + 1 : close_b], allow_hash_substitution)
+            idx = _scan(sql[j2 + 1 : close_b], allow_hash_substitution)
             expr = f"element_at({expr}, {idx})"
             k = close_b + 1
         return expr, k
@@ -8957,9 +8977,7 @@ def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> s
             # to the array-literal branch below
             close_p = _find_matching_paren(sql, i)
             if close_p != -1:
-                inner = translate_ch_sql(
-                    sql[i + 1 : close_p], allow_hash_substitution
-                )
+                inner = _group(sql[i + 1 : close_p], allow_hash_substitution)
                 expr, i = subscripts(
                     f"({inner})", close_p + 1, allow_space=False
                 )
@@ -8971,9 +8989,7 @@ def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> s
             # below, so they never reach this branch)
             close_b = _find_matching(sql, i, "[", "]")
             if close_b != -1:
-                inner = translate_ch_sql(
-                    sql[i + 1 : close_b], allow_hash_substitution
-                )
+                inner = _scan(sql[i + 1 : close_b], allow_hash_substitution)
                 expr = f"array({', '.join(_split_top_args(inner))})"
                 expr, i = subscripts(expr, close_b + 1)
                 out.append(expr)
@@ -8991,7 +9007,7 @@ def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> s
             if close == -1:
                 out.append(sql[i:])
                 break
-            inner = translate_ch_sql(sql[j + 1 : close], allow_hash_substitution)
+            inner = _group(sql[j + 1 : close], allow_hash_substitution)
             args = _split_top_args(inner)
             # parametric form: name(params)(args) — an If suffix on a
             # parametric aggregate (`quantileIf(0.5)(x, cond)`) folds
@@ -9024,7 +9040,7 @@ def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> s
             if _par_name in _PARAMETRIC and k < n and sql[k] == "(":
                 close2 = _find_matching_paren(sql, k)
                 if close2 != -1:
-                    inner2 = translate_ch_sql(
+                    inner2 = _group(
                         sql[k + 1 : close2], allow_hash_substitution
                     )
                     _call_args = _split_top_args(inner2)
@@ -9076,10 +9092,7 @@ def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> s
         else:
             expr, i = subscripts(name, j, allow_space=False)
             out.append(expr)
-    # restore Spark-native range() TVFs planted by the numbers() rewrite
-    # (the walk would have mistaken `range(` for CH's array range())
-    final = "".join(out).replace("__cas_range__(", "range(")
-    return _fix_named_struct_positional(final)
+    return "".join(out)
 
 
 _NS_COL_RE = re.compile(r"\)\.col(\d+)\b")

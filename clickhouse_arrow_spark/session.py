@@ -56,7 +56,16 @@ DEFAULT_CONFS: dict[str, str] = {
 
 
 def _default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """The local core count: $SPARK_GRAFT_CPUS when set (empty counts
+    as unset), else the machine's."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    if not raw:
+        return os.cpu_count() or 8
+    if not raw.isdigit() or int(raw) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return int(raw)
 
 
 def get_spark(

@@ -67,17 +67,18 @@ DISPOSITIONS: dict[str, tuple[str, str]] = {
         "(ddl.py drop/undrop)"),
     "splitby_max_substrings_includes_remaining_string": (
         "honored", "flips splitBy* max_substrings to the legacy "
-        "remainder-in-last mode (dialect._SPLITBY_STATE), statement- "
-        "and session-scoped"),
+        "remainder-in-last mode (dialect.DialectSettings."
+        "splitby_includes_remaining), statement- and session-scoped"),
     "formatdatetime_parsedatetime_m_is_month_name": (
         "honored", "%M = full month name (modern CH 23.4+ default) vs "
-        "the legacy minutes reading (dialect._FORMATDT_STATE), "
-        "statement- and session-scoped (wave 35)"),
+        "the legacy minutes reading (dialect.DialectSettings."
+        "m_is_month_name), statement- and session-scoped (wave 35)"),
     "max_fold_group_rows": (
         "honored", "ENGINE EXTENSION (round-10): point-statistic "
         "collect-fold aggregates raise past this per-group row limit "
-        "(dialect._FOLD_LIMIT_STATE, default 10M), statement- and "
-        "session-scoped — the enforced form of SCALE.md's fold fence"),
+        "(dialect.DialectSettings.max_fold_group_rows, default 10M), "
+        "statement- and session-scoped — the enforced form of "
+        "SCALE.md's fold fence"),
     # ---- guarded result-changing settings (dialect) -------------------
     "join_use_nulls": (
         "guarded", "engine behavior = 1 (ANSI NULL non-matches); "

@@ -2368,3 +2368,82 @@ def test_array_join_over_map_column(spark):
     assert [(r["id"], r["key"], r["value"]) for r in rows] == [
         (1, "cpu", 0.5), (1, "mem", 0.8), (2, "io", 0.1)
     ]
+
+
+# ---- statement-scoped dialect settings -----------------------------------
+
+_SPLIT_PLAIN = "SELECT splitByChar(',', s, 2) FROM t"
+_SPLIT_LEGACY_TAIL = (
+    " SETTINGS splitby_max_substrings_includes_remaining_string = 1"
+)
+_SPLIT_MODERN = "slice(split(s, ',', 3), 1, 2)"
+_SPLIT_LEGACY = "split(s, ',', IF((2) <= 0, -1, 2))"
+
+
+def test_settings_tail_does_not_leak_across_threads():
+    """One thread's SETTINGS tail must not change another thread's
+    translation of a plain statement."""
+    import threading
+
+    stop = threading.Event()
+
+    def legacy_loop():
+        while not stop.is_set():
+            translate_ch_sql(_SPLIT_PLAIN + _SPLIT_LEGACY_TAIL)
+
+    other = threading.Thread(target=legacy_loop)
+    other.start()
+    try:
+        wrong = sum(
+            translate_ch_sql(_SPLIT_PLAIN) != f"SELECT {_SPLIT_MODERN} FROM t"
+            for _ in range(2000)
+        )
+    finally:
+        stop.set()
+        other.join()
+    assert wrong == 0
+
+
+def test_nested_calls_run_statement_passes_once(monkeypatch):
+    """Function arguments are scanned, not re-translated as statements:
+    a depth-16 nesting runs the whole-statement passes exactly once."""
+    from clickhouse_arrow_spark import dialect
+
+    calls = []
+    strip = dialect._strip_output_clauses
+    monkeypatch.setattr(
+        dialect, "_strip_output_clauses",
+        lambda sql: calls.append(sql) or strip(sql),
+    )
+    expr = "x"
+    for _ in range(16):
+        expr = f"abs({expr})"
+    translate_ch_sql(f"SELECT {expr} FROM t")
+    assert len(calls) == 1
+
+
+def test_subquery_settings_tail_scoped_to_subquery():
+    """A subquery's own SETTINGS tail applies inside that subquery and
+    not to the outer statement's expressions after it."""
+    out = translate_ch_sql(
+        "SELECT (SELECT splitByChar(',', s, 2) FROM t"
+        f"{_SPLIT_LEGACY_TAIL}) AS a, splitByChar(',', s, 2) AS b FROM u"
+    )
+    assert out == (
+        f"SELECT (SELECT {_SPLIT_LEGACY} FROM t) AS a, "
+        f"{_SPLIT_MODERN} AS b FROM u"
+    )
+
+
+def test_settings_argument_is_overridden_by_statement_tail():
+    from clickhouse_arrow_spark.dialect import DialectSettings
+
+    legacy = DialectSettings(splitby_includes_remaining=True)
+    assert translate_ch_sql(_SPLIT_PLAIN, settings=legacy) == (
+        f"SELECT {_SPLIT_LEGACY} FROM t"
+    )
+    assert translate_ch_sql(
+        _SPLIT_PLAIN
+        + " SETTINGS splitby_max_substrings_includes_remaining_string = 0",
+        settings=legacy,
+    ) == f"SELECT {_SPLIT_MODERN} FROM t"

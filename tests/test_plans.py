@@ -9,6 +9,8 @@ and no Python UDFs in hot relational paths.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from clickhouse_arrow_spark.queries import load_all
@@ -117,15 +119,47 @@ def test_ann_topk_has_no_per_query_window(spark, tables):
     # parallelism follows the corpus partitioning and the rank-limit
     # pushes below the exchange (WindowGroupLimit) — so the pin is:
     # every window partition spec must include the _pid column.
-    import re
-
     for name in ("ann_brute_force_topk", "vector_ivf_topk"):
         plan = plan_of(spark, name)
-        for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
-            assert "_pid" in spec, (
+        specs = _window_specs(plan)
+        assert specs, f"{name}: no window spec in the plan"
+        for spec in specs:
+            assert any(col.startswith("_pid#") for col in _partition_cols(spec)), (
                 f"{name} has a window partitioned without the "
                 f"partition-id salt (parallelism collapse): {spec}"
             )
+
+
+def _window_specs(plan: str) -> list[str]:
+    """The balanced argument text of every windowspecdefinition(...)."""
+    specs = []
+    start = plan.find("windowspecdefinition(")
+    while start != -1:
+        i = j = start + len("windowspecdefinition(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        specs.append(plan[i : j - 1])
+        start = plan.find("windowspecdefinition(", j)
+    return specs
+
+
+def _partition_cols(spec: str) -> list[str]:
+    """The leading top-level arguments of a window spec, up to its first
+    sort key (ASC/DESC) or frame."""
+    args, depth, last = [], 0, 0
+    for k, c in enumerate(spec + ","):
+        depth += {"(": 1, ")": -1}.get(c, 0)
+        if c == "," and depth == 0:
+            args.append(spec[last:k].strip())
+            last = k + 1
+    cols = []
+    for arg in args:
+        if re.search(r" (ASC|DESC)\b", arg) or arg.startswith("specifiedwindowframe"):
+            break
+        cols.append(arg)
+    return cols
 
 
 def test_ivf_assign_is_single_projection(spark, tables):
