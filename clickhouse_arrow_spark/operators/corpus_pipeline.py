@@ -38,6 +38,7 @@ corpus.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -123,24 +124,13 @@ def synthesize_corpus(docs: DataFrame) -> DataFrame:
 
 
 def llm_corpus_pipeline(
-    spark: SparkSession, docs: DataFrame, barrier: str = "localCheckpoint"
+    spark: SparkSession, docs: DataFrame
 ) -> list[tuple[str, DataFrame]]:
     """Run the full composed pipeline; returns the ordered list of
-    (stage_name, frame) with every frame persisted (each is read twice:
-    by the next tier and by the summary scan). Stage frames carry
+    (stage_name, frame) with every frame materialized (each is read
+    twice: by the next tier and by the summary scan). Stage frames carry
     (doc_id, text, lang, source) until the DSIR cut, after which the
-    flow is k-bounded.
-
-    ``barrier`` selects the per-tier materialization (round-13,
-    VERDICT r12 #5 measurement knob): "localCheckpoint" (default)
-    truncates lineage so no tier's analysis re-walks its
-    predecessors'; "persist" keeps lineage (persist + count) — faster
-    per-tier at small SF but re-analysis of the composed lineage grows
-    multiplicatively (the round-11 build OOM'd the driver at 1 GiB
-    during tier-6 analysis, which is why localCheckpoint is the
-    default; scripts/r13_e2e_probe.py records the measured trade)."""
-    from pyspark import StorageLevel
-
+    flow is k-bounded."""
     from clickhouse_arrow_spark.operators import bloom, dedup, dsir
     from clickhouse_arrow_spark.operators import text as text_ops
     from clickhouse_arrow_spark.operators.dedup import _shingles
@@ -148,35 +138,15 @@ def llm_corpus_pipeline(
         select_token_budget,
     )
 
-    import os as _os
-    import time as _time
-
-    _timing = _os.environ.get("CAS_E2E_TIMING") == "1"
-    _t_last = [_time.perf_counter()]
-
     def keep(df: DataFrame) -> DataFrame:
-        # localCheckpoint, not bare persist: each tier's ANALYZED plan
-        # embeds the full lineage of every tier before it, so a 10-tier
-        # composition grows the driver-side plan multiplicatively (the
-        # round-11 build hit a driver OOM at 1 GiB during plan analysis
-        # of tier 6; the round-13 probe scripts/r13_e2e_probe.py showed
-        # the persist variant dying in plan-string rendering at
-        # 2^31 chars — java.lang.OutOfMemoryError: UTF16 String size —
-        # before even reaching execution). Checkpointing materializes
-        # the stage once (the summary scan needs it anyway) and
-        # restarts the lineage — the same pattern duplicate_survivors
-        # uses per CC round.
-        if barrier == "persist":
-            out = df.persist(StorageLevel.MEMORY_AND_DISK)
-            out.count()
-            return out
-        out = df.localCheckpoint(eager=True)
-        if _timing:
-            now = _time.perf_counter()
-            print(f"# e2e tier barrier: {now - _t_last[0]:.2f}s",
-                  flush=True)
-            _t_last[0] = now
-        return out
+        # localCheckpoint, not persist: each tier's analyzed plan would
+        # embed the full lineage of every tier before it, and with
+        # persist the composed plan grew until rendering it failed with
+        # java.lang.OutOfMemoryError: UTF16 String size, before
+        # execution. Checkpointing materializes the stage once (the
+        # summary scan needs it anyway) and restarts the lineage, the
+        # same pattern duplicate_survivors uses per CC round.
+        return df.localCheckpoint(eager=True)
 
     stages: list[tuple[str, DataFrame]] = []
     s0 = keep(synthesize_corpus(docs))

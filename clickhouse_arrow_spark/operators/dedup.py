@@ -32,22 +32,27 @@ def _normalize(text_col) -> "F.Column":
     return F.regexp_replace(F.lower(F.trim(text_col)), r"\s+", " ")
 
 
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Hash-repartition to full parallelism before compute-heavy
-    projections — ONLY when the scan has fewer splits than the session
-    parallelism. Small document corpora often arrive as one parquet
-    file -> one partition; without this, a 32-core executor runs one
-    task. Round-13 (guide §2.4): the repartition used to be
-    unconditional, i.e. a full exchange of the corpus TEXT on every
-    signature/fingerprint build even when the input already had
-    thousands of splits — at 100 TB that is the single largest
-    avoidable shuffle in the dedup tier. Now it is a no-op at real
-    scale (the similarity.py round-12 spread precedent); keyed so
-    downstream per-doc aggregation stays co-located when it does run."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
+def _spread(df: DataFrame, key: str | None = None) -> DataFrame:
+    """Repartition to the session parallelism P before compute-heavy
+    work, ONLY when `df` has fewer than P splits; otherwise return `df`
+    itself. A small corpus often arrives as one parquet file, i.e. one
+    partition, which would run every per-row fold on one core; at real
+    scale the scan already has more splits and this is a no-op, so the
+    corpus is never shuffled just to spread it.
+
+    With `key` the repartition hashes on it, so per-key work downstream
+    stays co-located; without, it is round-robin.
+
+    The split count is `df.rdd.getNumPartitions()`. On a frame read
+    straight from a scan it runs no job; if an exchange sits below
+    `df`, the call runs that shuffle as an eager job during plan build.
+    (The cheaper `queryExecution().sparkPlan()` count is taken before
+    exchanges are planned, so it under-reports and would change the
+    decision.)"""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= p:
         return df
-    return df.repartition(sc.defaultParallelism, key)
+    return df.repartition(p) if key is None else df.repartition(p, key)
 
 
 # ---------------------------------------------------------------------------

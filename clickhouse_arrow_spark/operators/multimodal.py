@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from clickhouse_arrow_spark.operators.dedup import _spread, duplicate_survivors
+
 MEDIA_META = T.StructType(
     [
         T.StructField("mime", T.StringType(), False),
@@ -233,8 +235,6 @@ def decode_features(df: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
     no driver involvement. Output schema is fixed (`FEATURE_SCHEMA`) so
     downstream joins/ANN are plannable before decode runs.
     """
-    from clickhouse_arrow_spark.operators.dedup import _spread
-
     df = _spread(df, "doc_id")  # one Python worker per core, not per file
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -313,8 +313,6 @@ def decode_ppm_stats(df: DataFrame) -> DataFrame:
     :func:`decode_ppm` inside `mapInPandas` and emit exact integer
     per-channel pixel sums — values an oracle can pin bit-for-bit.
     Same partitioning/batching posture as :func:`decode_features`."""
-    from clickhouse_arrow_spark.operators.dedup import _spread
-
     df = _spread(df, "doc_id")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -620,8 +618,6 @@ def decode_media_stats(df: DataFrame) -> DataFrame:
     """PNG + WAV real-codec decode plan: zlib inflate + filter
     reconstruction and RIFF PCM16 parse inside one mapInPandas pass,
     emitting exact integer stats the oracle pins bit-for-bit."""
-    from clickhouse_arrow_spark.operators.dedup import _spread
-
     df = _spread(df, "doc_id")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -689,8 +685,6 @@ def image_dhash(df: DataFrame) -> DataFrame:
     across the serialization boundary. Non-image mimes (and formats
     whose real codec is absent) yield NULL dhash rather than failing
     the batch — dedup over a mixed-modality corpus skips them."""
-    from clickhouse_arrow_spark.operators.dedup import _spread
-
     df = _spread(df, "doc_id")
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -785,8 +779,6 @@ def dhash_survivors(
 
     Rows whose payload could not hash (NULL dhash) always survive.
     """
-    from clickhouse_arrow_spark.operators.dedup import duplicate_survivors
-
     h = hashes.filter(F.col("dhash").isNotNull())
     unhashed = hashes.filter(F.col("dhash").isNull()).select(id_col)
     reps = h.groupBy("dhash").agg(F.min(id_col).alias("rep"))
@@ -1196,8 +1188,6 @@ def video_survivors(
     over `video_neardup` output exactly. Undecodable videos (no
     frames) always survive.
     """
-    from clickhouse_arrow_spark.operators.dedup import duplicate_survivors
-
     hashes = _video_frame_hashes(
         videos, every_n, id_col=id_col, payload_col=payload_col
     )

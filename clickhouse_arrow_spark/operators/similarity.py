@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_arrow_spark.operators.dedup import _spread
+
 
 def _dot(a, b):
     # cast BEFORE multiplying: float32 products differ from double products
@@ -145,14 +147,7 @@ def brute_force_topk(
             query_id, query_vec, _norm(F.col(query_vec)).alias("_qn")
         )
     )
-    # Scale-adaptive spread (round-12): a small corpus often arrives as
-    # ONE parquet split, serializing every per-pair cosine fold onto a
-    # single core. Repartition only when the scan has fewer splits than
-    # the session's parallelism — at real scale the input already has
-    # more and this is a no-op (no constant tuned to local mode).
-    sc = corpus.sparkSession.sparkContext
-    if corpus.rdd.getNumPartitions() < sc.defaultParallelism:
-        corpus = corpus.repartition(sc.defaultParallelism)
+    corpus = _spread(corpus)
     c = corpus.select(
         corpus_id, corpus_vec, _norm(F.col(corpus_vec)).alias("_cn")
     )
@@ -545,12 +540,7 @@ def embedding_near_duplicates(
     threshold ~0.95 near-dups almost always share the nearest centroid).
     """
     cents = deterministic_centroids(corpus, nlist, corpus_id, corpus_vec)
-    # scale-adaptive spread (round-12, same rationale as
-    # brute_force_topk): single-split corpora otherwise run every
-    # within-bucket cosine fold on one core; no-op at real scale
-    sc = corpus.sparkSession.sparkContext
-    if corpus.rdd.getNumPartitions() < sc.defaultParallelism:
-        corpus = corpus.repartition(sc.defaultParallelism, corpus_id)
+    corpus = _spread(corpus, corpus_id)
     b = ivf_assign(corpus, cents, corpus_id, corpus_vec)
     # per-side norms computed below the pair join — one fold per ROW
     # instead of two folds per candidate PAIR

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_arrow_spark.operators.dedup import _spread
+
 #: tiny per-language stopword inventories for the n-gram/stopword
 #: language-ID heuristic. Deterministic, order = tie-break priority.
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -113,8 +115,6 @@ def rolling_fingerprint(
     Engine-agnostic (same value from any engine that folds left-to-right
     — the DuckDB oracle uses list_reduce), unlike xxhash/md5-of-engine
     which would pin us to one implementation."""
-    from clickhouse_arrow_spark.operators.dedup import _spread
-
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     codes = F.transform(F.split(norm, ""), lambda c: F.ascii(c).cast("long"))
     fp = F.aggregate(
@@ -177,8 +177,6 @@ def language_fingerprint(
 ) -> DataFrame:
     """Language ID + rolling-hash fingerprint in one pass (the merged
     plan of :func:`language_id` and :func:`rolling_fingerprint`)."""
-    from clickhouse_arrow_spark.operators.dedup import _spread
-
     t = F.lower(F.col(text_col))
     scores = {
         lang: F.size(
@@ -531,19 +529,13 @@ def fuzzy_edit_distance_pairs(
     # no pair matches twice), the DP runs only on band-neighborhood
     # candidates. The exact |Δlen| filter below is unchanged, so the
     # pair set is identical. 31.9 s -> see OPTIMIZATION_r12.md.
-    # Scale-adaptive spread (round-12): a single-file corpus scans as
-    # ONE split, so the broadcast band-join's probe side — and every
-    # Levenshtein DP — ran on one core. No-op when the scan already has
-    # >= session parallelism splits (i.e. at real scale).
     if length_band < 1:
         # floor(len/0) yields NULL band keys (non-ANSI division), which
         # would silently drop EVERY pair; the pre-band formulation
         # degraded gracefully to exact-length matching (round-13,
         # ADVICE r12)
         raise ValueError(f"length_band must be >= 1, got {length_band}")
-    sc = df.sparkSession.sparkContext
-    if base.rdd.getNumPartitions() < sc.defaultParallelism:
-        base = base.repartition(sc.defaultParallelism, id_col)
+    base = _spread(base, id_col)
     bnd = F.floor(F.col("_nlen") / F.lit(length_band))
     a = base.select(
         F.col(id_col).alias("a_id"), "_grp",

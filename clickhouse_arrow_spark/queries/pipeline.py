@@ -5197,8 +5197,8 @@ def q_util_sweep_wave22(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(5400.0 AS DOUBLE) AS ptd,
            CAST(0.25 AS DOUBLE) AS ptd_ms
     """,
-    doc="Round-8 probe-sweep waves 23+24 (execution probe over "
-    "scripts/probe_wave23.py; exact literal oracle): the FLIPPED "
+    doc="Round-8 probe-sweep waves 23+24 (execution probe pinned by "
+    "tests/test_sweep_wave23.py; exact literal oracle): the FLIPPED "
     "2-arg trim fix (Spark's trim(trimStr, str) vs CH's (str, chars) "
     "— silently returned '' before), arrayLastIndex, divideDecimal "
     "with explicit result scale, arrayAUC (Mann-Whitney average "
@@ -5247,8 +5247,8 @@ def q_util_sweep_wave23(spark: SparkSession, sf_dir: str) -> DataFrame:
            '2 hours, 8 minutes and 10 seconds' AS frtd,
            CAST(1 AS BIGINT) AS acn
     """,
-    doc="Round-8 probe-sweep wave 26 (execution probe over "
-    "scripts/probe_wave26.py; exact literal oracle): string-"
+    doc="Round-8 probe-sweep wave 26 (execution probe pinned by "
+    "tests/test_sweep_wave26.py; exact literal oracle): string-"
     "similarity graduation (jaro/jaroWinkler/true Damerau-"
     "Levenshtein through the shared text_distance kernels), jump "
     "consistent hash (Lamping-Veach), 2-D Hilbert + n-ary Morton "
@@ -5333,8 +5333,8 @@ def q_util_sql_udf_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(11 AS BIGINT) AS dp,
            CAST(5 AS BIGINT) AS cd
     """,
-    doc="Round-8 probe-sweep wave 27 (execution probe over "
-    "scripts/probe_wave27.py; exact literal oracle): MySQL-order "
+    doc="Round-8 probe-sweep wave 27 (execution probe pinned by "
+    "tests/test_sweep_wave27.py; exact literal oracle): MySQL-order "
     "locate, 3-arg position with a start offset (the probe caught "
     "the silently ignored third argument), L2Norm + L2Normalize, "
     "bitmapSubsetInRange, printf, tokens, formatDateTime %e "
@@ -5427,8 +5427,8 @@ def q_agg_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
            '2024-07-01' AS hopst,
            '1,2,3,0,0' AS resized
     """,
-    doc="Round-8 probe-sweep wave 30 (execution probe over "
-    "scripts/probe_wave30.py; exact literal oracle): banker's "
+    doc="Round-8 probe-sweep wave 30 (execution probe pinned by "
+    "tests/test_sweep_wave30.py; exact literal oracle): banker's "
     "rounding on floats (round(2.5) = 2), integer-cast WRAPAROUND "
     "mod 2^width (toUInt8(300) = 44, toInt8(128) = -128), "
     "greatest/least NULL propagation, bit shifts past the width "
@@ -5743,8 +5743,8 @@ def q_core_remote_multishard(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS pentagon0,
            '1:10|2:40|5:25|6:5' AS lttb4
     """,
-    doc="Round-9 probe-sweep wave 33 (scripts/probe_wave33.py; exact "
-    "literal oracle): rankCorr as a self-contained Spearman-with-"
+    doc="Round-9 probe-sweep wave 33 (pinned by tests/test_sweep_wave33.py; "
+    "exact literal oracle): rankCorr as a self-contained Spearman-with-"
     "average-ranks aggregate (collect-once via the transform-binding "
     "trick, O(n^2) rank fold — entropy() precedent), the -Resample "
     "combinator over count/sum/min/max/avg (bucketed array folds, "
@@ -5803,8 +5803,8 @@ def q_util_sweep_wave33(spark: SparkSession, sf_dir: str) -> DataFrame:
            '2299-12-31|1900-01-01|2024-02-29' AS date32_sat,
            TRUE AS uniq17_ok
     """,
-    doc="Round-10 probe-sweep wave 35 (scripts/probe_wave35.py; exact "
-    "literal oracle): windowFunnel reworked to CH's exact per-level "
+    doc="Round-10 probe-sweep wave 35 (pinned by tests/test_sweep_wave35.py; "
+    "exact literal oracle): windowFunnel reworked to CH's exact per-level "
     "algorithm (AggregateFunctionWindowFunnel.h — cond-1 re-anchoring, "
     "strict_order breaking only on untracked rows, strict_dedup "
     "mid-chain stop returning the repeated level, last-level early "
@@ -6268,8 +6268,8 @@ def q_pipe_e2e_llm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
            'A240|R163|T522|H555' AS soundex_codes,
            '2024-03-01|2024-07-01|Date|DateTime' AS tostartof_dates
     """,
-    doc="Round-11 probe-sweep wave 37 (scripts/probe_wave37.py; exact "
-    "literal oracle): ngramSearch family (multiset needle-gram "
+    doc="Round-11 probe-sweep wave 37 (pinned by tests/test_sweep_wave37.py; "
+    "exact literal oracle): ngramSearch family (multiset needle-gram "
     "containment — ('Hello World','World Hello') = 4 common of 8 "
     "needle grams = 0.5, hand-derived from the CH docs formula), "
     "ngramDistance case/UTF8 variants, mapPartialSort / "
@@ -6326,8 +6326,8 @@ def q_util_sweep_wave37(spark: SparkSession, sf_dir: str) -> DataFrame:
            '4|2|0.918296' AS byte_stats,
            '192.168.1.xxx|2|3|ab' AS variants
     """,
-    doc="Round-12 probe-sweep wave 39 (scripts/probe_wave39.py; exact "
-    "literal oracle): width_bucket PostgreSQL edge grid (hand values "
+    doc="Round-12 probe-sweep wave 39 (pinned by tests/test_sweep_wave39.py; "
+    "exact literal oracle): width_bucket PostgreSQL edge grid (hand values "
     "incl. below-min -> 0 and max-exclusive -> n+1), the base64URL "
     "family (RFC 4648 §5 alphabet, unpadded like CH, try-form -> ''), "
     "overlay/overlayUTF8 (SQL-standard passthrough confirmed), "

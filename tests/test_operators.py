@@ -16,6 +16,7 @@ from clickhouse_arrow_spark.operators import (
     minhash_candidate_pairs,
 )
 from clickhouse_arrow_spark.operators.dedup import (
+    _spread,
     minhash_signatures,
     simhash_fingerprints,
     simhash_near_pairs,
@@ -1351,6 +1352,35 @@ def test_first_fit_pack_id_stride_overflow_raises(spark):
         first_fit(df, budget=100, n_buckets=2, _stride=4).collect()
     # comfortably under the stride: same input packs fine
     assert len(first_fit(df, budget=100, n_buckets=2, _stride=64).collect()) == 40
+
+
+def test_spread_repartitions_only_below_parallelism(spark):
+    import re
+
+    sc = spark.sparkContext
+    p = sc.defaultParallelism
+    if p == 1:
+        pytest.skip("one core: every frame already has enough splits")
+    one_split = spark.range(0, 64, numPartitions=1)
+    full = spark.range(0, 64, numPartitions=p)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    group = "test-spread-guard"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        keyed = _spread(one_split, "id")
+        round_robin = _spread(one_split)
+        unchanged = _spread(full, "id")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert re.search(rf"hashpartitioning\(id#\d+L?, {p}\)", plan(keyed))
+    assert f"RoundRobinPartitioning({p})" in plan(round_robin)
+    assert unchanged is full
 
 
 def test_lsh_signature_persist_spills_to_disk(spark):

@@ -1,5 +1,4 @@
-"""Probe-sweep wave 23 (execution probe over scripts/probe_wave23.py
-findings): the flipped-trim fix, arrayLastIndex, decimal math with
+"""Probe-sweep wave 23 findings, pinned here: the flipped-trim fix, arrayLastIndex, decimal math with
 explicit scale, and regression pins for the probed-green idioms most
 likely to drift."""
 

@@ -1,5 +1,4 @@
-"""Probe-sweep wave 26 (execution probe over scripts/probe_wave26.py
-findings): string-similarity graduation (jaro / jaroWinkler / true
+"""Probe-sweep wave 26 findings, pinned here: string-similarity graduation (jaro / jaroWinkler / true
 Damerau-Levenshtein via the shared text_distance kernels), space-
 filling-curve + geohash codecs, jump consistent hash, exact erf/erfc,
 bin() type-width padding, accurateCast range guards, n-ary

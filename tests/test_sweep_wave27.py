@@ -1,5 +1,4 @@
-"""Probe-sweep wave 27 (execution probe over scripts/probe_wave27.py
-findings): 3-arg position start offset, %e space-padded day in
+"""Probe-sweep wave 27 findings, pinned here: 3-arg position start offset, %e space-padded day in
 formatDateTime, L1/L2/Linf normalize, bitmap subset functions, and
 the median* accuracy-tier aliases."""
 

@@ -4,7 +4,8 @@ boundary crossings, negative-length left/right, negative-step range,
 splitBy* max_substrings, trunc alias, hasTokenOrNull, hop windows,
 variantElement.
 
-Probe: scripts/probe_wave30.py (20 silent mismatches + 9 ERRs found).
+The wave-30 probe found 20 silent mismatches + 9 ERRs; every fix is
+pinned here, and test_wave31_value_pins pins the wave-31 probe.
 Reference behavior: ClickHouse SQL semantics as exercised by
 clickhouse-arrow's dialect passthrough (queries go verbatim to the
 server — src/query/mod.rs); every case here pins the CH value.
@@ -233,7 +234,7 @@ def test_hex_whole_byte_padding(client):
 
 def test_wave31_value_pins(client):
     # exact values for families present since early waves but first
-    # value-probed in wave 31 (scripts/probe_wave31.py, 53 idioms)
+    # value-probed in wave 31 (53 idioms)
     r = one(client,
             "SELECT netloc('https://u:p@example.com:8080/a') AS nl, "
             "formatReadableSize(123456789) AS frs, "

@@ -1,4 +1,4 @@
-"""Wave-32 probe fixes (scripts/probe_wave32.py): any()/anyLast()
+"""Wave-32 probe fixes: any()/anyLast()
 skip NULLs like every CH aggregate, if()/multiIf() conditions follow
 CH UInt8 truthiness, corr() returns NaN on zero-variance input
 instead of an ANSI DIVIDE_BY_ZERO.
@@ -159,3 +159,10 @@ def test_window_alias_spellings(client):
     r = one(client, "SELECT percentRank() OVER (ORDER BY x) AS r FROM "
                     "(SELECT arrayJoin([1, 2]) AS x) LIMIT 1")
     assert float(r["r"]) == 0.0
+
+
+def test_in_null_documented_divergence(client):
+    # docs/PARITY.md: CH returns 0 for `x IN (NULL)`; Spark keeps
+    # three-valued logic and returns NULL. WHERE excludes the row either way.
+    r = one(client, "SELECT 1 IN (NULL) AS a, NULL IN (1) AS b")
+    assert (r["a"], r["b"]) == (None, None)

@@ -1,4 +1,4 @@
-"""Round-11 probe-sweep wave 38 (scripts/probe_wave38.py): systematic
+"""Round-11 probe-sweep wave 38: systematic
 leak-discovery over ~190 CH function names; re-confirmed the wave-27
 locate adjudication (modern CH >= 24.3 uses MySQL (needle, haystack)
 order == Spark's, so the pass-through stays). Covers the sign/sgn Int8

@@ -1,4 +1,4 @@
-"""Round-12 probe-sweep wave 39 (scripts/probe_wave39.py): residual
+"""Round-12 probe-sweep wave 39: residual
 families the wave-38 sweep deferred. Discovery pushed ~120 names
 through the translator with realistic arguments; every verbatim
 survivor failed CLEAN (UNRESOLVED_ROUTINE) — no silent same-name/
