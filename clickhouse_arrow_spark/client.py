@@ -20,6 +20,7 @@ identically on local[32] or a 1000-executor cluster.
 
 from __future__ import annotations
 
+import hashlib
 import re
 import uuid
 from dataclasses import dataclass, field
@@ -122,54 +123,6 @@ def _ch_variant_element_text(row, want: str) -> str | None:
     if isinstance(v, bool):
         return "true" if v else "false"
     return str(v)
-
-
-def _single_file_write(df, path: str, fmt_l: str,
-                       append: bool = False) -> None:
-    """Write a DataFrame as ONE local file at `path` (clickhouse-client
-    semantics for INTO OUTFILE and INSERT INTO FUNCTION file()): the
-    executor writes a single part (coalesce(1) — these are driver-side
-    export paths, small by construction), which is moved (or
-    byte-appended) onto the target. Raises ValueError on an
-    unsupported format name so callers can phrase their own error."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    tmp = _tempfile.mkdtemp(prefix="cas_outfile_")
-    one = df.coalesce(1)
-    if fmt_l in ("csv", "csvwithnames"):
-        one.write.mode("overwrite").option(
-            "header", fmt_l.endswith("withnames")
-        ).csv(tmp)
-        part_glob = "part-*.csv"
-    elif fmt_l in ("tsv", "tabseparated", "tsvwithnames",
-                   "tabseparatedwithnames"):
-        one.write.mode("overwrite").option("sep", "\t").option(
-            "header", fmt_l.endswith("withnames")
-        ).csv(tmp)
-        part_glob = "part-*.csv"
-    elif fmt_l == "jsoneachrow":
-        one.write.mode("overwrite").json(tmp)
-        part_glob = "part-*.json"
-    elif fmt_l == "parquet":
-        one.write.mode("overwrite").parquet(tmp)
-        part_glob = "part-*.parquet"
-    else:
-        _shutil.rmtree(tmp, ignore_errors=True)
-        raise ValueError(f"unsupported single-file format {fmt_l!r}")
-    parts = _glob.glob(_os.path.join(tmp, part_glob))
-    if append and _os.path.exists(path):
-        with open(path, "ab") as dst:
-            for p in parts:
-                with open(p, "rb") as src:
-                    _shutil.copyfileobj(src, dst)
-    elif not parts:
-        open(path, "wb").close()
-    else:
-        _shutil.move(parts[0], path)
-    _shutil.rmtree(tmp, ignore_errors=True)
 
 
 @dataclass(frozen=True)
@@ -294,8 +247,6 @@ class Client:
         unless `allow_hash_substitution=True` (xxhash64, different
         values, warned)."""
         from clickhouse_arrow_spark.ddl import rewrite_final
-        from clickhouse_arrow_spark.dialect import translate_ch_sql
-
         from clickhouse_arrow_spark.dialect import extract_with_fill
         from clickhouse_arrow_spark.dictionary import rewrite_dict_calls
 
@@ -352,34 +303,24 @@ class Client:
             # driver materialization), then a summary row back.
             # _find_clean skips matches inside string literals, so text
             # like SELECT 'INTO OUTFILE ...' is never intercepted
-            import glob as _glob
             import os as _os
-            import shutil as _shutil
-            import tempfile as _tempfile
+
+            from clickhouse_arrow_spark import formats
 
             path = m.group(1)
             mode = (m.group(2) or "").upper()
-            fmt = (m.group(3) or "TabSeparated").lower()
-            import os as _os0
-
+            fmt = formats.lookup(m.group(3) or "TabSeparated", QueryError)
             # CH refuses an existing file unless APPEND or TRUNCATE
-            if not mode and _os0.path.exists(path):
+            if not mode and _os.path.exists(path):
                 raise QueryError(
                     f"INTO OUTFILE: {path!r} already exists — add "
                     "TRUNCATE to overwrite or APPEND to extend "
                     "(ClickHouse refuses silently clobbering too)"
                 )
             inner = self.query_ch(ch_sql[: m.start()], qid=qid)
-            try:
-                _single_file_write(
-                    inner, path, fmt, append=(mode == "APPEND")
-                )
-            except ValueError:
-                raise QueryError(
-                    f"INTO OUTFILE FORMAT {m.group(3)}: supported here "
-                    "are CSV[WithNames], TSV/TabSeparated[WithNames], "
-                    "JSONEachRow, Parquet"
-                )
+            formats.write_single_file(
+                inner, path, fmt, append=(mode == "APPEND")
+            )
             return self.spark.createDataFrame(
                 [(path, _os.path.getsize(path))],
                 "path string, bytes_written bigint",
@@ -754,9 +695,7 @@ class Client:
 
             ch_sql = rewrite_star_apply(self.spark, ch_sql)
         ch_sql, fill = extract_with_fill(ch_sql)
-        sql = translate_ch_sql(
-            ch_sql, allow_hash_substitution, self._dialect_settings()
-        )
+        sql = self._translate(ch_sql, allow_hash_substitution)
         # after translation: the replacement subqueries use Spark's own
         # range() TVF, which the CH->Spark translator must not re-touch
         sql = self._rewrite_system_tables(sql)
@@ -790,6 +729,16 @@ class Client:
             if val is not None:
                 overrides.update(honored_setting(name, str(val)))
         return DialectSettings(**overrides)
+
+    def _translate(self, ch_sql: str,
+                   allow_hash_substitution: bool = False) -> str:
+        """ClickHouse SQL -> Spark SQL under the session's dialect
+        settings (every statement form translates through here)."""
+        from clickhouse_arrow_spark.dialect import translate_ch_sql
+
+        return translate_ch_sql(
+            ch_sql, allow_hash_substitution, self._dialect_settings()
+        )
 
     def query_params(
         self, sql: str, params: dict[str, Any] | None = None, qid: str | None = None
@@ -932,7 +881,6 @@ class Client:
             optimize_table,
             try_mutation,
         )
-        from clickhouse_arrow_spark.dialect import translate_ch_sql
 
         # SQL-macro calls may appear inside any statement's expressions
         # (INSERT ... SELECT, CTAS, mutations); the definition
@@ -1280,7 +1228,7 @@ class Client:
             )
 
             name = m.group("name").replace("`", "")
-            spark_select = translate_ch_sql(m.group("select"))
+            spark_select = self._translate(m.group("select"))
             # MV machinery runs this SELECT outside _run — register
             # any lazily-created ch_* UDFs it references first
             self._ensure_udfs_for(spark_select)
@@ -1377,7 +1325,7 @@ class Client:
                     return None
             stmt = f"ALTER TABLE {m.group(1)} ADD COLUMN `{col}` {ddl_t}"
             if md:
-                stmt += f" DEFAULT {translate_ch_sql(md.group(2).strip())}"
+                stmt += f" DEFAULT {self._translate(md.group(2).strip())}"
             self.execute(stmt, qid)
             return None
         m = _re.match(
@@ -1504,80 +1452,23 @@ class Client:
                     "explicitly — client.insert(table, df_or_arrow) "
                     "(the reference's insert(sql, batch) shape)"
                 )
-            fmt_l = fmt.lower()
             col_clause = f" ({cols})" if cols else ""
-            if fmt_l == "values":
+            if fmt.lower() == "values":
                 return self.execute_ch(
                     f"INSERT INTO {table}{col_clause} VALUES {data}", qid
                 )
+            from clickhouse_arrow_spark.formats import parse_inline
+
+            schema = self.spark.table(table).schema
             names = (
                 [c.strip().strip("`") for c in cols.split(",")]
                 if cols
-                else [f.name for f in self.spark.table(table).schema.fields]
+                else schema.names
             )
-            field_types = {
-                f.name: f.dataType for f in self.spark.table(table).schema.fields
-            }
-            lines = [ln for ln in data.splitlines() if ln.strip()]
-            if fmt_l == "jsoneachrow":
-                import json as _json
-
-                dicts = [_json.loads(ln) for ln in lines]
-                names = [n for n in names if any(n in d for d in dicts)]
-
-                def _cell(v):
-                    # preserve JSON semantics through the string stage:
-                    # bools render as JSON true/false (str() would give
-                    # Python 'True'), nested values re-serialize as
-                    # compact JSON (str() would give dict reprs)
-                    if v is None:
-                        return None
-                    if isinstance(v, bool):
-                        return "true" if v else "false"
-                    if isinstance(v, (dict, list)):
-                        return _json.dumps(v, separators=(",", ":"))
-                    return str(v)
-
-                rows = [tuple(_cell(d.get(n)) for n in names)
-                        for d in dicts]
-            elif fmt_l in ("csv", "csvwithnames", "tsv", "tabseparated",
-                           "tsvwithnames", "tabseparatedwithnames"):
-                import csv as _csv
-                import io as _io
-
-                delim = "," if fmt_l.startswith("csv") else "\t"
-                parsed = list(_csv.reader(_io.StringIO("\n".join(lines)),
-                                          delimiter=delim))
-                if fmt_l.endswith("withnames"):
-                    names = [c.strip() for c in parsed[0]]
-                    parsed = parsed[1:]
-                rows = [tuple(v if v != "" else None for v in r)
-                        for r in parsed]
-            else:
-                raise QueryError(
-                    f"INSERT ... FORMAT {fmt}: inline forms supported "
-                    "here are Values, JSONEachRow, CSV[WithNames], "
-                    "TSV/TabSeparated[WithNames]; for other formats "
-                    "load via spark.read + client.insert"
-                )
-            from pyspark.sql import functions as _F
-
-            raw = self.spark.createDataFrame(
-                rows, ", ".join(f"`{n}` string" for n in names)
+            typed = parse_inline(
+                self.spark, fmt, data, names,
+                {f.name: f.dataType for f in schema.fields},
             )
-            from pyspark.sql import types as _T
-
-            def _typed_col(n):
-                t = field_types.get(n)
-                if t is None:
-                    return _F.col(n)
-                if isinstance(t, (_T.ArrayType, _T.MapType, _T.StructType)):
-                    # a plain cast cannot parse a JSON string into a
-                    # complex type; from_json can
-                    return _F.from_json(_F.col(n), t).alias(n)
-                return _F.col(n).cast(t).alias(n)
-
-            typed = raw.select(*[_typed_col(n) for n in names])
             # the insert path fires MV triggers and fills MATERIALIZED/
             # DEFAULT columns, same as the VALUES form
             self.insert(table, typed, qid=qid)
@@ -1607,7 +1498,7 @@ class Client:
                 # remote(...)` previously leaked the raw TVF to Spark
                 block = self.query_ch(src_sql, qid=qid)
             else:
-                block = self._run(translate_ch_sql(src_sql), qid)
+                block = self._run(self._translate(src_sql), qid)
             target = self.spark.table(m.group(1)).schema
             if m.group(2):
                 listed = [c.strip().strip("`") for c in m.group(2).split(",")]
@@ -1748,7 +1639,7 @@ class Client:
                 "catalog level (table ACLs, storage IAM)"
             )
         try:
-            self._run(translate_ch_sql(ch_sql), qid).collect()
+            self._run(self._translate(ch_sql), qid).collect()
         except Exception as e:
             if "INVALID_TEMP_OBJ_REFERENCE" in str(e) and _re.match(
                 r"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\b", ch_sql
@@ -2012,7 +1903,6 @@ class Client:
         import re as _re
 
         from clickhouse_arrow_spark.ddl import parse_create_table
-        from clickhouse_arrow_spark.dialect import translate_ch_sql
 
         m_rep = _re.match(
             r"(?is)^\s*(?:CREATE\s+OR\s+REPLACE|REPLACE)\s+(TABLE\s+"
@@ -2052,7 +1942,7 @@ class Client:
             ine = "IF NOT EXISTS " if options.if_not_exists else ""
             self.execute(
                 f"CREATE TABLE {ine}`{database}`.`{table}` USING PARQUET "
-                f"TBLPROPERTIES ({kv}) AS {translate_ch_sql(ctas)}",
+                f"TBLPROPERTIES ({kv}) AS {self._translate(ctas)}",
                 qid,
             )
             return True
@@ -2162,17 +2052,17 @@ class Client:
         the server verbatim): `file('path', 'Format' [, 'schema'])` and
         `s3('s3://...', 'Format')` become Spark reads registered as
         temp views (Catalyst then pushes filters/projections into the
-        scan as with any file source); `url()` refuses with the DSv2
-        HTTP transport recipe (Spark executors cannot range-read an
-        arbitrary HTTP URL).
+        scan as with any file source); url(), remote(), cluster(),
+        merge() and generateRandom() expand through their own helpers,
+        and input() refuses outside an INSERT.
 
-        Formats: Parquet, ORC, CSV / CSVWithNames, TSV / TabSeparated
-        [WithNames], JSONEachRow. The optional third argument is a
+        Formats and extensions are those of `formats.FORMATS` /
+        `formats.EXTENSIONS`. The optional third argument is a
         ClickHouse column spec ('a Int64, b String') applied through
         the type bridge."""
-        import hashlib
         import re as _re
 
+        from clickhouse_arrow_spark import formats
         from clickhouse_arrow_spark.dialect import (
             UntranslatableFunctionError,
             _find_clean,
@@ -2224,80 +2114,26 @@ class Client:
                     ch_sql, m, close, args
                 )
                 continue
-            def lit(s: str) -> str:
-                s = s.strip()
-                if not (s.startswith("'") and s.endswith("'")):
-                    raise UntranslatableFunctionError(
-                        f"{fn}() arguments must be string literals"
-                    )
-                return s[1:-1]
-
             if not args:
                 raise UntranslatableFunctionError(f"{fn}() needs a path")
-            path = lit(args[0])
+            path = self._unquote(args[0], fn)
             if fn == "s3":
                 path = _re.sub(r"^s3://", "s3a://", path)
-            fmt = lit(args[1]) if len(args) > 1 else ""
-            if not fmt:
-                ext = path.rsplit(".", 1)[-1].lower()
-                fmt = {"parquet": "Parquet", "orc": "ORC", "csv": "CSV",
-                       "tsv": "TSV", "json": "JSONEachRow",
-                       "jsonl": "JSONEachRow"}.get(ext, "")
-                if not fmt:
-                    raise UntranslatableFunctionError(
-                        f"{fn}({path!r}): cannot infer the format from "
-                        "the extension — pass it explicitly"
-                    )
-            reader = self.spark.read
-            if len(args) > 2:
-                from pyspark.sql import types as _T
-
-                from clickhouse_arrow_spark.types import (
-                    ch_type_to_spark,
-                    parse_ch_type,
-                )
-
-                fields = []
-                for spec in lit(args[2]).split(","):
-                    cname, _, ctype = spec.strip().partition(" ")
-                    dt, nullable = ch_type_to_spark(
-                        parse_ch_type(ctype.strip()), self.type_options
-                    )
-                    fields.append(_T.StructField(cname.strip("`"), dt,
-                                                 nullable))
-                reader = reader.schema(_T.StructType(fields))
-            f = fmt.lower()
-            if f == "parquet":
-                df = reader.parquet(path)
-            elif f == "orc":
-                df = reader.orc(path)
-            elif f in ("csv", "csvwithnames", "tsv", "tabseparated",
-                       "tsvwithnames", "tabseparatedwithnames"):
-                header = "withnames" in f
-                sep = "\t" if f.startswith(("tsv", "tabseparated")) else ","
-                if len(args) > 2:
-                    df = reader.options(header=header, sep=sep).csv(path)
-                else:
-                    df = reader.options(
-                        header=header, sep=sep, inferSchema=True
-                    ).csv(path)
-            elif f == "jsoneachrow":
-                df = reader.json(path)
-            else:
-                raise UntranslatableFunctionError(
-                    f"{fn}() format {fmt!r}: supported formats are "
-                    "Parquet, ORC, CSV[WithNames], TSV/TabSeparated"
-                    "[WithNames], JSONEachRow"
-                )
-            key = hashlib.md5(
-                f"{fn}|{path}|{fmt}|{args[2] if len(args) > 2 else ''}"
-                .encode()
-            ).hexdigest()[:12]
-            view = f"__cas_file_{key}"
-            df.createOrReplaceTempView(view)
-            ch_sql = (
-                f"{ch_sql[: m.start()]}{m.group(1)} {view}"
-                f"{ch_sql[close + 1:]}"
+            fmt_arg = self._unquote(args[1], fn) if len(args) > 1 else ""
+            spec = self._unquote(args[2], fn) if len(args) > 2 else ""
+            fmt = (
+                formats.lookup(fmt_arg, UntranslatableFunctionError)
+                if fmt_arg
+                else formats.from_path(path, UntranslatableFunctionError)
+            )
+            df = formats.read(
+                self.spark.read, fmt, path,
+                formats.ch_columns(spec, self.type_options) if spec else None,
+            )
+            ch_sql = self._splice_view(
+                ch_sql, m, close, df, "file",
+                f"{fn}|{path}|{fmt_arg or fmt.name}|"
+                f"{args[2] if len(args) > 2 else ''}",
             )
 
     def _expand_url_tvf(self, ch_sql, m, close, args, fn) -> str:
@@ -2310,24 +2146,15 @@ class Client:
         single bare URL streams to local disk and infers. The result
         registers as a temp view like file(), so Catalyst prunes and
         pushes over it normally."""
-        import hashlib
-
         from clickhouse_arrow_spark.dialect import (
             UntranslatableFunctionError,
         )
+        from clickhouse_arrow_spark.formats import ch_columns
         from clickhouse_arrow_spark.sources.url_tvf import (
             UrlTvfError,
             expand_url_globs,
             read_urls,
         )
-
-        def lit(s: str) -> str:
-            s = s.strip()
-            if not (s.startswith("'") and s.endswith("'")):
-                raise UntranslatableFunctionError(
-                    f"{fn}() arguments must be string literals"
-                )
-            return s[1:-1]
 
         if fn == "urlcluster":
             # first arg is the cluster name — Spark IS the cluster;
@@ -2337,36 +2164,48 @@ class Client:
             raise UntranslatableFunctionError(
                 f"{fn}() needs (url, format [, 'structure'])"
             )
-        raw_url, fmt = lit(args[0]), lit(args[1])
-        schema = None
-        if len(args) > 2:
-            from pyspark.sql import types as _T
-
-            from clickhouse_arrow_spark.types import (
-                ch_type_to_spark,
-                parse_ch_type,
-            )
-
-            fields = []
-            for spec in lit(args[2]).split(","):
-                cname, _, ctype = spec.strip().partition(" ")
-                dt, nullable = ch_type_to_spark(
-                    parse_ch_type(ctype.strip()), self.type_options
-                )
-                fields.append(
-                    _T.StructField(cname.strip("`"), dt, nullable)
-                )
-            schema = _T.StructType(fields)
+        raw_url, fmt = self._unquote(args[0], fn), self._unquote(args[1], fn)
+        schema = (
+            ch_columns(self._unquote(args[2], fn), self.type_options)
+            if len(args) > 2 else None
+        )
         try:
             urls = expand_url_globs(raw_url)
             df = read_urls(self.spark, urls, fmt, schema)
         except UrlTvfError as e:
             raise UntranslatableFunctionError(str(e)) from None
-        key = hashlib.md5(
-            f"url|{raw_url}|{fmt}|{args[2] if len(args) > 2 else ''}"
-            .encode()
-        ).hexdigest()[:12]
-        view = f"__cas_url_{key}"
+        return self._splice_view(
+            ch_sql, m, close, df, "url",
+            f"url|{raw_url}|{fmt}|{args[2] if len(args) > 2 else ''}",
+        )
+
+    @staticmethod
+    def _unquote(arg: str, fn: str | None = None) -> str:
+        """The text of a '...' string-literal argument. With `fn` the
+        argument must be a literal (UntranslatableFunctionError naming
+        fn() otherwise); without, a bare or `quoted` name passes with
+        its backticks dropped."""
+        s = arg.strip()
+        if len(s) >= 2 and s[0] == s[-1] == "'":
+            return s[1:-1]
+        if fn is not None:
+            from clickhouse_arrow_spark.dialect import (
+                UntranslatableFunctionError,
+            )
+
+            raise UntranslatableFunctionError(
+                f"{fn}() arguments must be string literals"
+            )
+        return s.replace("`", "")
+
+    @staticmethod
+    def _splice_view(ch_sql: str, m, close: int, df: DataFrame,
+                     kind: str, key: str) -> str:
+        """Register `df` as the temp view `__cas_<kind>_<hash of key>`
+        and put it in place of the table-function call that `m` (the
+        FROM/JOIN match) opens and `close` closes. Equal keys share a
+        view, so a repeated call re-registers the same name."""
+        view = f"__cas_{kind}_{hashlib.md5(key.encode()).hexdigest()[:12]}"
         df.createOrReplaceTempView(view)
         return (
             f"{ch_sql[: m.start()]}{m.group(1)} {view}"
@@ -2383,24 +2222,12 @@ class Client:
             UntranslatableFunctionError,
         )
 
-        def unq(s: str) -> str:
-            s = s.strip()
-            if s.startswith("'") and s.endswith("'"):
-                return s[1:-1]
-            return s.replace("`", "")
-
         if len(args) < 2:
             raise UntranslatableFunctionError(
                 f"{fn}() needs (addresses, db.table | db, table "
                 "[, user [, password [, sharding_key]]])"
             )
-        a0 = args[0].strip()
-        if not (a0.startswith("'") and a0.endswith("'")):
-            raise UntranslatableFunctionError(
-                f"{fn}(): the addresses expression must be a string "
-                "literal like 'host:8123'"
-            )
-        addresses = a0[1:-1]
+        addresses = Client._unquote(args[0], fn)
 
         import re as _re
 
@@ -2418,7 +2245,7 @@ class Client:
                 return True
             return bool(_re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", s))
 
-        second = unq(args[1])
+        second = Client._unquote(args[1])
         if "." in second:
             db, table = second.split(".", 1)
             creds = args[2:]
@@ -2427,7 +2254,7 @@ class Client:
             # name-shaped third as (db, table) REGARDLESS of quoting:
             # remote('h','db','table','user','pass') reads db.table.
             # Only a dotted second arg puts credentials at args[2].
-            db, table = second, unq(args[2])
+            db, table = second, Client._unquote(args[2])
             creds = args[3:]
         else:
             db, table = None, second
@@ -2440,9 +2267,9 @@ class Client:
         # credential: remote('h', db.table, rand()) sends no user.
         user = password = None
         if len(creds) > 0 and is_str_lit(creds[0]):
-            user = unq(creds[0])
+            user = Client._unquote(creds[0])
             if len(creds) > 1 and is_str_lit(creds[1]):
-                password = unq(creds[1])
+                password = Client._unquote(creds[1])
         return addresses, db, table, user, password
 
     def _expand_remote_tvf(self, ch_sql, m, close, args, fn) -> str:
@@ -2460,7 +2287,6 @@ class Client:
         recipe (remote->8123, remoteSecure->8443/https). The scan
         registers as a temp view so Catalyst prunes and pushes over it
         like any table."""
-        import hashlib
         import re as _re
 
         from clickhouse_arrow_spark.dialect import (
@@ -2515,14 +2341,9 @@ class Client:
         df = dfs[0]
         for other in dfs[1:]:
             df = df.unionByName(other)
-        key = hashlib.md5(
-            f"{fn}|{addresses}|{qual}|{user or ''}".encode()
-        ).hexdigest()[:12]
-        view = f"__cas_remote_{key}"
-        df.createOrReplaceTempView(view)
-        return (
-            f"{ch_sql[: m.start()]}{m.group(1)} {view}"
-            f"{ch_sql[close + 1:]}"
+        return self._splice_view(
+            ch_sql, m, close, df, "remote",
+            f"{fn}|{addresses}|{qual}|{user or ''}",
         )
 
     def _expand_cluster_tvf(self, ch_sql, m, close, args, fn) -> str:
@@ -2537,21 +2358,15 @@ class Client:
             UntranslatableFunctionError,
         )
 
-        def unq(s: str) -> str:
-            s = s.strip()
-            if s.startswith("'") and s.endswith("'"):
-                return s[1:-1]
-            return s.replace("`", "")
-
         if len(args) < 2:
             raise UntranslatableFunctionError(
                 f"{fn}() needs (cluster_name, db.table | db, table)"
             )
-        second = unq(args[1])
+        second = self._unquote(args[1])
         if "." in second:
             db, table = second.split(".", 1)
         elif len(args) >= 3:
-            db, table = second, unq(args[2])
+            db, table = second, self._unquote(args[2])
         else:
             db, table = None, second
         # `default` is CH's implicit database; session-registered temp
@@ -2643,12 +2458,13 @@ class Client:
         to the server verbatim). File-engine write semantics: an
         existing file APPENDS for the text formats, and
         `SET engine_file_truncate_on_insert = 1` truncates first;
-        Parquet cannot byte-append a single file, so an existing
-        parquet target refuses naming the setting. s3()/url() writes
-        refuse — no remote-write credential path in a library."""
+        Parquet and ORC cannot byte-append a single file, so an
+        existing columnar target refuses naming the setting. s3()/url()
+        writes refuse — no remote-write credential path in a library."""
         import os as _os
         import re as _re
 
+        from clickhouse_arrow_spark import formats
         from clickhouse_arrow_spark.dialect import (
             _find_matching_paren,
             _split_top_args,
@@ -2675,23 +2491,13 @@ class Client:
                 "arguments"
             )
 
-        def _unq(s: str) -> str:
-            s = s.strip()
-            if s.startswith("'") and s.endswith("'"):
-                return s[1:-1]
-            return s
-
-        path = _unq(args[0])
-        if len(args) > 1:
-            fmt_l = _unq(args[1]).lower()
-        else:
+        path = self._unquote(args[0])
+        fmt = (
+            formats.lookup(self._unquote(args[1]), QueryError)
+            if len(args) > 1
             # CH infers the format from the extension when omitted
-            ext = _os.path.splitext(path)[1].lower()
-            fmt_l = {
-                ".csv": "csv", ".tsv": "tabseparated",
-                ".json": "jsoneachrow", ".jsonl": "jsoneachrow",
-                ".ndjson": "jsoneachrow",
-            }.get(ext, "parquet")
+            else formats.from_path(path, QueryError)
+        )
         # an optional 3rd 'col spec' names the file schema in CH; the
         # SELECT's own schema governs the write here
         source = ch_sql[close + 1:].strip().rstrip(";").strip()
@@ -2715,24 +2521,18 @@ class Client:
         if exists and truncate:
             _os.remove(path)
             exists = False
-        if exists and fmt_l == "parquet":
+        if exists and fmt.source in ("parquet", "orc"):
             raise QueryError(
-                "INSERT INTO FUNCTION file(..., 'Parquet'): the target "
-                "exists and parquet cannot byte-append a single file — "
-                "SET engine_file_truncate_on_insert = 1 to overwrite "
+                f"INSERT INTO FUNCTION file(..., '{fmt.name}'): the "
+                f"target exists and {fmt.name} cannot byte-append a "
+                "single file — SET engine_file_truncate_on_insert = 1 "
+                "to overwrite "
                 "(ClickHouse needs the same setting)"
             )
         parent = _os.path.dirname(path)
         if parent and not _os.path.isdir(parent):
             _os.makedirs(parent, exist_ok=True)
-        try:
-            _single_file_write(df, path, fmt_l, append=exists)
-        except ValueError:
-            raise QueryError(
-                f"INSERT INTO FUNCTION file FORMAT {fmt_l}: supported "
-                "here are CSV[WithNames], TSV/TabSeparated[WithNames], "
-                "JSONEachRow, Parquet"
-            )
+        formats.write_single_file(df, path, fmt, append=exists)
         return None
 
     def _insert_through_input_tvf(self, m, qid):
@@ -2740,18 +2540,15 @@ class Client:
         FORMAT fmt <data>`: parse the inline body into a temp view
         typed by the structure, swap input(...) for the view, and run
         the result through the normal INSERT ... SELECT route (MV
-        triggers, defaults, engine semantics all apply)."""
-        import hashlib
-        import json as _json
+        triggers, defaults, engine semantics all apply). The body
+        parses as `INSERT ... FORMAT` parses it (formats.parse_inline),
+        and a structure column no JSONEachRow row carries reads as
+        NULL."""
         import re as _re
 
         from pyspark.sql import functions as F
-        from pyspark.sql import types as _T
 
-        from clickhouse_arrow_spark.types import (
-            ch_type_to_spark,
-            parse_ch_type,
-        )
+        from clickhouse_arrow_spark.formats import ch_columns, parse_inline
 
         table, cols, select, structure, fmt, data = (
             m.group(1), m.group(2), m.group(3), m.group(4),
@@ -2763,75 +2560,29 @@ class Client:
                 "(the wire's out-of-band body has no Spark analogue); "
                 "for bulk data transform a DataFrame and client.insert"
             )
-        fields = []
-        for spec in structure.split(","):
-            cname, _, ctype = spec.strip().partition(" ")
-            dt, nullable = ch_type_to_spark(
-                parse_ch_type(ctype.strip()), self.type_options
-            )
-            fields.append(_T.StructField(cname.strip("`"), dt, nullable))
-        schema = _T.StructType(fields)
-        names = [f.name for f in fields]
-        fmt_l = fmt.lower()
-        if fmt_l == "values":
-            quoted = ", ".join(f"`{n}`" for n in names)
+        schema = ch_columns(structure, self.type_options)
+        if fmt.lower() == "values":
+            quoted = ", ".join(f"`{n}`" for n in schema.names)
             src = self.spark.sql(
                 f"SELECT * FROM (VALUES {data.strip().rstrip(';')}) "
                 f"AS __cas_in({quoted})"
-            )
+            ).select(*[
+                F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ])
         else:
-            lines = [ln for ln in data.splitlines() if ln.strip()]
-            if fmt_l == "jsoneachrow":
-                # values arrive as strings and cast through the
-                # structure below (json ints into a Float64 column
-                # would fail createDataFrame's strict verifier)
-                dicts = [_json.loads(ln) for ln in lines]
-                rows = [
-                    tuple(
-                        None if d.get(n) is None else str(d.get(n))
-                        for n in names
-                    )
-                    for d in dicts
-                ]
-                src = self.spark.createDataFrame(
-                    rows,
-                    _T.StructType([
-                        _T.StructField(n, _T.StringType(), True)
-                        for n in names
-                    ]),
-                )
-            elif fmt_l in ("csv", "tsv", "csvwithnames",
-                           "tsvwithnames", "tabseparated",
-                           "tabseparatedwithnames"):
-                sep = "," if fmt_l.startswith("csv") else "\t"
-                if fmt_l.endswith("withnames"):
-                    lines = lines[1:]
-                rows = [
-                    tuple(v.strip().strip('"')
-                          for v in ln.split(sep))
-                    for ln in lines
-                ]
-                src = self.spark.createDataFrame(
-                    rows,
-                    _T.StructType([
-                        _T.StructField(n, _T.StringType(), True)
-                        for n in names
-                    ]),
-                )
-            else:
-                raise QueryError(
-                    f"input() FORMAT {fmt}: Values, JSONEachRow, "
-                    "CSV[WithNames] and TSV[WithNames] are supported "
-                    "inline"
-                )
-        src = src.select(*[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in fields
-        ])
-        key = hashlib.md5(
-            f"input|{structure}|{len(data)}".encode()
-        ).hexdigest()[:12]
-        view = f"__cas_input_{key}"
+            src = parse_inline(
+                self.spark, fmt, data, schema.names,
+                {f.name: f.dataType for f in schema.fields},
+            )
+            src = src.select(*[
+                F.col(f"`{f.name}`") if f.name in src.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ])
+        # a fresh name per statement: this statement drops the view
+        # when it ends, which must not touch a concurrent one's
+        view = f"__cas_input_{uuid.uuid4().hex}"
         src.createOrReplaceTempView(view)
         new_select = _re.sub(
             r"(?is)\binput\(\s*'[^']+'\s*\)", view, select, count=1
@@ -2851,26 +2602,18 @@ class Client:
         registered as a temp view so the rest of the query (and
         Catalyst's pruning/pushdown over each branch) proceeds
         normally."""
-        import hashlib
         import re as _re
 
         from clickhouse_arrow_spark.dialect import (
             UntranslatableFunctionError,
         )
 
-        def lit(s: str) -> str:
-            s = s.strip()
-            if not (s.startswith("'") and s.endswith("'")):
-                raise UntranslatableFunctionError(
-                    "merge() arguments must be string literals"
-                )
-            return s[1:-1]
-
         if len(args) == 2:
-            db, pattern = lit(args[0]), lit(args[1])
+            db = self._unquote(args[0], "merge")
+            pattern = self._unquote(args[1], "merge")
         elif len(args) == 1:
             db = self.spark.catalog.currentDatabase()
-            pattern = lit(args[0])
+            pattern = self._unquote(args[0], "merge")
         else:
             raise UntranslatableFunctionError(
                 "merge() takes ('db', 'regex') or ('regex')"
@@ -2888,10 +2631,9 @@ class Client:
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
-        key = hashlib.md5(f"{db}|{pattern}".encode()).hexdigest()[:12]
-        view = f"__cas_merge_{key}"
-        out.createOrReplaceTempView(view)
-        return f"{ch_sql[: m.start()]}{m.group(1)} {view}{ch_sql[close + 1:]}"
+        return self._splice_view(
+            ch_sql, m, close, out, "merge", f"{db}|{pattern}"
+        )
 
     def _expand_generate_random(self, ch_sql, m, close, args) -> str:
         """`generateRandom('a Int64, b String'[, seed])` — deterministic
@@ -2899,38 +2641,25 @@ class Client:
         per call; seeded here so tests and oracles can pin it). Value
         synthesis is hash-arithmetic per type, generated DISTRIBUTED
         via range() — no driver data."""
-        import hashlib
-        import re as _re
-
         from pyspark.sql import functions as F
         from pyspark.sql import types as _T
 
         from clickhouse_arrow_spark.dialect import (
             UntranslatableFunctionError,
         )
-        from clickhouse_arrow_spark.types import (
-            ch_type_to_spark,
-            parse_ch_type,
-        )
+        from clickhouse_arrow_spark.formats import ch_columns
 
         if not args:
             raise UntranslatableFunctionError(
                 "generateRandom() needs a schema string"
             )
-        schema_lit = args[0].strip()
-        if not (schema_lit.startswith("'") and schema_lit.endswith("'")):
-            raise UntranslatableFunctionError(
-                "generateRandom() schema must be a string literal"
-            )
+        spec = self._unquote(args[0], "generateRandom")
         seed = int(args[1]) if len(args) > 1 and args[1].isdigit() else 0
         n_rows = 65536  # bounded; CH streams forever until LIMIT
         base = self.spark.range(0, n_rows)
         cols = []
-        for i, spec in enumerate(schema_lit.strip("'").split(",")):
-            cname, _, ctype = spec.strip().partition(" ")
-            dt, _null = ch_type_to_spark(
-                parse_ch_type(ctype.strip()), self.type_options
-            )
+        for i, fld in enumerate(ch_columns(spec, self.type_options)):
+            dt = fld.dataType
             h = F.xxhash64(F.col("id"), F.lit(seed), F.lit(i))
             if isinstance(dt, (_T.DoubleType, _T.FloatType)):
                 col = (F.pmod(h, F.lit(1_000_000)) / 1_000_000.0).cast(dt)
@@ -2949,14 +2678,11 @@ class Client:
                 col = (F.pmod(h, F.lit(2)) == 0)
             else:  # integral family
                 col = F.pmod(h, F.lit(1_000_000)).cast(dt)
-            cols.append(col.alias(cname.strip("`")))
-        df = base.select(*cols)
-        key = hashlib.md5(
-            f"{schema_lit}|{seed}".encode()
-        ).hexdigest()[:12]
-        view = f"__cas_genrand_{key}"
-        df.createOrReplaceTempView(view)
-        return f"{ch_sql[: m.start()]}{m.group(1)} {view}{ch_sql[close + 1:]}"
+            cols.append(col.alias(fld.name))
+        return self._splice_view(
+            ch_sql, m, close, base.select(*cols), "genrand",
+            f"{args[0].strip()}|{seed}",
+        )
 
     # ------------------------------------------------------------------
     # introspection (system.tables / system.columns analogues)

@@ -82,9 +82,12 @@ class CreateOptions:
         if self.engine == "FileLog" and not self.settings.get(
             "filelog_path"
         ):
+            from clickhouse_arrow_spark.formats import SUPPORTED
+
             raise SchemaError(
                 "ENGINE = FileLog needs its watch directory: "
-                "FileLog('/path/to/dir', 'JSONEachRow'|'CSV'|'Parquet')"
+                "FileLog('/path/to/dir', '<format>'), format one of "
+                f"{SUPPORTED}"
             )
         colset = set(columns)
         for c in self.order_by:
@@ -798,16 +801,11 @@ def mutate_update(
 def try_mutation(spark: SparkSession, ch_sql: str) -> int | None:
     """Dispatch a ClickHouse mutation statement; None if `ch_sql` is not
     one. WHERE expressions run through the CH→Spark translation."""
-    from clickhouse_arrow_spark.dialect import translate_ch_sql
-
-    def tr(expr: str) -> str:
-        # translate the expression in SELECT position, then unwrap
-        out = translate_ch_sql(f"SELECT {expr}")
-        return out[len("SELECT "):]
+    from clickhouse_arrow_spark.dialect import translate_ch_expr
 
     def cond(expr: str) -> str:
         # CH treats integers as booleans in condition position
-        out = tr(expr)
+        out = translate_ch_expr(expr)
         return f"({out} <> 0)" if re.fullmatch(r"\d+", out.strip()) else out
 
     # `... IN PARTITION <pid> WHERE ...` scopes the mutation to one
@@ -841,7 +839,7 @@ def try_mutation(spark: SparkSession, ch_sql: str) -> int | None:
                 raise SchemaError(
                     "IN PARTITION: table declares no PARTITION BY"
                 )
-            part_pred = f"(({tr(expr)}) = {pid})"
+            part_pred = f"(({translate_ch_expr(expr)}) = {pid})"
 
     def scoped(where: str) -> str:
         w = cond(where)
@@ -855,7 +853,8 @@ def try_mutation(spark: SparkSession, ch_sql: str) -> int | None:
     m = _ALTER_UPDATE_RE.match(ch_sql)
     if m:
         n = mutate_update(
-            spark, m.group(1), tr(m.group(2)), scoped(m.group(3))
+            spark, m.group(1), translate_ch_expr(m.group(2)),
+            scoped(m.group(3)),
         )
         _rebuild_projections_after_mutation(spark, m.group(1))
         return n
@@ -1863,16 +1862,13 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
 
     Returns False when `ch_sql` is not one of these (ADD COLUMN and
     mutations are handled elsewhere)."""
-    from clickhouse_arrow_spark.dialect import translate_ch_sql
+    from clickhouse_arrow_spark.dialect import translate_ch_expr
     from clickhouse_arrow_spark.types import ch_type_to_spark, parse_ch_type
 
     m = _ALTER_HEAD_RE.match(ch_sql)
     if not m:
         return False
     table, action = m.group(1), m.group(2)
-
-    def tr(expr: str) -> str:
-        return translate_ch_sql(f"SELECT {expr}")[len("SELECT "):]
 
     mm = re.match(r"(?is)^MATERIALIZE\s+COLUMN\s+(`?\w+`?)\s*$", action)
     if mm:
@@ -1891,7 +1887,9 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
                 f"MATERIALIZE COLUMN: {col!r} has no MATERIALIZED "
                 f"expression on {table}"
             )
-        mutate_update(spark, table, f"`{col}` = {tr(mat[col])}", "true")
+        mutate_update(
+            spark, table, f"`{col}` = {translate_ch_expr(mat[col])}", "true"
+        )
         _rebuild_projections_after_mutation(spark, table)
         return True
     mm = re.match(
@@ -2127,12 +2125,8 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
             "clickhouse_arrow_spark.setting.partition_by_expression"
         )
         if expr:
-            from clickhouse_arrow_spark.dialect import translate_ch_sql
-
             lit = val if val.replace(".", "", 1).isdigit() else f"'{val}'"
-            pred = translate_ch_sql(f"SELECT ({expr}) = {lit}")[
-                len("SELECT "):
-            ]
+            pred = translate_ch_expr(f"({expr}) = {lit}")
             mutate_delete(spark, table, pred)
             _rebuild_projections_after_mutation(spark, table)
             return True
@@ -2168,7 +2162,7 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
         return True
     mm = re.match(r"(?is)^MODIFY\s+TTL\s+(.+)$", action)
     if mm:
-        ttl = tr(mm.group(1).strip())
+        ttl = translate_ch_expr(mm.group(1).strip())
         spark.sql(
             f"ALTER TABLE {table} SET TBLPROPERTIES "
             f"('clickhouse_arrow_spark.ttl' = '{ttl}')"
@@ -2244,8 +2238,7 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
     )
     if mm:
         # default-only change (CH allows omitting the type)
-        expr = translate_ch_sql(f"SELECT {mm.group(2).strip()}")[
-            len("SELECT "):]
+        expr = translate_ch_expr(mm.group(2).strip())
         spark.sql(
             f"ALTER TABLE {table} ALTER COLUMN "
             f"`{mm.group(1).strip('`')}` SET DEFAULT {expr}"
@@ -2272,8 +2265,7 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
             spark.table(table).withColumn(col, F.col(col).cast(dt)),
         )
         if mm.group(3):
-            expr = translate_ch_sql(f"SELECT {mm.group(3).strip()}")[
-                len("SELECT "):]
+            expr = translate_ch_expr(mm.group(3).strip())
             spark.sql(
                 f"ALTER TABLE {table} ALTER COLUMN `{col}` "
                 f"SET DEFAULT {expr}"

@@ -8875,6 +8875,16 @@ def translate_ch_sql(
     )
 
 
+def translate_ch_expr(
+    expr: str, settings: DialectSettings | None = None
+) -> str:
+    """Translate one ClickHouse expression (a default, a predicate, a
+    TTL) to Spark SQL: :func:`translate_ch_sql` in SELECT position."""
+    return translate_ch_sql(f"SELECT {expr}", settings=settings)[
+        len("SELECT "):
+    ]
+
+
 #: the whole-statement passes, in order. PREWHERE folds into WHERE
 #: BEFORE alias inlining so select-list aliases resolve inside it too
 #: (CH allows them there).
@@ -9235,9 +9245,7 @@ def extract_with_fill(sql: str):
                     "across filled gaps — a window cannot express that; "
                     "carry the column bare or compute downstream"
                 )
-            interpolate[target] = translate_ch_sql(f"SELECT {expr}")[
-                len("SELECT "):
-            ]
+            interpolate[target] = translate_ch_expr(expr)
 
     def bound(s):
         if s is None:

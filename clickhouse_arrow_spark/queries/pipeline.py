@@ -2000,8 +2000,9 @@ def q_doc_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DuckDB-recomputed truly-contaminated count; no_fn pins the Bloom "
     "guarantee (every exactly-contaminated doc is flagged — zero false "
     "negatives, checked by anti-join); fp_ok bounds the false-positive "
-    "tail at 5% of the corpus (m=2^21, k=4 sized for ~1e-3 per-doc fp "
-    "at sf0.01 fill).",
+    "tail at 5% of the corpus. k=4; m is sized from the blocklist: "
+    "~84 bits per benchmark 8-gram, rounded up to a power of two, "
+    "never below 2^21 (sf0.01's ~1.3k grams sit on that floor).",
     tags=("documents", "decontaminate", "bloom", "pipeline"),
 )
 def q_doc_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:

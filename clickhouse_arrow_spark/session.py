@@ -68,6 +68,18 @@ def _default_parallelism() -> int:
     return int(raw)
 
 
+def _default_driver_memory() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM when set, else half the machine's
+    physical memory (at least 1g, at most 16g): the driver JVM of a
+    local session shares the host with the Python process and the
+    page cache."""
+    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "").strip()
+    if raw:
+        return raw
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(max(phys_mb // 2, 1024), 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "clickhouse_arrow_spark",
     master: str | None = None,
@@ -79,7 +91,7 @@ def get_spark(
     builder = builder.master(master or f"local[{cpus}]")
     merged = dict(DEFAULT_CONFS)
     merged.setdefault("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-    merged.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+    merged.setdefault("spark.driver.memory", _default_driver_memory())
     if confs:
         merged.update(confs)
     for k, v in merged.items():

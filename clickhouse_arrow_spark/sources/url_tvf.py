@@ -17,8 +17,9 @@ glob out across the cluster (urlCluster). Here:
   schema inference — the convenience path, refused for multi-URL
   globs where inference would serialize the fan-out.
 
-Formats: Parquet, ORC, CSV[WithNames], TSV/TabSeparated[WithNames],
-JSONEachRow. gzip Content-Encoding / .gz URLs decompress streaming.
+Formats are those of `formats.FORMATS`; the executor-side parse stays
+in pandas because it runs inside `mapInPandas` tasks. gzip
+Content-Encoding / .gz URLs decompress streaming.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ import re
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from clickhouse_arrow_spark.formats import Format, lookup, read
 
 _BRACE_RE = re.compile(r"\{([^{}]*)\}")
 _RANGE_RE = re.compile(r"^(\d+)\.\.(\d+)$")
@@ -113,47 +116,21 @@ def _copy_to_temp(stream) -> str:
     return f.name
 
 
-_FMT_ALIASES = {
-    "parquet": "parquet",
-    "orc": "orc",
-    "csv": "csv",
-    "csvwithnames": "csv+names",
-    "tsv": "tsv",
-    "tabseparated": "tsv",
-    "tsvwithnames": "tsv+names",
-    "tabseparatedwithnames": "tsv+names",
-    "jsoneachrow": "json",
-    "ndjson": "json",
-    "jsonlines": "json",
-}
-
-
-def _norm_format(fmt: str) -> str:
-    key = fmt.strip().lower()
-    if key not in _FMT_ALIASES:
-        raise UrlTvfError(
-            f"url() format {fmt!r}: supported formats are Parquet, "
-            "ORC, CSV[WithNames], TSV/TabSeparated[WithNames], "
-            "JSONEachRow"
-        )
-    return _FMT_ALIASES[key]
-
-
-def _parse_one(url: str, fmt: str, colnames: list[str] | None):
+def _parse_one(url: str, fmt: Format, colnames: list[str]):
     """Fetch + parse ONE url into a pandas DataFrame (runs inside an
-    executor task on the distributed path, or on the driver for the
-    inference path). colnames orders/renames headerless CSV/TSV."""
+    executor task on the distributed path). colnames orders/renames
+    CSV/TSV columns."""
     import os
 
     import pandas as pd
 
     stream = _fetch_stream(url)
     try:
-        if fmt in ("parquet", "orc"):
+        if fmt.source in ("parquet", "orc"):
             # columnar footers need random access: spool to local disk
             path = _copy_to_temp(stream)
             try:
-                if fmt == "parquet":
+                if fmt.source == "parquet":
                     import pyarrow.parquet as pq
 
                     return pq.read_table(path).to_pandas()
@@ -164,20 +141,16 @@ def _parse_one(url: str, fmt: str, colnames: list[str] | None):
                 os.unlink(path)
         data = stream.read()
         buf = io.BytesIO(data)
-        if fmt == "json":
+        if fmt.source == "json":
             return pd.read_json(buf, lines=True)
-        sep = "\t" if fmt.startswith("tsv") else ","
-        header = 0 if fmt.endswith("+names") else None
-        df = pd.read_csv(buf, sep=sep, header=header)
-        if colnames is not None:
-            if len(df.columns) != len(colnames):
-                raise UrlTvfError(
-                    f"url({url!r}): structure names {len(colnames)} "
-                    f"columns, the payload has {len(df.columns)}"
-                )
-            df.columns = colnames
-        elif header is None:
-            df.columns = [f"c{i + 1}" for i in range(len(df.columns))]
+        header = 0 if fmt.header else None
+        df = pd.read_csv(buf, sep=fmt.sep, header=header)
+        if len(df.columns) != len(colnames):
+            raise UrlTvfError(
+                f"url({url!r}): structure names {len(colnames)} "
+                f"columns, the payload has {len(df.columns)}"
+            )
+        df.columns = colnames
         return df
     finally:
         stream.close()
@@ -194,7 +167,7 @@ def read_urls(
     its pandas frame to it; inference would force a driver fetch)."""
     from pyspark.sql import types as T
 
-    fmt = _norm_format(fmt)
+    fmt = lookup(fmt, UrlTvfError)
     for u in urls:
         if not re.match(r"^https?://", u):
             raise UrlTvfError(
@@ -210,21 +183,7 @@ def read_urls(
                 "the driver and serialize the fan-out"
             )
         # convenience path: stream to local disk, let spark.read infer
-        path = _copy_to_temp(_fetch_stream(urls[0]))
-        reader = spark.read
-        if fmt == "parquet":
-            return reader.parquet(path)
-        if fmt == "orc":
-            return reader.orc(path)
-        if fmt == "json":
-            return reader.json(path)
-        sep = "\t" if fmt.startswith("tsv") else ","
-        df = reader.options(
-            header=fmt.endswith("+names"), sep=sep, inferSchema=True
-        ).csv(path)
-        if not fmt.endswith("+names"):
-            df = df.toDF(*[f"c{i + 1}" for i in range(len(df.columns))])
-        return df
+        return read(spark.read, fmt, _copy_to_temp(_fetch_stream(urls[0])))
 
     colnames = [f.name for f in schema.fields]
     url_df = spark.createDataFrame(
@@ -240,9 +199,7 @@ def read_urls(
             for u in pdf["__cas_url"]:
                 parsed = _parse_one(u, fmt, colnames)
                 missing = [c for c in colnames if c not in parsed.columns]
-                if missing and fmt in ("parquet", "orc", "json") or (
-                    missing and fmt.endswith("+names")
-                ):
+                if missing and (fmt.source != "csv" or fmt.header):
                     raise UrlTvfError(
                         f"url({u!r}): payload lacks columns {missing}"
                     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_arrow_spark import formats
 from clickhouse_arrow_spark.errors import QueryError, SchemaError
 
 
@@ -45,18 +46,11 @@ def build_ingest_stream(spark: SparkSession, table: str) -> DataFrame:
     engine = props.get("clickhouse_arrow_spark.engine", "")
     schema = spark.table(table).schema
     if engine == "FileLog":
-        path = _setting(props, "filelog_path")
-        fmt = _setting(props, "filelog_format", "JSONEachRow").lower()
-        reader = spark.readStream.schema(schema)
-        if fmt == "jsoneachrow":
-            return reader.json(path)
-        if fmt in ("csv", "csvwithnames"):
-            return reader.options(header="withnames" in fmt).csv(path)
-        if fmt == "parquet":
-            return reader.parquet(path)
-        raise SchemaError(
-            f"FileLog format {fmt!r}: JSONEachRow, CSV[WithNames], "
-            "Parquet"
+        fmt = formats.lookup(
+            _setting(props, "filelog_format", "JSONEachRow"), SchemaError
+        )
+        return formats.read(
+            spark.readStream, fmt, _setting(props, "filelog_path"), schema
         )
     if engine == "Kafka":
         brokers = _setting(props, "kafka_broker_list")
@@ -83,7 +77,8 @@ def build_ingest_stream(spark: SparkSession, table: str) -> DataFrame:
                     "equivalent as a package)"
                 ) from None
             raise
-        if fmt == "jsoneachrow":
+        known = formats.FORMATS.get(fmt)
+        if known is not None and known.source == "json":
             return raw.select(
                 F.from_json(
                     F.col("value").cast("string"), schema

@@ -6,7 +6,10 @@ import os
 
 import pytest
 
-from clickhouse_arrow_spark.session import _default_parallelism
+from clickhouse_arrow_spark.session import (
+    _default_driver_memory,
+    _default_parallelism,
+)
 
 
 @pytest.mark.parametrize("value", [None, "", "  "])
@@ -28,3 +31,20 @@ def test_cpus_malformed_or_non_positive_names_the_variable(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         _default_parallelism()
+
+
+def test_driver_memory_from_environment(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", " 3g ")
+    assert _default_driver_memory() == "3g"
+
+
+@pytest.mark.parametrize("value", [None, ""])
+def test_driver_memory_default_fits_physical_memory(monkeypatch, value):
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", value)
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    got = _default_driver_memory()
+    assert got.endswith("m")
+    assert 1024 <= int(got[:-1]) <= min(max(phys_mb // 2, 1024), 16 * 1024)

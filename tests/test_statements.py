@@ -777,44 +777,6 @@ def test_system_monitoring_tables(client, tables, spark):
     client.query_ch("SELECT count(*) FROM system.processes").collect()
 
 
-def test_insert_format_inline_data(client, spark):
-    # clickhouse-client scripts embed the data inline after FORMAT —
-    # Values / JSONEachRow / CSV / TSV / CSVWithNames all parse; an
-    # empty body (the wire's out-of-band shape) still refuses
-    client.execute_ch("CREATE DATABASE IF NOT EXISTS fmtdb")
-    try:
-        client.execute_ch(
-            "CREATE TABLE fmtdb.t (id UInt64, name String) "
-            "ENGINE = MergeTree ORDER BY id"
-        )
-        client.execute_ch("INSERT INTO fmtdb.t FORMAT Values (1, 'a')")
-        client.execute_ch(
-            'INSERT INTO fmtdb.t FORMAT JSONEachRow {"id": 2, "name": "b"}\n'
-            '{"id": 3, "name": "c"}'
-        )
-        client.execute_ch('INSERT INTO fmtdb.t FORMAT CSV 4,"d"')
-        client.execute_ch("INSERT INTO fmtdb.t (id, name) FORMAT TSV 5\te")
-        # WithNames header reorders columns
-        client.execute_ch(
-            "INSERT INTO fmtdb.t FORMAT CSVWithNames name,id\nf,6"
-        )
-        got = sorted(
-            (int(r.id), r.name)
-            for r in client.query_ch("SELECT id, name FROM fmtdb.t").collect()
-        )
-        assert got == [(1, "a"), (2, "b"), (3, "c"), (4, "d"),
-                       (5, "e"), (6, "f")]
-        import pytest as _pytest
-
-        from clickhouse_arrow_spark.errors import QueryError
-
-        with _pytest.raises(QueryError, match="out-of-band"):
-            client.execute_ch("INSERT INTO fmtdb.t FORMAT ArrowStream")
-    finally:
-        client.execute_ch("DROP TABLE IF EXISTS fmtdb.t")
-        client.execute_ch("DROP DATABASE IF EXISTS fmtdb")
-
-
 def test_insert_jsoneachrow_typed_values(client, spark):
     # booleans land as JSON true/false (not Python 'True'), nested
     # objects re-serialize as compact JSON, and arrays parse into the
@@ -975,25 +937,6 @@ def test_textual_explain_and_admin_statements(client, tables, spark):
     ).collect() == []
 
 
-def test_into_outfile(client, tables, tmp_path):
-    # clickhouse-client writes the result to a local file; so do we —
-    # executor-written, moved to the exact path, summary row back
-    p = str(tmp_path / "out.csv")
-    r = client.query_ch(
-        "SELECT o_orderkey, o_orderstatus FROM orders ORDER BY "
-        f"o_orderkey LIMIT 3 INTO OUTFILE '{p}' FORMAT CSVWithNames"
-    ).collect()[0]
-    assert r.path == p and r.bytes_written > 0
-    lines = open(p).read().splitlines()
-    assert lines[0] == "o_orderkey,o_orderstatus"
-    assert len(lines) == 4
-    pj = str(tmp_path / "out.jsonl")
-    client.query_ch(
-        f"SELECT 7 AS x INTO OUTFILE '{pj}' FORMAT JSONEachRow"
-    ).collect()
-    assert '"x":7' in open(pj).read()
-
-
 def test_show_clusters_quotas_access(client):
     """Round 8: SHOW CLUSTERS lists the one logical cluster (Spark IS
     the cluster); the access-control SHOWs return empty shaped results
@@ -1003,84 +946,6 @@ def test_show_clusters_quotas_access(client):
     for stmt in ("SHOW QUOTAS", "SHOW USERS", "SHOW ROLES",
                  "SHOW ACCESS"):
         assert client.query_ch(stmt).collect() == []
-
-
-def test_outfile_truncate_append_modes(client, tmp_path):
-    """Round 8: INTO OUTFILE refuses existing files (CH parity) unless
-    TRUNCATE (overwrite) or APPEND; AND STDOUT parses."""
-    import pytest as _pt
-
-    from clickhouse_arrow_spark.errors import QueryError
-
-    p = tmp_path / "out.csv"
-    client.query_ch(
-        f"SELECT 1 AS x INTO OUTFILE '{p}' FORMAT CSV"
-    ).collect()
-    with _pt.raises(QueryError, match="already exists"):
-        client.query_ch(f"SELECT 2 AS x INTO OUTFILE '{p}' FORMAT CSV")
-    client.query_ch(
-        f"SELECT 2 AS x INTO OUTFILE '{p}' APPEND FORMAT CSV"
-    ).collect()
-    assert p.read_text().split() == ["1", "2"]
-    client.query_ch(
-        f"SELECT 3 AS x INTO OUTFILE '{p}' AND STDOUT TRUNCATE "
-        "FORMAT CSV"
-    ).collect()
-    assert p.read_text().split() == ["3"]
-
-
-def test_insert_through_input_tvf(spark, client):
-    """Round 8: INSERT INTO t SELECT ... FROM input('structure')
-    FORMAT <fmt> <inline rows> — the transform-during-insert table
-    function (table-functions/input.md): the SELECT reshapes the
-    inline data before it lands, and MV triggers still fire."""
-    spark.sql("CREATE DATABASE IF NOT EXISTS st8")
-    for t in ("st8.inp", "st8.inp_mv_tgt"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    client.execute_ch(
-        "CREATE TABLE st8.inp (k Int64, lab String) "
-        "ENGINE = MergeTree ORDER BY k"
-    )
-    client.execute_ch(
-        "CREATE TABLE st8.inp_mv_tgt (k Int64) "
-        "ENGINE = MergeTree ORDER BY k"
-    )
-    client.execute_ch(
-        "CREATE MATERIALIZED VIEW st8.inp_mv TO st8.inp_mv_tgt AS "
-        "SELECT k FROM st8.inp"
-    )
-    # JSONEachRow body, SELECT transforms (x, y) -> (k, lab)
-    client.execute_ch(
-        "INSERT INTO st8.inp SELECT x * 10 AS k, upper(y) AS lab "
-        "FROM input('x Int32, y String') FORMAT JSONEachRow\n"
-        '{"x": 1, "y": "ab"}\n{"x": 2, "y": "cd"}'
-    )
-    got = {(r.k, r.lab) for r in spark.table("st8.inp").collect()}
-    assert got == {(10, "AB"), (20, "CD")}
-    # the attached MV fired on the transformed block
-    assert {r.k for r in spark.table("st8.inp_mv_tgt").collect()} \
-        == {10, 20}
-    # Values body with a WHERE between input() and FORMAT
-    client.execute_ch(
-        "INSERT INTO st8.inp SELECT x AS k, y AS lab "
-        "FROM input('x Int64, y String') WHERE x > 5 FORMAT Values\n"
-        "(3, 'drop'), (7, 'keep')"
-    )
-    assert (7, "keep") in {
-        (r.k, r.lab) for r in spark.table("st8.inp").collect()
-    }
-    assert all(r.lab != "drop" for r in spark.table("st8.inp").collect())
-    # CSV body
-    client.execute_ch(
-        "INSERT INTO st8.inp SELECT x AS k, y AS lab "
-        "FROM input('x Int64, y String') FORMAT CSV\n"
-        "100,zz"
-    )
-    assert (100, "zz") in {
-        (r.k, r.lab) for r in spark.table("st8.inp").collect()
-    }
-    for t in ("st8.inp_mv", "st8.inp", "st8.inp_mv_tgt"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_create_function_sql_macros(spark, client):
@@ -1177,62 +1042,6 @@ def test_show_engines_merges_describe_system_and_cache_noops(client):
     assert client.query_ch("SYSTEM DROP DNS CACHE").count() == 0
     assert client.query_ch("SYSTEM DROP MARK CACHE").count() == 0
     assert client.query_ch("SYSTEM DROP UNCOMPRESSED CACHE").count() == 0
-
-
-def test_insert_into_function_file(client, tmp_path):
-    """Round 8: `INSERT INTO FUNCTION file('path', 'Format') SELECT`
-    — ClickHouse's SQL export path (table-functions/file.md). File-
-    engine semantics: text formats APPEND to an existing file;
-    engine_file_truncate_on_insert=1 truncates; parquet-append and
-    s3()/url() writes refuse."""
-    import pytest as _pt
-
-    from clickhouse_arrow_spark.errors import QueryError
-
-    p = str(tmp_path / "exp.parquet")
-    client.execute_ch(
-        f"INSERT INTO FUNCTION file('{p}', 'Parquet') "
-        "SELECT 1 AS x, 'a' AS s"
-    )
-    back = client.query_ch(f"SELECT * FROM file('{p}', 'Parquet')")
-    assert [(r.x, r.s) for r in back.collect()] == [(1, "a")]
-    # text formats append (CH File-engine write behavior)
-    pc = str(tmp_path / "exp.csv")
-    client.execute_ch(
-        f"INSERT INTO FUNCTION file('{pc}', 'CSV') VALUES (1), (2)"
-    )
-    client.execute_ch(
-        f"INSERT INTO FUNCTION file('{pc}', 'CSV') VALUES (3)"
-    )
-    assert open(pc).read().strip().splitlines() == ["1", "2", "3"]
-    # parquet cannot byte-append a single file
-    with _pt.raises(QueryError, match="truncate_on_insert"):
-        client.execute_ch(
-            f"INSERT INTO FUNCTION file('{p}', 'Parquet') SELECT 2 AS x"
-        )
-    # ... unless the CH setting truncates first (through SET)
-    conf = ("spark.clickhouse_arrow_spark.setting."
-            "engine_file_truncate_on_insert")
-    client.query_ch("SET engine_file_truncate_on_insert = 1")
-    try:
-        client.execute_ch(
-            f"INSERT INTO FUNCTION file('{p}', 'Parquet') "
-            "SELECT 2 AS x, 'b' AS s"
-        )
-        assert [(r.x, r.s) for r in client.query_ch(
-            f"SELECT * FROM file('{p}', 'Parquet')").collect()] == [
-            (2, "b")]
-    finally:
-        client.spark.conf.unset(conf)
-    # format inferred from the extension when omitted
-    pj = str(tmp_path / "exp.jsonl")
-    client.execute_ch(f"INSERT INTO FUNCTION file('{pj}') SELECT 5 AS v")
-    assert open(pj).read().strip() == '{"v":5}'
-    # remote writes refuse with the recipe
-    with _pt.raises(QueryError, match="only file"):
-        client.execute_ch(
-            "INSERT INTO FUNCTION s3('s3://b/k', 'CSV') SELECT 1"
-        )
 
 
 def test_set_statement_routes_through_settings_shim(client, spark):
@@ -1349,3 +1158,27 @@ def test_show_create_view_spelling(client, spark):
     spark.sql("CREATE OR REPLACE TEMP VIEW scv8 AS SELECT 1 AS a")
     stmt = client.query_ch("SHOW CREATE VIEW scv8").collect()[0][0]
     assert "scv8" in stmt and "a" in stmt
+
+
+def test_session_dialect_settings_reach_every_statement(client, spark):
+    """A session `SET` of a dialect setting applies to CTAS, CREATE
+    VIEW and INSERT ... SELECT as it does to query_ch."""
+    conf = ("spark.clickhouse_arrow_spark.setting."
+            "splitby_max_substrings_includes_remaining_string")
+    sel = "SELECT splitByChar(',', 'a,b,c,d', 2) AS s"
+    spark.sql("CREATE DATABASE IF NOT EXISTS setdb")
+    client.query_ch(
+        "SET splitby_max_substrings_includes_remaining_string = 1"
+    )
+    try:
+        assert client.query_ch(sel).collect()[0].s == ["a", "b,c,d"]
+        client.execute_ch(
+            f"CREATE TABLE setdb.ctas ENGINE = MergeTree ORDER BY s AS {sel}"
+        )
+        client.execute_ch(f"CREATE VIEW setdb.v AS {sel}")
+        for name in ("setdb.ctas", "setdb.v"):
+            assert list(spark.table(name).collect()[0].s) == ["a", "b,c,d"]
+    finally:
+        spark.conf.unset(conf)
+        spark.sql("DROP VIEW IF EXISTS setdb.v")
+        spark.sql("DROP DATABASE IF EXISTS setdb CASCADE")

@@ -170,56 +170,6 @@ def test_create_view_over_temp_tables_guided(ch, spark):
     spark.sql("DROP DATABASE IF EXISTS w4v CASCADE")
 
 
-def test_file_tvf_formats(ch, spark, tmp_path):
-    import os
-
-    p = str(tmp_path)
-    spark.range(0, 100).selectExpr("id AS k", "id * 1.5 AS v") \
-        .write.parquet(f"{p}/t.parquet")
-    spark.range(0, 10).selectExpr("id AS a", "concat('s', id) AS b") \
-        .write.options(header=True).csv(f"{p}/t.csv")
-    spark.range(0, 5).selectExpr("id AS x").write.json(f"{p}/t.json")
-    r = ch.query_ch(
-        f"SELECT count() AS n, sum(k) AS s "
-        f"FROM file('{p}/t.parquet', 'Parquet')"
-    ).collect()[0]
-    assert (r["n"], r["s"]) == (100, 4950)
-    # format inferred from the extension
-    assert ch.query_ch(
-        f"SELECT count() AS n FROM file('{p}/t.parquet')"
-    ).collect()[0]["n"] == 100
-    assert ch.query_ch(
-        f"SELECT max(a) AS m FROM file('{p}/t.csv', 'CSVWithNames')"
-    ).collect()[0]["m"] == 9
-    assert ch.query_ch(
-        f"SELECT sum(x) AS s FROM file('{p}/t.json', 'JSONEachRow')"
-    ).collect()[0]["s"] == 10
-    # explicit CH schema flows through the type bridge
-    df = ch.query_ch(
-        f"SELECT a FROM file('{p}/t.csv', 'CSVWithNames', "
-        "'a Int64, b String')"
-    )
-    assert df.schema["a"].dataType.simpleString() == "bigint"
-    # predicate pushdown reaches the file scan
-    plan = ch.query_ch(
-        f"SELECT k FROM file('{p}/t.parquet', 'Parquet') WHERE k < 10"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "LessThan" in plan or "lt(k" in plan
-
-
-def test_file_tvf_refusals(ch):
-    from clickhouse_arrow_spark.dialect import UntranslatableFunctionError
-
-    # url() graduated to a real table function in round 8 — only
-    # non-http schemes refuse now (sources/url_tvf.py)
-    with pytest.raises(UntranslatableFunctionError, match="only http"):
-        ch.query_ch("SELECT 1 FROM url('ftp://x/y.csv', 'CSV')")
-    with pytest.raises(UntranslatableFunctionError, match="infer"):
-        ch.query_ch("SELECT 1 FROM file('/nope/data.bin')")
-    with pytest.raises(UntranslatableFunctionError, match="string literals"):
-        ch.query_ch("SELECT 1 FROM file(some_col)")
-
-
 def test_foreach_agg_operator(spark):
     from clickhouse_arrow_spark.operators.stats import foreach_agg
 
