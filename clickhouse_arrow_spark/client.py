@@ -158,6 +158,16 @@ class Client:
             for k, v in (("user", http_user), ("password", http_password))
             if v is not None
         }
+        #: CREATE FUNCTION macros: name -> (params, body)
+        self._sql_macros: dict = {}
+        #: cached_query results by (database, statement, params)
+        self._query_cache: dict = {}
+        #: system.query_log rows, newest last (QUERY_LOG_MAX kept)
+        self._query_log: list = []
+        # session UDFs the dialect's output calls, registered on first use
+        self._variant_udf_registered = False
+        self._normalize_udfs_registered = False
+        self._py_udfs_registered = False
 
     # ------------------------------------------------------------------
     # remote connector surface (HTTP ArrowStream transport)
@@ -241,7 +251,7 @@ class Client:
     ) -> DataFrame:
         """Run a query written in the ClickHouse SQL dialect: function
         names (`toYYYYMM`, `countIf`, `uniq`, `quantile(0.9)(x)`, ...)
-        are translated to Spark SQL first (see dialect.py), then the
+        are translated to Spark SQL first (see the dialect package), then the
         normal query path runs. Supports `{name:Type}` params too.
         Engine-specific hashes (cityHash64/sipHash64/halfMD5) raise
         unless `allow_hash_substitution=True` (xxhash64, different
@@ -286,7 +296,7 @@ class Client:
             return self.spark.createDataFrame(
                 [(1 if exists else 0,)], "result tinyint"
             )
-        from clickhouse_arrow_spark.dialect import _find_clean
+        from clickhouse_arrow_spark.dialect.sqltext import _find_clean
 
         m = _find_clean(
             _re.compile(
@@ -888,12 +898,13 @@ class Client:
         if not _re.match(r"(?is)^\s*(CREATE|DROP)\s+FUNCTION\b", ch_sql):
             ch_sql = self._expand_sql_macros(ch_sql)
 
-        n = try_mutation(self.spark, ch_sql)
+        settings = self._dialect_settings()
+        n = try_mutation(self.spark, ch_sql, settings)
         if n is not None:
             return n
         from clickhouse_arrow_spark.ddl import try_alter
 
-        if try_alter(self.spark, ch_sql):
+        if try_alter(self.spark, ch_sql, settings):
             return None
         m = _OPTIMIZE_RE.match(ch_sql)
         if m:
@@ -1093,7 +1104,7 @@ class Client:
 
             or_replace = bool(m.group(1))
             fname = m.group(3).strip("`")
-            macros = self.__dict__.setdefault("_sql_macros", {})
+            macros = self._sql_macros
             if fname in known_ch_functions():
                 raise QueryError(
                     f"CREATE FUNCTION {fname}: the name collides with "
@@ -1129,7 +1140,7 @@ class Client:
         )
         if m:
             fname = m.group(2).strip("`")
-            macros = self.__dict__.setdefault("_sql_macros", {})
+            macros = self._sql_macros
             if fname not in macros and not m.group(1):
                 raise QueryError(
                     f"DROP FUNCTION: no user-defined function {fname!r}"
@@ -1686,7 +1697,7 @@ class Client:
             " ".join(ch_sql.split()),
             tuple(sorted((params or {}).items())),
         )
-        cache = self.__dict__.setdefault("_query_cache", {})
+        cache = self._query_cache
         if key in cache:
             return cache[key]
         df = self.query_ch(ch_sql, params).persist()
@@ -1702,7 +1713,7 @@ class Client:
     def clear_query_cache(self) -> int:
         """Unpersist and drop every cached result; returns the number of
         entries dropped (`SYSTEM DROP QUERY CACHE`)."""
-        cache = self.__dict__.get("_query_cache", {})
+        cache = self._query_cache
         n = len(cache)
         for df in cache.values():
             df.unpersist()
@@ -1928,7 +1939,7 @@ class Client:
             return False
         if not _re.search(r"(?i)\bENGINE\s*=", ch_sql):
             return False  # no ENGINE clause: already Spark DDL
-        parsed = parse_create_table(ch_sql)
+        parsed = parse_create_table(ch_sql, self._dialect_settings())
         if parsed is None:
             return False
         database, table, columns, options, ctas = parsed
@@ -2063,8 +2074,8 @@ class Client:
         import re as _re
 
         from clickhouse_arrow_spark import formats
-        from clickhouse_arrow_spark.dialect import (
-            UntranslatableFunctionError,
+        from clickhouse_arrow_spark.dialect import UntranslatableFunctionError
+        from clickhouse_arrow_spark.dialect.sqltext import (
             _find_clean,
             _find_matching_paren,
             _split_top_args,
@@ -2385,12 +2396,12 @@ class Client:
         the CH dialect like everything else. Nested macros expand up to
         a fixed depth; parameters substitute as parenthesized argument
         expressions (call-by-text, the CH executor's semantics)."""
-        macros = self.__dict__.get("_sql_macros")
+        macros = self._sql_macros
         if not macros:
             return ch_sql
         import re as _re
 
-        from clickhouse_arrow_spark.dialect import (
+        from clickhouse_arrow_spark.dialect.sqltext import (
             _find_matching,
             _scan_mask,
         )
@@ -2465,7 +2476,7 @@ class Client:
         import re as _re
 
         from clickhouse_arrow_spark import formats
-        from clickhouse_arrow_spark.dialect import (
+        from clickhouse_arrow_spark.dialect.sqltext import (
             _find_matching_paren,
             _split_top_args,
         )
@@ -2697,7 +2708,7 @@ class Client:
         query_log) are materialized as a point-in-time temp view when
         referenced — the same driver-side catalog introspection class
         as fetch_tables, never a data scan."""
-        from clickhouse_arrow_spark.dialect import _scan_mask
+        from clickhouse_arrow_spark.dialect.sqltext import _scan_mask
 
         if "system" not in ch_sql.lower():
             return ch_sql
@@ -2838,9 +2849,7 @@ class Client:
                 "corr", "covarPop", "covarSamp", "stddevPop",
                 "stddevSamp", "varPop", "varSamp", "topK",
             }
-            names_all = set(known_ch_functions()) | set(
-                self.__dict__.get("_sql_macros", {})
-            )
+            names_all = set(known_ch_functions()) | set(self._sql_macros)
             df = self.spark.createDataFrame(
                 sorted((n, n in aggish) for n in names_all),
                 "name string, is_aggregate boolean",
@@ -3129,7 +3138,7 @@ class Client:
         struct-metadata lookup per row), never on a relational hot
         path — the plan-shape tests that forbid BatchEvalPython do not
         cover this function by design."""
-        if self.__dict__.get("_variant_udf_registered"):
+        if self._variant_udf_registered:
             return
         self.spark.udf.register("ch_variant_type", _ch_variant_type_name, "string")
         self.spark.udf.register(
@@ -3141,7 +3150,7 @@ class Client:
         """Register the normalizeUTF8* family once per client —
         Arrow-batched pandas UDFs over stdlib unicodedata (the dialect
         compiles normalizeUTF8NFC -> ch_normalize_nfc etc.)."""
-        if self.__dict__.get("_normalize_udfs_registered"):
+        if self._normalize_udfs_registered:
             return
         from pyspark.sql.functions import pandas_udf
 
@@ -3163,7 +3172,7 @@ class Client:
         """Register the base58/punycode/IDNA/gamma scalar family once
         per client — Arrow-batched pandas UDFs over stdlib codecs/math
         (functions/ch_functions._py_udf_inventory)."""
-        if self.__dict__.get("_py_udfs_registered"):
+        if self._py_udfs_registered:
             return
         from pyspark.sql.functions import pandas_udf
 
@@ -3482,7 +3491,7 @@ class Client:
     ) -> None:
         import datetime as _dt
 
-        log = self.__dict__.setdefault("_query_log", [])
+        log = self._query_log
         log.append((qid, sql, _dt.datetime.fromtimestamp(t0), qtype, error))
         if len(log) > self.QUERY_LOG_MAX:
             del log[: len(log) - self.QUERY_LOG_MAX]
@@ -3493,7 +3502,7 @@ class Client:
         ExceptionBeforeStart). Planning is lazy in Spark, so there is
         no reliable per-query finish row without subscribing to events
         (`subscribe_events(qid)` carries the runtime side)."""
-        rows = list(self.__dict__.get("_query_log", []))
+        rows = list(self._query_log)
         return self.spark.createDataFrame(
             rows,
             "query_id string, query string, event_time timestamp, "

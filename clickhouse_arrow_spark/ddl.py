@@ -425,7 +425,7 @@ def rewrite_final(spark: SparkSession, sql: str) -> str:
     - ``AggregatingMergeTree`` → merge every AggregateFunction state
       column per ORDER BY key. ClickHouse states are opaque bytes the
       engine merges; ours are the TRANSPARENT values the -State algebra
-      writes (dialect.py), so each column's merge is plain SQL (sum
+      writes (the dialect), so each column's merge is plain SQL (sum
       states re-sum, avg structs add componentwise, uniq HLL sketches
       `hll_union_agg`, set/array states flatten). The output column is
       again a STATE — reading finalized values stays
@@ -438,7 +438,7 @@ def rewrite_final(spark: SparkSession, sql: str) -> str:
     SchemaError. Matches inside string literals or quoted identifiers
     are left untouched.
     """
-    from clickhouse_arrow_spark.dialect import _find_clean  # shared masking
+    from clickhouse_arrow_spark.dialect.sqltext import _find_clean  # shared masking
 
     while True:
         m = _find_clean(_FROM_FINAL_RE, sql, depth0=False)
@@ -771,7 +771,7 @@ def mutate_update(
     """`ALTER TABLE t UPDATE a = expr, b = expr WHERE cond`: each
     assigned column becomes CASE WHEN cond THEN expr ELSE col END — one
     projection + rewrite, no shuffle. Returns rows matched."""
-    from clickhouse_arrow_spark.dialect import _split_top_args
+    from clickhouse_arrow_spark.dialect.sqltext import _split_top_args
 
     pairs = []
     for a in _split_top_args(assignments):
@@ -798,14 +798,16 @@ def mutate_update(
     return matched
 
 
-def try_mutation(spark: SparkSession, ch_sql: str) -> int | None:
+def try_mutation(
+    spark: SparkSession, ch_sql: str, dialect_settings=None
+) -> int | None:
     """Dispatch a ClickHouse mutation statement; None if `ch_sql` is not
     one. WHERE expressions run through the CH→Spark translation."""
     from clickhouse_arrow_spark.dialect import translate_ch_expr
 
     def cond(expr: str) -> str:
         # CH treats integers as booleans in condition position
-        out = translate_ch_expr(expr)
+        out = translate_ch_expr(expr, dialect_settings)
         return f"({out} <> 0)" if re.fullmatch(r"\d+", out.strip()) else out
 
     # `... IN PARTITION <pid> WHERE ...` scopes the mutation to one
@@ -839,7 +841,8 @@ def try_mutation(spark: SparkSession, ch_sql: str) -> int | None:
                 raise SchemaError(
                     "IN PARTITION: table declares no PARTITION BY"
                 )
-            part_pred = f"(({translate_ch_expr(expr)}) = {pid})"
+            pexpr = translate_ch_expr(expr, dialect_settings)
+            part_pred = f"(({pexpr}) = {pid})"
 
     def scoped(where: str) -> str:
         w = cond(where)
@@ -853,7 +856,7 @@ def try_mutation(spark: SparkSession, ch_sql: str) -> int | None:
     m = _ALTER_UPDATE_RE.match(ch_sql)
     if m:
         n = mutate_update(
-            spark, m.group(1), translate_ch_expr(m.group(2)),
+            spark, m.group(1), translate_ch_expr(m.group(2), dialect_settings),
             scoped(m.group(3)),
         )
         _rebuild_projections_after_mutation(spark, m.group(1))
@@ -947,7 +950,7 @@ def rewrite_sample(spark: SparkSession, sql: str) -> str:
     without SAMPLE BY metadata fall through to the dialect's TABLESAMPLE
     mapping (fraction right, rows per-run) — per clause, so a later
     cataloged table in the same statement still rewrites."""
-    from clickhouse_arrow_spark.dialect import _scan_mask
+    from clickhouse_arrow_spark.dialect.sqltext import _scan_mask
 
     pos = 0
     while True:
@@ -1011,7 +1014,7 @@ def _split_name(qualified: str) -> tuple[str, str]:
     return "default", _unq(parts[0])
 
 
-def parse_create_table(ch_sql: str):
+def parse_create_table(ch_sql: str, dialect_settings=None):
     """Parse a ClickHouse `CREATE TABLE` statement into the inputs of
     :func:`create_table_ddl` (reference DDL grammar: schema.rs renders
     the same clause set the reference's CreateOptions carries).
@@ -1029,10 +1032,10 @@ def parse_create_table(ch_sql: str):
     TYPE bloom_filter(...)` maps to parquet bloom filters; other index
     types are dropped with the skipping handled by min/max footers.
     """
-    from clickhouse_arrow_spark.dialect import (
+    from clickhouse_arrow_spark.dialect import translate_ch_sql
+    from clickhouse_arrow_spark.dialect.sqltext import (
         _find_matching_paren,
         _split_top_args,
-        translate_ch_sql,
     )
 
     m = _CREATE_TABLE_RE.match(ch_sql.strip().rstrip(";"))
@@ -1080,7 +1083,9 @@ def parse_create_table(ch_sql: str):
                 if md:
                     defaults[col] = (
                         md.group(1).upper(),
-                        translate_ch_sql(md.group(2).strip()),
+                        translate_ch_sql(
+                            md.group(2).strip(), settings=dialect_settings
+                        ),
                     )
                 elif re.match(r"(?is)^ALIAS\b", mods):
                     raise SchemaError(
@@ -1849,7 +1854,9 @@ def restore_table(spark: SparkSession, table: str, src: str) -> None:
         spark.sql(f"MSCK REPAIR TABLE {table}")
 
 
-def try_alter(spark: SparkSession, ch_sql: str) -> bool:
+def try_alter(
+    spark: SparkSession, ch_sql: str, dialect_settings=None
+) -> bool:
     """ClickHouse ALTER forms with no direct Spark-parquet statement:
 
     - ``MODIFY TTL expr`` / ``MODIFY SETTING k = v`` / ``RESET SETTING
@@ -1888,7 +1895,9 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
                 f"expression on {table}"
             )
         mutate_update(
-            spark, table, f"`{col}` = {translate_ch_expr(mat[col])}", "true"
+            spark, table,
+            f"`{col}` = {translate_ch_expr(mat[col], dialect_settings)}",
+            "true",
         )
         _rebuild_projections_after_mutation(spark, table)
         return True
@@ -1978,7 +1987,7 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
                 f"MODIFY QUERY: {table} is not a materialized view "
                 "target (no recorded mv_source)"
             )
-        new_sql = _t(mm.group(1).strip())
+        new_sql = _t(mm.group(1).strip(), settings=dialect_settings)
         msrc = re.search(
             r"(?is)\bFROM\s+((?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))?)",
             new_sql,
@@ -2126,7 +2135,7 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
         )
         if expr:
             lit = val if val.replace(".", "", 1).isdigit() else f"'{val}'"
-            pred = translate_ch_expr(f"({expr}) = {lit}")
+            pred = translate_ch_expr(f"({expr}) = {lit}", dialect_settings)
             mutate_delete(spark, table, pred)
             _rebuild_projections_after_mutation(spark, table)
             return True
@@ -2162,7 +2171,7 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
         return True
     mm = re.match(r"(?is)^MODIFY\s+TTL\s+(.+)$", action)
     if mm:
-        ttl = translate_ch_expr(mm.group(1).strip())
+        ttl = translate_ch_expr(mm.group(1).strip(), dialect_settings)
         spark.sql(
             f"ALTER TABLE {table} SET TBLPROPERTIES "
             f"('clickhouse_arrow_spark.ttl' = '{ttl}')"
@@ -2238,7 +2247,7 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
     )
     if mm:
         # default-only change (CH allows omitting the type)
-        expr = translate_ch_expr(mm.group(2).strip())
+        expr = translate_ch_expr(mm.group(2).strip(), dialect_settings)
         spark.sql(
             f"ALTER TABLE {table} ALTER COLUMN "
             f"`{mm.group(1).strip('`')}` SET DEFAULT {expr}"
@@ -2265,7 +2274,7 @@ def try_alter(spark: SparkSession, ch_sql: str) -> bool:
             spark.table(table).withColumn(col, F.col(col).cast(dt)),
         )
         if mm.group(3):
-            expr = translate_ch_expr(mm.group(3).strip())
+            expr = translate_ch_expr(mm.group(3).strip(), dialect_settings)
             spark.sql(
                 f"ALTER TABLE {table} ALTER COLUMN `{col}` "
                 f"SET DEFAULT {expr}"

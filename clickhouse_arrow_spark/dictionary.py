@@ -300,7 +300,7 @@ def rewrite_dict_calls(spark: SparkSession, sql: str) -> str:
     scalar subqueries against the cataloged dictionary table. Runs
     before the textual CH→Spark translation (it needs the catalog);
     calls inside string literals are untouched."""
-    from clickhouse_arrow_spark.dialect import (
+    from clickhouse_arrow_spark.dialect.sqltext import (
         _find_clean,
         _find_matching_paren,
         _split_top_args,
@@ -452,7 +452,7 @@ def rewrite_join_get(spark: SparkSession, sql: str) -> str:
     RAM-resident in CH) Join table, so the fact side never shuffles.
     joinGet returns the attribute type's DEFAULT on a miss (CH ANY-join
     semantics), joinGetOrNull returns NULL."""
-    from clickhouse_arrow_spark.dialect import (
+    from clickhouse_arrow_spark.dialect.sqltext import (
         _find_clean,
         _find_matching_paren,
         _split_top_args,

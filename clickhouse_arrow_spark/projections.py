@@ -64,7 +64,7 @@ def _parse_projection_select(select_sql: str) -> tuple[list[str], list[dict]]:
     """`SELECT k1, k2, agg(x) [AS a], ... GROUP BY k1, k2` -> (keys,
     agg specs). Only the mergeable aggregate family is accepted — a
     projection that cannot re-merge would silently return partials."""
-    from clickhouse_arrow_spark.dialect import _split_top_args
+    from clickhouse_arrow_spark.dialect.sqltext import _split_top_args
 
     m = re.match(r"(?is)^\s*SELECT\s+(.*?)\s+GROUP\s+BY\s+(.+?)\s*$",
                  select_sql)
@@ -273,7 +273,7 @@ def route_projection(spark: SparkSession, ch_sql: str) -> str | None:
     fallback semantics). Purely textual and conservative: any
     construct outside the matched shape disables routing rather than
     risking a wrong answer."""
-    from clickhouse_arrow_spark.dialect import _split_top_args
+    from clickhouse_arrow_spark.dialect.sqltext import _split_top_args
 
     m = _ROUTE_RE.match(ch_sql)
     if not m:

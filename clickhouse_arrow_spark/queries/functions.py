@@ -587,7 +587,7 @@ def events_funnel_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY u.user_id
     """,
     doc="Round 10: windowFunnel(window)(ts, cond...) as a REAL SQL "
-    "aggregate through the dialect (dialect._window_funnel_fmt — the "
+    "aggregate through the dialect (dialect.aggregates._window_funnel_fmt — the "
     "CH-exact per-level fold emitted as one guarded collect + "
     "aggregate() expression, same algorithm the operator runs). The "
     "oracle is the exists-subsequence formulation, provably equal to "

@@ -2586,7 +2586,7 @@ def q_util_sweep_scalar_wave(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY number
     """,
     doc="ClickHouse numbers(offset, n) table function -> Spark range() "
-    "TVF (dialect._rewrite_numbers_tvf), with weighted-quantile "
+    "TVF (dialect.statements._rewrite_numbers_tvf), with weighted-quantile "
     "parametrics computed over a numbers() scan in a correlated "
     "cross-join-free form; DuckDB's range() TVF is the oracle.",
     tags=("dialect", "tvf", "numbers"),
@@ -5574,7 +5574,7 @@ def q_util_sweep_wave19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="ClickHouse time-decay window family (round-9: "
     "exponentialTimeDecayedSum/Count/Max/Avg + exponentialMovingAverage "
-    "as real window functions, dialect._rewrite_exp_decay): each "
+    "as real window functions, dialect.statements._rewrite_exp_decay): each "
     "factors through w(T,t_i) = w(T,t0)*w(t0,t_i) into ONE ordinary "
     "windowed SUM/MAX times a per-row prefactor — whole-stage codegen, "
     "no per-row state, no collect_list. t0 = per-partition MAX "

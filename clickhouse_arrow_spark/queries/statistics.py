@@ -335,7 +335,7 @@ def q_timeseries_moving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="ClickHouse greatCircleDistance / greatCircleAngle (exact "
     "haversine on CH's sphere radius; CH's own fast sincos "
-    "approximation differs <0.05%, documented in dialect.py) over "
+    "approximation differs <0.05%, documented in dialect.geo) over "
     "pseudo-coordinates derived from c_custkey.",
     tags=("geo", "scalar"),
 )

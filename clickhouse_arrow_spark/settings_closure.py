@@ -21,7 +21,7 @@ Dispositions
                            namespaced conf or statement flag
 - ``guarded``           -> value matching this engine's semantics is
                            accepted; a diverging value RAISES with a
-                           recipe (dialect._SEMANTIC_SETTINGS)
+                           recipe (dialect.settings._SEMANTIC_SETTINGS)
 - ``accepted-neutral``  -> no behavior change here by construction
                            (execution hint Spark handles differently);
                            kept introspectable under the namespaced

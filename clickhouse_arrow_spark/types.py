@@ -439,7 +439,7 @@ def ch_type_to_spark(
         return T.ArrayType(T.ArrayType(T.ArrayType(_GEO_POINT, False), False), False), nullable
     if n == "AggregateFunction":
         # ClickHouse states are opaque bytes; ours are TRANSPARENT (the
-        # values the -State/-Merge algebra in dialect.py produces), so
+        # values the -State/-Merge algebra in dialect.lookup produces), so
         # an AggregatingMergeTree column gets the state's actual Spark
         # type: mergeable with plain SQL, readable by <fn>Merge, and
         # foldable by FROM ... FINAL (ddl.rewrite_final). uniq rides

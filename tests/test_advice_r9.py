@@ -194,21 +194,3 @@ def test_touint64_truncates_toward_zero(client):
     assert int(r["big"]) == 12345678901234567890
     assert int(r["wrap"]) == 18446744073709551615
     assert int(r["wrapf"]) == 18446744073709551614
-
-
-# ---- dialect dispatch dead-entry invariant (verdict observation #1) --
-
-def test_no_shadowed_simple_renames():
-    """Importing the dialect runs _assert_no_shadowed_renames; probing
-    it directly documents the invariant: no name may sit in
-    _SIMPLE_RENAMES while a _fmt branch shadows it (the r9 audit
-    removed 10 dead entries: intDiv, arrayStringConcat, toString,
-    arrayIntersect, arrayMin/Max, extractAll, left/rightUTF8,
-    positionUTF8)."""
-    from clickhouse_arrow_spark import dialect
-
-    dialect._assert_no_shadowed_renames()  # must not raise
-    assert "intDiv" not in dialect._SIMPLE_RENAMES
-    # the documented dual-entries stay
-    for n in ("trimBoth", "trimLeft", "trimRight", "splitByChar"):
-        assert n in dialect._SIMPLE_RENAMES

@@ -2407,12 +2407,12 @@ def test_settings_tail_does_not_leak_across_threads():
 def test_nested_calls_run_statement_passes_once(monkeypatch):
     """Function arguments are scanned, not re-translated as statements:
     a depth-16 nesting runs the whole-statement passes exactly once."""
-    from clickhouse_arrow_spark import dialect
+    from clickhouse_arrow_spark.dialect import scan
 
     calls = []
-    strip = dialect._strip_output_clauses
+    strip = scan._strip_output_clauses
     monkeypatch.setattr(
-        dialect, "_strip_output_clauses",
+        scan, "_strip_output_clauses",
         lambda sql: calls.append(sql) or strip(sql),
     )
     expr = "x"
@@ -2447,3 +2447,94 @@ def test_settings_argument_is_overridden_by_statement_tail():
         + " SETTINGS splitby_max_substrings_includes_remaining_string = 0",
         settings=legacy,
     ) == f"SELECT {_SPLIT_MODERN} FROM t"
+
+
+# ---- the function registry: declared argument counts ---------------------
+
+@pytest.mark.parametrize(
+    "call, message",
+    [
+        ("sumIf(a)", "sumIf() takes 2 arguments, got 1"),
+        ("toYYYYMM()", "toYYYYMM() takes 1 argument, got 0"),
+        ("intDiv(a)", "intDiv() takes 2 arguments, got 1"),
+        ("L2Distance(a, b, c)", "L2Distance() takes 2 arguments, got 3"),
+        ("multiIf(a, b)", "multiIf() takes at least 3 arguments, got 2"),
+        ("multiIf(c1, a, c2, b)",
+         "multiIf() takes an odd number of arguments, at least 3 "
+         "(cond1, then1, ..., else), got 4"),
+    ],
+)
+def test_wrong_argument_count_refuses(call, message):
+    """A call outside the formatter's declared argument counts refuses
+    with the accepted counts instead of crashing (IndexError) or
+    silently dropping an argument."""
+    from clickhouse_arrow_spark.dialect import UntranslatableFunctionError
+
+    with pytest.raises(UntranslatableFunctionError) as err:
+        translate_ch_sql(f"SELECT {call} FROM t")
+    assert str(err.value) == message
+
+
+def test_registry_walk_refuses_cleanly():
+    """Every registered entry, called with placeholder arguments at its
+    minimum and maximum counts (minimum + 3 when unbounded), returns
+    SQL text or raises UntranslatableFunctionError — never any other
+    exception; one argument outside the range refuses naming the
+    accepted counts."""
+    import re
+    import time
+
+    from clickhouse_arrow_spark.dialect import UntranslatableFunctionError
+    from clickhouse_arrow_spark.dialect.registry import FUNCTIONS
+
+    def counts(lo, hi):
+        return sorted({lo, lo + 3 if hi is None else hi})
+
+    t0 = time.perf_counter()
+    crashes = []
+    for (name, parametric), entry in FUNCTIONS.items():
+        pcounts = counts(*entry.params) if parametric else [None]
+        for pn in pcounts:
+            params = None if pn is None else [f"p{i}" for i in range(pn)]
+            for n in counts(entry.lo, entry.hi):
+                try:
+                    out = entry([f"c{i}" for i in range(n)], params)
+                    assert isinstance(out, str), (name, n)
+                except UntranslatableFunctionError:
+                    pass
+                except Exception as exc:  # noqa: BLE001 - the walk's point
+                    crashes.append((name, pn, n, repr(exc)))
+            outside = [entry.lo - 1] if entry.lo else []
+            if entry.hi is not None:
+                outside.append(entry.hi + 1)
+            for n in outside:
+                with pytest.raises(
+                    UntranslatableFunctionError,
+                    match=rf"^{re.escape(name)}\(\) takes .+, got {n}( — |$)",
+                ):
+                    entry([f"c{i}" for i in range(n)], params)
+    assert crashes == []
+    assert time.perf_counter() - t0 < 5
+
+
+def test_registering_a_name_twice_raises():
+    """One entry per name: a second registration fails at import instead
+    of silently shadowing the first (the old if-chain's dead-branch
+    trap)."""
+    from clickhouse_arrow_spark.dialect.registry import FUNCTIONS, function
+
+    before = FUNCTIONS[("intDiv", False)]
+    with pytest.raises(ValueError, match="intDiv is registered twice"):
+        function("intDiv", args=2)(lambda a: "x")
+    assert FUNCTIONS[("intDiv", False)] is before
+
+
+def test_known_functions_include_the_finite_families():
+    from clickhouse_arrow_spark.dialect import known_ch_functions
+
+    known = known_ch_functions()
+    for name in ("toInt8", "toUInt32", "addDays", "subtractSeconds",
+                 "cityHash64", "toRelativeDayNum", "emptyArrayString",
+                 "toInt32OrNull", "toDecimal64OrDefault",
+                 "visitParamExtractInt", "simpleJSONHas"):
+        assert name in known

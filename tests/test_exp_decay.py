@@ -1,7 +1,7 @@
 """exponentialTimeDecayedSum/Count/Max/Avg + exponentialMovingAverage
 (round-9 VERDICT item #3): parameterized CH window functions factored
 into one windowed SUM/MAX times a per-row prefactor
-(dialect._rewrite_exp_decay), plus the EMA aggregate form as an exact
+(dialect.statements._rewrite_exp_decay), plus the EMA aggregate form as an exact
 HOF fold. Formulae: CH window-functions docs;
 base/ExponentiallySmoothedCounter.h for the EMA normalization."""
 

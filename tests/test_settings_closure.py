@@ -62,10 +62,8 @@ def test_rows_well_formed():
 def test_shim_keys_all_have_rows():
     """Every name the settings shim maps and every semantic guard in
     the dialect must appear in the closure — no hidden dispositions."""
-    from clickhouse_arrow_spark.dialect import (
-        _SEMANTIC_SETTINGS,
-        HONORED_SETTINGS,
-    )
+    from clickhouse_arrow_spark.dialect import HONORED_SETTINGS
+    from clickhouse_arrow_spark.dialect.settings import _SEMANTIC_SETTINGS
     from clickhouse_arrow_spark.settings import _CH_TO_SPARK
 
     for name in _CH_TO_SPARK:

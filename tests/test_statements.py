@@ -1182,3 +1182,51 @@ def test_session_dialect_settings_reach_every_statement(client, spark):
         spark.conf.unset(conf)
         spark.sql("DROP VIEW IF EXISTS setdb.v")
         spark.sql("DROP DATABASE IF EXISTS setdb CASCADE")
+
+
+def test_create_function_refuses_a_registered_name(client):
+    """Names the translator registers in a loop (the toInt8 wrap-around
+    casts, addDays, ...) are built-ins too: a macro may not replace
+    them."""
+    from clickhouse_arrow_spark.errors import QueryError
+
+    with pytest.raises(QueryError, match="collides with a built-in"):
+        client.execute_ch("CREATE FUNCTION toInt8 AS (x) -> x")
+    assert client.query_ch("SELECT toInt8(300) AS v").collect()[0].v == 44
+
+
+def test_system_functions_lists_family_members(client):
+    rows = client.query_ch(
+        "SELECT name FROM system.functions WHERE name IN "
+        "('toInt8', 'addDays', 'cityHash64', 'toRelativeDayNum')"
+    ).collect()
+    assert sorted(r["name"] for r in rows) == [
+        "addDays", "cityHash64", "toInt8", "toRelativeDayNum",
+    ]
+
+
+def test_session_dialect_settings_reach_mutations(client, spark):
+    """A session `SET` of a dialect setting applies to the expressions
+    of an ALTER TABLE ... UPDATE as it does to query_ch."""
+    conf = ("spark.clickhouse_arrow_spark.setting."
+            "splitby_max_substrings_includes_remaining_string")
+    spark.sql("CREATE DATABASE IF NOT EXISTS setdb")
+    create_table(
+        spark, "setdb", "mut", [("k", "Int64"), ("s", "String")],
+        CreateOptions(engine="MergeTree", order_by=("k",)),
+    )
+    client.insert(
+        "setdb.mut", spark.createDataFrame([(1, "x")], "k BIGINT, s STRING")
+    )
+    client.query_ch(
+        "SET splitby_max_substrings_includes_remaining_string = 1"
+    )
+    try:
+        client.execute_ch(
+            "ALTER TABLE setdb.mut UPDATE "
+            "s = splitByChar(',', 'a,b,c,d', 2)[2] WHERE k = 1"
+        )
+        assert spark.table("setdb.mut").collect()[0].s == "b,c,d"
+    finally:
+        spark.conf.unset(conf)
+        spark.sql("DROP DATABASE IF EXISTS setdb CASCADE")
