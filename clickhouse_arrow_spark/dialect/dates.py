@@ -9,6 +9,12 @@ from .conversions import _fmt_cast
 from .registry import Args, UntranslatableFunctionError, function
 from .settings import _SETTINGS
 
+#: what a refused trailing timezone argument says to write instead
+_TZ_USAGE = (
+    "a timezone argument is not translated: pass toTimeZone(x, tz) "
+    "as the value, or toUTCTimestamp(s, tz) for a string read in tz"
+)
+
 
 #: ClickHouse formatDateTime/parseDateTime specifiers -> Spark (Java)
 #: datetime pattern fields. %i is minutes; %M is the FULL MONTH NAME in
@@ -85,27 +91,29 @@ def _ch_dt_spec_to_java(fmt: str, fn_name: str) -> str:
             i += 1
     flush()
     return "".join(out)
-function("toYYYYMM", args=1)(
+function("toYYYYMM", args=1, usage=_TZ_USAGE)(
     lambda a: f"CAST(year({a[0]}) * 100 + month({a[0]}) AS INT)")
-function("toYYYYMMDD", args=1)(
+function("toYYYYMMDD", args=1, usage=_TZ_USAGE)(
     lambda a: f"CAST(year({a[0]}) * 10000 + month({a[0]}) * 100 + day({a[0]}) AS INT)"
 )
 # CH returns Date (not DateTime) from the month-and-coarser
 # toStartOf* family — wave-36's one delta, closed in round 11. The
 # sub-day family (toStartOfDay/Hour/...) stays DateTime on both
 # engines.
-function("toStartOfMonth", args=1)(
+function("toStartOfMonth", args=1, usage=_TZ_USAGE)(
     lambda a: f"CAST(date_trunc('month', {a[0]}) AS DATE)")
-function("toStartOfDay", args=1)(lambda a: f"date_trunc('day', {a[0]})")
-function("toStartOfHour", args=1)(lambda a: f"date_trunc('hour', {a[0]})")
-function("toStartOfQuarter", args=1)(
+function("toStartOfDay", args=1, usage=_TZ_USAGE)(
+    lambda a: f"date_trunc('day', {a[0]})")
+function("toStartOfHour", args=1, usage=_TZ_USAGE)(
+    lambda a: f"date_trunc('hour', {a[0]})")
+function("toStartOfQuarter", args=1, usage=_TZ_USAGE)(
     lambda a: f"CAST(date_trunc('quarter', {a[0]}) AS DATE)")
 
 # CH default (mode 0) weeks start SUNDAY; Spark date_trunc('week')
 # starts Monday. weekday() is Mon=0..Sun=6, so days-since-Sunday
 # is (weekday(x)+1) % 7. Mode 1/3 (Monday weeks) maps to
 # date_trunc directly.
-@function("toStartOfWeek", args=(1, 2))
+@function("toStartOfWeek", args=(1, 2), usage=_TZ_USAGE)
 def start_of_week(a: Args) -> str:
     mode = a[1].strip() if len(a) > 1 else "0"
     if mode in ("1", "3"):
@@ -116,18 +124,18 @@ def start_of_week(a: Args) -> str:
 # a straight rename shifts every value; weekday() (Mon=0) + 1
 # reproduces the CH numbering exactly.
 function("toDayOfWeek", args=1)(lambda a: f"(weekday({a[0]}) + 1)")
-function("toDate", args=1)(_fmt_cast("DATE"))
+function("toDate", args=1, usage=_TZ_USAGE)(_fmt_cast("DATE"))
 # Date32 SATURATES at its range bounds [1900-01-01, 2299-12-31]
 # (wave 35): toDate32('2300-01-01') = 2299-12-31 in CH, where a
 # plain DATE cast would pass the value through. NULL guard:
 # Spark's least/greatest SKIP nulls, so without it a NULL input
 # would come back as a clamp bound.
-function("toDate32", args=(1, 2))(lambda a: (
+function("toDate32", args=1, usage=_TZ_USAGE)(lambda a: (
     f"IF(CAST({a[0]} AS DATE) IS NULL, CAST(NULL AS DATE), "
     f"greatest(least(CAST({a[0]} AS DATE), DATE '2299-12-31'), "
     f"DATE '1900-01-01'))"
 ))
-function("toDateTime", args=1)(_fmt_cast("TIMESTAMP"))
+function("toDateTime", args=1, usage=_TZ_USAGE)(_fmt_cast("TIMESTAMP"))
 
 for name in (
     "formatDateTime", "parseDateTime", "parseDateTimeOrNull",
@@ -138,7 +146,8 @@ for name in (
     # letters are quoted (Java patterns treat bare letters as
     # fields); unknown specifiers refuse instead of silently
     # formatting something else.
-    @function(name, args=2)
+    @function(name, args=2, usage=_TZ_USAGE if name == "formatDateTime"
+              else f"the timezone form is toUTCTimestamp({name}(s, fmt), tz)")
     def dt_pattern_fmt(a: Args, _name=name) -> str:
         fmt = a[1].strip()
         if not (fmt.startswith("'") and fmt.endswith("'")):
@@ -294,20 +303,25 @@ function("toTimeZone", "toTimezone", args=2)(
 function("timeZone", args=0)(lambda a: "current_timezone()")
 # Spark timestamps carry no per-value zone; the session zone is
 # the zone every value renders in
-function("timeZoneOf", args=0)(lambda a: "current_timezone()")
+function("timeZoneOf", args=1)(lambda a: "current_timezone()")
 function("timeZoneOffset", args=1)(
     lambda a: f"CAST(unix_timestamp({a[0]}) - "
     f"unix_timestamp(to_utc_timestamp({a[0]}, current_timezone())) "
     f"AS INT)"
 )
-function("toStartOfYear", args=1)(
+function("toStartOfYear", args=1, usage=_TZ_USAGE)(
     lambda a: f"CAST(date_trunc('year', {a[0]}) AS DATE)")
 # Spark date_trunc('week') is Monday-start == CH toMonday
-function("toMonday", args=1)(
+function("toMonday", args=1, usage=_TZ_USAGE)(
     lambda a: f"CAST(date_trunc('week', {a[0]}) AS DATE)")
-function("toDayOfYear", args=1)(lambda a: f"dayofyear({a[0]})")
-function("toUnixTimestamp", args=1)(lambda a: f"unix_timestamp({a[0]})")
-function("fromUnixTimestamp", args=1)(lambda a: f"timestamp_seconds({a[0]})")
+function("toDayOfYear", args=1, usage=_TZ_USAGE)(
+    lambda a: f"dayofyear({a[0]})")
+function("toUnixTimestamp", args=1, usage="the timezone only changes how a "
+         "string parses: toUnixTimestamp(toUTCTimestamp(s, tz)); drop it "
+         "for a DateTime")(lambda a: f"unix_timestamp({a[0]})")
+function("fromUnixTimestamp", args=1, usage="the format form is "
+         "formatDateTime(fromUnixTimestamp(x), fmt)")(
+    lambda a: f"timestamp_seconds({a[0]})")
 
 # add/subtract date arithmetic keeps the timestamp type (CH addDays
 # on DateTime stays DateTime; Spark date_add degrades to DATE, so
@@ -393,9 +407,10 @@ for name in ("dateDiff", "date_diff", "timestampDiff", "timestamp_diff"):
 # Spark timestamps ARE microsecond-precision: micro-truncation
 # is the identity, and nanosecond precision does not exist to
 # truncate further
-function("toStartOfMicrosecond", "toStartOfNanosecond", args=1)(
+function("toStartOfMicrosecond", "toStartOfNanosecond", args=1,
+         usage=_TZ_USAGE)(
     lambda a: f"CAST({a[0]} AS TIMESTAMP)")
-function("toStartOfMillisecond", args=1)(lambda a: (
+function("toStartOfMillisecond", args=1, usage=_TZ_USAGE)(lambda a: (
     f"timestamp_millis(unix_millis(CAST({a[0]} AS TIMESTAMP)))"
 ))
 
@@ -450,10 +465,12 @@ def ptd_fmt(a: Args) -> str:
     )
 
 # ---- more dates -----------------------------------------------------
-function("toStartOfMinute", args=1)(lambda a: f"date_trunc('minute', {a[0]})")
-function("toStartOfSecond", args=1)(lambda a: f"date_trunc('second', {a[0]})")
+function("toStartOfMinute", args=1, usage=_TZ_USAGE)(
+    lambda a: f"date_trunc('minute', {a[0]})")
+function("toStartOfSecond", args=1, usage=_TZ_USAGE)(
+    lambda a: f"date_trunc('second', {a[0]})")
 function("yesterday", args=0)(lambda a: "date_sub(current_date(), 1)")
-function("toYYYYMMDDhhmmss", args=1)(lambda a: (
+function("toYYYYMMDDhhmmss", args=1, usage=_TZ_USAGE)(lambda a: (
     f"CAST(date_format({a[0]}, 'yyyyMMddHHmmss') AS BIGINT)"
 ))
 function("addQuarters", args=2)(
@@ -591,7 +608,7 @@ function("UTCTimestamp", args=0)(lambda a: "current_timestamp()")
 # native cast, then the common human formats CH accepts, then
 # 9-10 digit strings as unix seconds; unparseable input raises
 # (CH throws too) via raise_error
-function("parseDateTimeBestEffort", args=1)(lambda a: (
+function("parseDateTimeBestEffort", args=1, usage=_TZ_USAGE)(lambda a: (
     f"coalesce({_best_effort_ts(a[0])}, "
     f"CAST(raise_error(concat('parseDateTimeBestEffort: cannot "
     f"parse ', {a[0]})) AS TIMESTAMP))"
@@ -625,7 +642,8 @@ function("toLastDayOfWeek", args=1)(
     lambda a: f"date_sub(next_day({a[0]}, 'SU'), 1)")
 # Spark's current_timestamp is query-constant; CH's nowInBlock
 # advances per block — observable only in very long scans
-function("nowInBlock", args=0)(lambda a: "current_timestamp()")
+function("nowInBlock", args=0, usage="the timezone form is "
+         "toTimeZone(nowInBlock(), tz)")(lambda a: "current_timestamp()")
 function("timezone", "serverTimezone", "serverTimeZone", args=0)(
     lambda a: "current_timezone()")
 function("YYYYMMDDToDate", args=1)(
@@ -636,7 +654,7 @@ function("YYYYMMDDhhmmssToDateTime", args=1)(lambda a: (
 
 # CH age(unit, a, b) counts COMPLETE units (vs dateDiff's
 # boundary crossings) — exactly Spark's timestampdiff
-@function("age", args=3)
+@function("age", args=3, usage=_TZ_USAGE)
 def age_fmt(a: Args) -> str:
     u = a[0].strip()
     if u.startswith("'") and u.endswith("'"):
@@ -648,7 +666,8 @@ def age_fmt(a: Args) -> str:
 # ---- numeric buckets / special functions ---------------------------
 # precision argument dropped: Spark timestamps are fixed-width
 # microsecond (SURVEY §1.3 DateTime64 mapping)
-function("toDateTime64", args=(1, 2))(lambda a: f"CAST({a[0]} AS TIMESTAMP)")
+function("toDateTime64", args=(1, 2), usage=_TZ_USAGE)(
+    lambda a: f"CAST({a[0]} AS TIMESTAMP)")
 
 for name in ("roundDuration", "roundAge"):
     buckets = (
@@ -672,7 +691,7 @@ for name in ("roundDuration", "roundAge"):
 # which abbreviates ('Mar' vs CH 'March')
 function("monthName", args=1)(lambda a: f"date_format({a[0]}, 'MMMM')")
 
-@function("dateName", args=2)
+@function("dateName", args=2, usage=_TZ_USAGE)
 def date_name(a: Args) -> str:
     part = a[0].strip().strip("'\"").lower()
     fmts = {"month": "MMMM", "weekday": "EEEE"}
@@ -735,20 +754,20 @@ for unit, fmt in {
     "Minute": lambda a: f"(unix_timestamp({a[0]}) DIV 60)",
     "Second": lambda a: f"unix_timestamp({a[0]})",
 }.items():
-    function(f"toRelative{unit}Num", args=1)(fmt)
+    function(f"toRelative{unit}Num", args=1, usage=_TZ_USAGE)(fmt)
 
 for name in (
     "toStartOfFiveMinutes", "toStartOfTenMinutes", "toStartOfFifteenMinutes",
 ):
     secs = {"toStartOfFiveMinutes": 300, "toStartOfTenMinutes": 600,
             "toStartOfFifteenMinutes": 900}[name]
-    function(name, args=1)(
+    function(name, args=1, usage=_TZ_USAGE)(
         lambda a, _s=secs:
         f"timestamp_seconds((unix_timestamp({a[0]}) DIV {_s}) * {_s})"
     )
 
 # CH maps the time-of-day onto the fixed date 1970-01-02
-function("toTime", args=1)(
+function("toTime", args=1, usage=_TZ_USAGE)(
     lambda a: f"timestamp_seconds(86400 + "
     f"pmod(unix_timestamp({a[0]}), 86400))"
 )
@@ -766,17 +785,18 @@ function("toModifiedJulianDay", args=1)(
     lambda a: f"datediff(CAST({a[0]} AS DATE), DATE '1858-11-17')")
 function("fromModifiedJulianDay", args=1)(
     lambda a: f"date_add(DATE '1858-11-17', {a[0]})")
-function("toISOYear", args=1)(lambda a: f"extract(YEAROFWEEK FROM {a[0]})")
+function("toISOYear", args=1, usage=_TZ_USAGE)(
+    lambda a: f"extract(YEAROFWEEK FROM {a[0]})")
 
 # first day of the ISO year = Jan 4 of the ISO year moved back
 # to its Monday (ISO week 1 contains Jan 4) — wave 35
-@function("toStartOfISOYear", args=1)
+@function("toStartOfISOYear", args=1, usage=_TZ_USAGE)
 def start_of_iso_year(a: Args) -> str:
     jan4 = (f"make_date(extract(YEAROFWEEK FROM {a[0]}), 1, 4)")
     return f"date_sub({jan4}, weekday({jan4}))"
 
 for name in ("toWeek", "toYearWeek"):
-    @function(name, args=(1, 2))
+    @function(name, args=(1, 2), usage=_TZ_USAGE)
     def week_fmt(a: Args, _yw=name == "toYearWeek") -> str:
         mode = a[1].strip() if len(a) > 1 else "0"
         if mode in ("1", "3"):
@@ -864,10 +884,10 @@ function("UUIDv7ToDateTime", args=(1, 2))(lambda a: (
 ))
 function("subtractInterval", args=2)(lambda a: f"({a[0]} - {a[1]})")
 function("parseDateTimeBestEffortOrNull", "parseDateTime32BestEffortOrNull",
-         args=1)(
+         args=1, usage=_TZ_USAGE)(
     lambda a: _best_effort_ts(a[0]))
 function("parseDateTimeBestEffortOrZero", "parseDateTime32BestEffortOrZero",
-         args=1)(
+         args=1, usage=_TZ_USAGE)(
     lambda a: f"coalesce({_best_effort_ts(a[0])}, "
     f"TIMESTAMP '1970-01-01 00:00:00')"
 )
@@ -900,7 +920,8 @@ function("timezoneOffset", args=1)(
 )
 # Twitter snowflake: ms since 2010-11-04T01:42:54.657Z in the
 # top 42 bits (the epoch CH documents)
-function("snowflakeToDateTime", "snowflakeToDateTime64", args=1)(
+function("snowflakeToDateTime", "snowflakeToDateTime64", args=1,
+         usage=_TZ_USAGE)(
     lambda a: f"timestamp_millis(shiftright({a[0]}, 22) "
     f"+ 1288834974657)"
 )
@@ -912,7 +933,9 @@ function("snowflakeToDateTime", "snowflakeToDateTime64", args=1)(
 # position 33 and MUST NOT be modded away, they'd collide).
 # Unique up to 4096 rows/partition/ms, the snowflake guarantee
 # class; like CH's, values are NON-deterministic across runs.
-function("generateSnowflakeID", args=0)(lambda a: (
+function("generateSnowflakeID", args=(0, 1), usage="the machine_id "
+         "argument is not translated: the partition id fills the "
+         "machine bits")(lambda a: (
     "(shiftleft(unix_millis(current_timestamp()) - 1288834974657,"
     " 22) + shiftleft(pmod(spark_partition_id(), 1024), 12)"
     " + pmod(monotonically_increasing_id(), 4096))"

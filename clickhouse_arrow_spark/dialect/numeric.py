@@ -96,7 +96,7 @@ function("isInfinite", args=1)(
     lambda a: f"(abs({a[0]}) = CAST('Infinity' AS DOUBLE))")
 # uniform 63-bit value (CH spans the full UInt64; random
 # values carry no cross-engine parity anyway)
-function("rand64", args=0)(lambda a: (
+function("rand64", args=(0, 1))(lambda a: (
     "CAST(floor(rand() * 9.223372036854775e18) AS BIGINT)"
 ))
 function("seriesPeriodDetectFFT", args=1)(lambda a: (
@@ -233,7 +233,7 @@ function("ifNotFinite", args=2)(lambda a: (
 ))
 # one draw per query, constant across rows (CH: constant per
 # block) — a non-correlated scalar subquery evaluates once
-function("randConstant", args=0)(lambda a: "(SELECT rand())")
+function("randConstant", args=(0, 1))(lambda a: "(SELECT rand())")
 # exact for exponents <= 53 (beyond that CH's UInt64 overflows
 # anyway at 64)
 function("intExp2", args=1)(lambda a: f"CAST(pow(2, {a[0]}) AS BIGINT)")

@@ -22,8 +22,9 @@ for name in ("empty", "notEmpty"):
 # CH: splitByChar(sep, s[, max_substrings]); Spark:
 # split(s, regex-escaped sep[, limit]). max_substrings > 0
 # DISCARDS the remainder in modern CH (>= 23.12 default) —
-# see _split_max_substrings for both modes.
-@function("splitByChar", args=(2, 4))
+# see _split_max_substrings for both modes. splitByString is the
+# same contract for multi-char separators.
+@function("splitByChar", "splitByString", args=(2, 3))
 def split_by_char(a: Args) -> str:
     sep = a[0].strip()
     if sep.startswith("'") and sep.endswith("'"):
@@ -263,7 +264,7 @@ function("countMatchesCaseInsensitive", args=2)(
 )
 # optional max_substrings: modern CH discards the remainder —
 # see _split_max_substrings for both modes
-function("splitByRegexp", args=(2, 4))(lambda a: (
+function("splitByRegexp", args=(2, 3))(lambda a: (
     _split_max_substrings(a[1], a[0], a[2])
     if len(a) > 2 else f"split({a[1]}, {a[0]})"
 ))
@@ -575,18 +576,6 @@ def replace_one(a: Args) -> str:
         f"substr({s}, 1, {loc} - 1), {repl}, "
         f"substr({s}, {loc} + length({find}))) ELSE {s} END"
     )
-
-# CH (sep, s) -> Spark split(s, regex-escaped sep), same
-# contract as splitByChar for multi-char separators
-@function("splitByString", args=(2, 4))
-def split_by_string(a: Args) -> str:
-    sep = a[0].strip()
-    if sep.startswith("'") and sep.endswith("'"):
-        lit = re.escape(sep[1:-1]).replace("\\", "\\\\").replace("'", "\\'")
-        sep = f"'{lit}'"
-    if len(a) > 2:
-        return _split_max_substrings(a[1], sep, a[2])
-    return f"split({a[1]}, {sep})"
 
 @function("format", args=(1, ...))
 def format_fmt(a: Args) -> str:

@@ -18,10 +18,6 @@ function("getOSKernelVersion", args=0)(lambda a: (
 ))
 # single-session engine: one logical connection
 function("connectionId", args=0)(lambda a: "CAST(0 AS BIGINT)")
-function("displayName", args=0)(lambda a: (
-    "substring_index(java_method('java.net.InetAddress', "
-    "'getLocalHost'), '/', 1)"
-))
 # CH wire-protocol revision constant; no analogue — a stable
 # literal keeps monitoring SELECTs running
 function("revision", args=0)(lambda a: "CAST(54500 AS INT)")
@@ -29,7 +25,7 @@ function("revision", args=0)(lambda a: "CAST(54500 AS INT)")
 # 26-char Crockford base32: 10 chars of unix-ms + 16 random
 # chars (two 40-bit draws); conv() emits base32hex digits,
 # translate() maps them onto the Crockford alphabet
-@function("generateULID", args=0)
+@function("generateULID", args=(0, 1))
 def ulid_fmt(a: Args) -> str:
     def crock(expr: str, width: int) -> str:
         return (
@@ -49,8 +45,10 @@ function("uptime", args=(0, ...))(refuse(
     "read spark.sparkContext.startTime from the driver"
 ))
 # the JVM's own hostname, derived without a UDF; CH returns the
-# server's — a local engine IS its own server
-function("hostName", args=0)(lambda a: (
+# server's — a local engine IS its own server. FQDN: the JVM's
+# getLocalHost already resolves the canonical name where the
+# resolver provides one
+function("hostName", "FQDN", "displayName", args=0)(lambda a: (
     "substring_index(java_method('java.net.InetAddress', "
     "'getLocalHost'), '/', 1)"
 ))
@@ -88,14 +86,7 @@ def iceberg_truncate(a: Args) -> str:
 function("basename", args=1)(
     lambda a: f"regexp_extract({a[0]}, '[^/\\\\\\\\]*$', 0)")
 # postgres-compat shim: the single current database
-function("currentSchemas", args=0)(lambda a: "array(current_database())")
-# same JVM-derived name as hostName(); the local engine IS its
-# server, and the JVM's getLocalHost already resolves the
-# canonical name where the resolver provides one
-function("FQDN", args=0)(lambda a: (
-    "substring_index(java_method('java.net.InetAddress', "
-    "'getLocalHost'), '/', 1)"
-))
+function("currentSchemas", args=1)(lambda a: "array(current_database())")
 # the engine's HTTP endpoint (sources/http_transport) is the
 # 8123-compatible surface
 function("httpPort", args=0)(lambda a: "CAST(8123 AS INT)")
@@ -118,7 +109,7 @@ function("tcpPort", args=(0, ...))(refuse(
 # RFC 9562 v7 layout: 48-bit unix ms, version nibble 7, 12
 # random bits, variant in 89ab, 62 random tail bits — built from
 # unix_millis + md5(rand()) hex; time-ordered like CH's
-function("generateUUIDv7", args=0)(lambda a: (
+function("generateUUIDv7", args=(0, 1))(lambda a: (
     "concat(substring(_uuid7_hex, 1, 8), '-', "
     "substring(_uuid7_hex, 9, 4), '-7', "
     "substring(_uuid7_rand, 1, 3), '-', "

@@ -2455,7 +2455,14 @@ def test_settings_argument_is_overridden_by_statement_tail():
     "call, message",
     [
         ("sumIf(a)", "sumIf() takes 2 arguments, got 1"),
-        ("toYYYYMM()", "toYYYYMM() takes 1 argument, got 0"),
+        ("toYYYYMM()", "toYYYYMM() takes 1 argument, got 0 — a timezone "
+         "argument is not translated: pass toTimeZone(x, tz) as the value, "
+         "or toUTCTimestamp(s, tz) for a string read in tz"),
+        ("toDateTime(x, 'UTC')", "toDateTime() takes 1 argument, got 2 — a "
+         "timezone argument is not translated: pass toTimeZone(x, tz) as "
+         "the value, or toUTCTimestamp(s, tz) for a string read in tz"),
+        ("splitByChar(',', s, 2, x)",
+         "splitByChar() takes 2 or 3 arguments, got 4"),
         ("intDiv(a)", "intDiv() takes 2 arguments, got 1"),
         ("L2Distance(a, b, c)", "L2Distance() takes 2 arguments, got 3"),
         ("multiIf(a, b)", "multiIf() takes at least 3 arguments, got 2"),
@@ -2473,6 +2480,31 @@ def test_wrong_argument_count_refuses(call, message):
     with pytest.raises(UntranslatableFunctionError) as err:
         translate_ch_sql(f"SELECT {call} FROM t")
     assert str(err.value) == message
+
+
+@pytest.mark.parametrize(
+    "call, expected",
+    [
+        ("timeZoneOf(x)", "current_timezone()"),
+        ("currentSchemas(true)", "array(current_database())"),
+        ("randConstant(x)", "(SELECT rand())"),
+        ("rand64(x)", None),
+        ("generateULID(x)", None),
+        ("generateUUIDv7(x)", None),
+        ("generateSnowflakeID(x)", None),
+    ],
+)
+def test_ignored_argument_forms_translate(call, expected):
+    """ClickHouse forms whose argument does not change the result: the
+    value's zone is the session zone, currentSchemas' flag picks
+    implicit schemas there are none of, and the generators' argument
+    only defeats common-subexpression elimination. Each translates to
+    the argument-free text."""
+    got = translate_ch_sql(f"SELECT {call} FROM t")
+    bare = call.split("(")[0] + "()"
+    if expected is None:
+        expected = translate_ch_sql(f"SELECT {bare} FROM t")[7:-7]
+    assert got == f"SELECT {expected} FROM t"
 
 
 def test_registry_walk_refuses_cleanly():
