@@ -5,7 +5,8 @@ translates and the argument counts it accepts.
 A formatter takes the call's translated argument texts and returns the
 Spark SQL text. The argument count is checked here, once, before any
 formatter runs: a call outside the declared range raises
-UntranslatableFunctionError naming the accepted counts. Names resolved by
+UntranslatableFunctionError naming the accepted counts. A type-name
+argument that does not parse raises the same error class. Names resolved by
 pattern rather than by exact name (aggregate combinators, -State/-Merge,
 ...) are the resolvers of `lookup.py`.
 """
@@ -14,6 +15,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import Callable
+
+from clickhouse_arrow_spark.errors import TypeParseError
 
 Args = list[str]
 Formatter = Callable[..., str]
@@ -62,10 +65,13 @@ class Entry:
 
     def __call__(self, args: Args, params: Args | None = None) -> str:
         _check(self, len(args), self.lo, self.hi, "argument")
-        if self.params is None:
-            return self.fmt(args)
-        _check(self, len(params), *self.params, "parameter")
-        return self.fmt(params, args)
+        try:
+            if self.params is None:
+                return self.fmt(args)
+            _check(self, len(params), *self.params, "parameter")
+            return self.fmt(params, args)
+        except TypeParseError as e:  # a type-name argument did not parse
+            raise UntranslatableFunctionError(f"{self.name}(): {e}") from e
 
 
 #: (ClickHouse name, parametric form?) -> Entry

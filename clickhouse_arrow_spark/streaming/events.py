@@ -33,15 +33,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """`readStream` over the events parquet (schema pinned from the batch
-    read; ns timestamps normalized to µs exactly like the batch path)."""
-    from clickhouse_arrow_spark.sources.registry import load_table
+    """`readStream` over the events parquet (schema from its footer, as the
+    batch registry reads it; ns timestamps normalized to µs exactly like
+    the batch path)."""
+    from clickhouse_arrow_spark.sources.registry import restore_nanos, table_schema
 
-    batch = load_table(spark, sf_dir, "events")
-    # load_table pinned inferTimestampNTZ=false, so this schema (and the
-    # file-stream source reading with it) carries TIMESTAMP, which
-    # withWatermark requires (NTZ event-time columns are rejected).
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema, nanos = table_schema(
+        spark, os.path.join(sf_dir, "events.parquet"))
     # The file-stream source requires a directory: stream the sf dir with
     # a glob filter selecting only the events table.
     stream = (
@@ -50,17 +48,7 @@ def read_events_stream(
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    # replay the same ns->µs normalization the batch registry applies
-    for field in batch.schema.fields:
-        if field.name in [f.name for f in raw_schema.fields] and str(
-            field.dataType
-        ) == "TimestampType()" and str(
-            raw_schema[field.name].dataType
-        ) == "LongType()":
-            stream = stream.withColumn(
-                field.name, F.expr(f"timestamp_micros(`{field.name}` DIV 1000)")
-            )
-    return stream
+    return restore_nanos(stream, nanos)
 
 
 def tumbling_window_agg(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Round-9 verdict item #4: substring_dedup at the paper's setting —
+"""Scale probe for substring_dedup at the paper's setting —
 L = 50 (Lee et al. 2021 use 50-token windows) over 120-token docs at
 1M and 10M documents (the second decade), plus a SKEWED-duplicate
 distribution: one boilerplate block duplicated across 10% of the
@@ -8,7 +8,7 @@ goes quadratic. The claim under test: the marked-rows-only interval
 window and the map-side-combined digest exchange keep the runtime
 ~linear in corpus size and insensitive to the duplicate skew.
 
-Usage: python scripts/substring_probe_r9.py [n_docs ...] [--skew]
+Usage: python scripts/substring_probe.py [n_docs ...] [--skew]
 Default: 1000000 at both distributions (10M is a flag away; it is a
 710M-window-row job on local[32]).
 """
@@ -79,7 +79,7 @@ def main() -> int:
     from clickhouse_arrow_spark.operators import text as text_ops
     from clickhouse_arrow_spark.session import get_spark
 
-    spark = get_spark(app_name="substring-probe-r9")
+    spark = get_spark(app_name="substring-probe")
     tmp = tempfile.mkdtemp(prefix="cas_ss_")
     out: dict[str, float] = {}
     for n in ns:

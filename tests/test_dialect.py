@@ -2483,6 +2483,30 @@ def test_wrong_argument_count_refuses(call, message):
 
 
 @pytest.mark.parametrize(
+    "call, message",
+    [
+        ("JSONExtract(j, 'NotAType')",
+         "JSONExtract(): unknown ClickHouse type: 'NotAType'"),
+        ("defaultValueOfTypeName('Nope(')",
+         "defaultValueOfTypeName(): malformed type string: 'Nope('"),
+        ("JSONExtractKeysAndValues(j, 'Int64(')",
+         "JSONExtractKeysAndValues(): malformed type string: 'Int64('"),
+    ],
+)
+def test_unparsable_type_argument_refuses(call, message):
+    """A type-name argument that does not parse refuses with the
+    translator's error class, naming the function, and keeps the parse
+    error as its cause."""
+    from clickhouse_arrow_spark.dialect import UntranslatableFunctionError
+    from clickhouse_arrow_spark.errors import TypeParseError
+
+    with pytest.raises(UntranslatableFunctionError) as err:
+        translate_ch_sql(f"SELECT {call} FROM t")
+    assert str(err.value) == message
+    assert isinstance(err.value.__cause__, TypeParseError)
+
+
+@pytest.mark.parametrize(
     "call, expected",
     [
         ("timeZoneOf(x)", "current_timezone()"),
