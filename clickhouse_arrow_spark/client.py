@@ -2824,9 +2824,17 @@ class Client:
             )
         elif name == "events":
             n_logged = self.system_query_log().count()
+            # Spark's count of generated classes compiled, JVM-wide since
+            # start like ClickHouse's counter: a plan whose classes are
+            # still in the codegen cache adds nothing
+            codegen = self.spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            n_compiled = codegen.METRIC_COMPILATION_TIME().getCount()
             df = self.spark.createDataFrame(
                 [("Query", n_logged,
-                  "Queries this session (from the client query log)")],
+                  "Queries this session (from the client query log)"),
+                 ("CompileFunction", n_compiled,
+                  "Generated classes compiled by Spark's codegen in this "
+                  "JVM since start")],
                 "event string, value bigint, description string",
             )
         elif name == "merges":

@@ -4,6 +4,7 @@ mask, and small expression builders."""
 
 from __future__ import annotations
 
+import functools
 import re
 
 from .registry import Args, UntranslatableFunctionError
@@ -83,14 +84,20 @@ def _tuple_literal_elems(text: str):
     return elems if all(elems) else None
 
 
-def _scan_mask(sql: str) -> list[tuple[int, bool]]:
+@functools.lru_cache(maxsize=64)
+def _scan_mask(sql: str) -> tuple[tuple[int, bool], ...]:
     """Per-character (paren depth, inside-quotes) mask for the
     statement-level rewrites — so clause keywords found by regex can be
     rejected when they sit inside a subquery, a string literal, or a
     quoted identifier. Three delimiter classes are masked: '...'
     string literals (backslash escapes), `...` and "..." quoted
     identifiers (ClickHouse treats both as identifiers; backslash
-    escapes apply inside them too, `src/escape.rs` analogue)."""
+    escapes apply inside them too, `src/escape.rs` analogue).
+
+    The statement passes ask for the mask of the same text many times
+    (every `_find_clean` hit, every pass over an unchanged statement),
+    so one mask is built per distinct text and shared; it is a tuple
+    because every caller only reads it."""
     out: list[tuple[int, bool]] = []
     depth = 0
     closer: str | None = None  # the delimiter that ends the current run
@@ -120,7 +127,7 @@ def _scan_mask(sql: str) -> list[tuple[int, bool]]:
         else:
             out.append((depth, False))
         i += 1
-    return out
+    return tuple(out)
 
 
 def _find_clean(pattern: "re.Pattern[str]", sql: str, start: int = 0,

@@ -11,7 +11,11 @@ Scale posture: the conf defaults below are sized for local[32] testing
 but written for cluster deployment — AQE on (runtime re-plan, skew-join
 handling), shuffle partitions sized to cores, Arrow transfers on, zstd
 parquet. On a real 1000-executor cluster only `master` and the memory
-confs change.
+confs change. The generated-code cache holds 1000 classes, not Spark's
+100: one pass over the 11 headline queries needs 175-178, so with the
+default every repeated plan compiled all of its classes again. The
+cache size is a static conf, so a session built elsewhere (the
+driver's own, `scripts/verify_sim.py`) keeps Spark's 100.
 """
 
 from __future__ import annotations
@@ -52,6 +56,14 @@ DEFAULT_CONFS: dict[str, str] = {
     # TIMESTAMP_NTZ: epoch casts and streaming watermarks depend on it
     # (sources.registry.load_table also pins this for plain sessions).
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Spark's JVM-wide cache of generated classes holds 100 entries; one
+    # pass over the 11 headline queries needs 175-178, so the LRU evicted
+    # every class before its plan came back and each repeated round
+    # compiled them all again (Janino, then the JIT on the new
+    # classes). 1000 holds that working set several times over at about
+    # 3.7 KB of bytecode per class. The conf is static: it must be in
+    # the SparkConf before the JVM first generates code.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -85,7 +97,13 @@ def get_spark(
     master: str | None = None,
     confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine SparkSession."""
+    """Build (or reuse) the engine SparkSession with DEFAULT_CONFS,
+    overridden by `confs`.
+
+    Static confs such as `spark.sql.codegen.cache.maxEntries` take
+    effect only when this call launches the JVM; reusing a running
+    session (or one built without `get_spark`) keeps the values it
+    started with."""
     cpus = _default_parallelism()
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{cpus}]")

@@ -80,8 +80,11 @@ def _footer(path: str) -> pq.FileMetaData | None:
     return pq.read_metadata(path)
 
 
-def _int64_ns_columns(footer: pq.FileMetaData) -> list[pa.Field]:
-    """Top-level columns stored as INT64 timestamp[ns]. Legacy INT96
+def _nanos_ts_columns(footer: pq.FileMetaData) -> list[str]:
+    """Top-level columns stored as INT64 timestamp[ns], with or without a
+    time zone. Spark reads them as long (spark.sql.legacy.parquet.nanosAsLong);
+    `restore_nanos` brings back timestamp semantics at µs precision, the
+    documented DateTime64(9)->Spark loss (SURVEY §1.3). Legacy INT96
     timestamps ALSO surface as timestamp[ns] in the arrow schema, but
     Spark reads those as TIMESTAMP directly."""
     leaves = footer.schema
@@ -91,23 +94,11 @@ def _int64_ns_columns(footer: pq.FileMetaData) -> list[pa.Field]:
         if leaves.column(i).physical_type == "INT64"
     }
     return [
-        field
+        field.name
         for field in leaves.to_arrow_schema()
         if pa.types.is_timestamp(field.type)
         and field.type.unit == "ns"
         and field.name in int64_leaves
-    ]
-
-
-def _nanos_ts_columns(footer: pq.FileMetaData) -> list[str]:
-    """Columns stored as parquet timestamp[ns] — Spark reads them as long
-    (spark.sql.legacy.parquet.nanosAsLong); we restore timestamp semantics
-    at µs precision, the documented DateTime64(9)->Spark loss
-    (SURVEY §1.3)."""
-    return [
-        field.name
-        for field in _int64_ns_columns(footer)
-        if field.type == pa.timestamp("ns")
     ]
 
 
@@ -137,7 +128,7 @@ def _footer_schema(
             return StructType.fromJson(json.loads(stored))
         except ValueError:  # a legacy or unknown schema string
             return None
-    int64_ns = {field.name for field in _int64_ns_columns(footer)}
+    int64_ns = set(_nanos_ts_columns(footer))
     if int64_ns and not nanos_as_long:
         return None
     fields = []

@@ -322,6 +322,24 @@ def test_system_columns_renders_ch_types(client):
     assert by[("region", "r_regionkey")]["position"] == 1
 
 
+def test_system_events_compile_function_counts_recompiles(client):
+    def compiled() -> int:
+        return client.query_ch(
+            "SELECT value FROM system.events WHERE event = 'CompileFunction'"
+        ).collect()[0]["value"]
+
+    # a literal no other test uses makes the statement's generated
+    # source new to this JVM; reading the counter warms its own path
+    sql = "SELECT sum(number * 7103 + 61) AS s FROM numbers(10)"
+    compiled()
+    before = compiled()
+    assert client.query_ch(sql).collect()[0]["s"] == 7103 * 45 + 610
+    first = compiled()
+    assert first > before
+    client.query_ch(sql).collect()
+    assert compiled() == first
+
+
 def test_insert_arrow_table_directly(client, spark):
     import pyarrow as pa
 

@@ -2594,3 +2594,25 @@ def test_known_functions_include_the_finite_families():
                  "toInt32OrNull", "toDecimal64OrDefault",
                  "visitParamExtractInt", "simpleJSONHas"):
         assert name in known
+
+
+def test_scan_mask_built_once_per_text():
+    """The statement passes share one depth/quote mask per distinct text:
+    a 4-function SELECT with an IN subquery asked for 28 masks of 13
+    texts when each call rebuilt it."""
+    from clickhouse_arrow_spark.dialect.sqltext import _scan_mask
+
+    sql = (
+        "SELECT toYear(o_orderdate) AS y, lower(o_comment) AS c, "
+        "length(o_clerk) AS n, abs(o_totalprice) AS p FROM orders "
+        "WHERE o_custkey IN (SELECT c_custkey FROM customer "
+        "WHERE c_nationkey = 1)"
+    )
+    _scan_mask.cache_clear()
+    translate_ch_sql(sql)
+    info = _scan_mask.cache_info()
+    # nothing was evicted, so every build was of a text not seen before
+    assert info.misses == info.currsize < info.maxsize
+    assert info.hits > 0
+    translate_ch_sql(sql)
+    assert _scan_mask.cache_info().misses == info.misses

@@ -56,6 +56,7 @@ def test_footer_schema_equals_inferred(spark, name):
 
 ALLOWLISTED = {
     "ts_ns": pa.table({"x": pa.array([NS, None], pa.timestamp("ns"))}),
+    "ts_ns_tz": pa.table({"x": pa.array([NS, None], pa.timestamp("ns", tz="UTC"))}),
     "ts_us": pa.table({"x": pa.array(TS, pa.timestamp("us"))}),
     "ts_us_tz": pa.table({"x": pa.array(TS, pa.timestamp("us", tz="Europe/Berlin"))}),
     "ts_ms": pa.table({"x": pa.array(TS, pa.timestamp("ms"))}),
@@ -144,6 +145,17 @@ def test_ns_without_nanos_as_long_fails_as_inference_does(spark, tmp_path):
             load_table(spark, str(tmp_path), "ns")
     finally:
         spark.conf.set(key, prev)
+
+
+def test_tz_aware_ns_loads_as_timestamp(spark, tmp_path):
+    """INT64 ns with a time zone reads as long under nanosAsLong like the
+    tz-naive kind, and is restored the same way: a µs timestamp (the
+    DateTime64(9) class), not a bigint."""
+    _write(tmp_path, "ns_tz", ALLOWLISTED["ts_ns_tz"])
+    df = load_table(spark, str(tmp_path), "ns_tz")
+    assert df.schema["x"].dataType.typeName() == "timestamp"
+    assert [r.us for r in df.selectExpr("unix_micros(x) AS us").collect()] == [
+        NS // 1000, None]
 
 
 def test_registration_runs_no_job(spark):
