@@ -48,15 +48,11 @@ __all__ = ["Client", "QueryOptions", "Qid"]
 
 PROTECTED_DATABASES = frozenset({"default"})
 
-#: `system.*` tables the SQL surface resolves (reference e2e tests query
-#: them directly: tests/e2e_native.rs, e2e_http.rs use
-#: system.numbers[_mt]/databases/tables/columns)
-_SYSTEM_SQL_RE = re.compile(
-    r"(?i)\bsystem\s*\.\s*"
-    r"(numbers_mt|numbers|one|databases|tables|columns|query_log|"
-    r"functions|settings|parts|processes|metrics|events|merges|"
-    r"dropped_tables|detached_tables|detached_parts|dictionaries|"
-    r"view_refreshes)\b"
+#: a table function in FROM/JOIN position (`_rewrite_file_tvfs`)
+_TVF_RE = re.compile(
+    r"(?i)\b(FROM|JOIN)\s+(file|s3|urlCluster|url|merge|"
+    r"generateRandom|remote|remoteSecure|cluster|"
+    r"clusterAllReplicas|input)\s*\("
 )
 
 
@@ -249,478 +245,27 @@ class Client:
         qid: str | None = None,
         allow_hash_substitution: bool = False,
     ) -> DataFrame:
-        """Run a query written in the ClickHouse SQL dialect: function
-        names (`toYYYYMM`, `countIf`, `uniq`, `quantile(0.9)(x)`, ...)
-        are translated to Spark SQL first (see the dialect package), then the
-        normal query path runs. Supports `{name:Type}` params too.
+        """Run a statement written in the ClickHouse SQL dialect and
+        return its rows. `query_ch`, `execute_ch` and `execute_script`
+        share one statement table (`commands.STATEMENTS`), so a
+        statement means the same thing whichever of them carries it; a
+        statement that returns no rows gives ClickHouse's empty result
+        shape. A query runs through the one SELECT path
+        (`commands.select`): function names (`toYYYYMM`, `countIf`,
+        `uniq`, `quantile(0.9)(x)`, ...) are translated to Spark SQL
+        (see the dialect package), then the normal query path runs.
+        `{name:Type}` params bind in every statement form.
         Engine-specific hashes (cityHash64/sipHash64/halfMD5) raise
         unless `allow_hash_substitution=True` (xxhash64, different
         values, warned)."""
-        from clickhouse_arrow_spark.ddl import rewrite_final
-        from clickhouse_arrow_spark.dialect import extract_with_fill
-        from clickhouse_arrow_spark.dictionary import rewrite_dict_calls
+        from clickhouse_arrow_spark import commands
 
-        # FINAL and dictGet* fold first: both need the engine catalog
-        # (TBLPROPERTIES), which the purely textual translator cannot see.
-        # WITH FILL is extracted (not refused) here because the fill runs
-        # as a DataFrame operator on the result.
-        from clickhouse_arrow_spark.ddl import rewrite_sample
-
-        import re as _re
-
-        m = _re.match(
-            r"(?is)^\s*(CREATE|DROP|RENAME|EXCHANGE|TRUNCATE|OPTIMIZE|"
-            r"INSERT|SYSTEM|GRANT|REVOKE|DETACH|ATTACH|UNDROP|ALTER|"
-            r"REPLACE|BACKUP|RESTORE|KILL\s+QUERY)\b",
-            ch_sql,
+        rows, out = commands.run(
+            self, ch_sql, qid, params, allow_hash_substitution
         )
-        if m:
-            # clickhouse-client runs DDL/DML through the same query
-            # entry point the server exposes — route to execute_ch
-            # (engine semantics, MV triggers) and return CH's empty
-            # result shape
-            self.execute_ch(ch_sql, qid=qid)
-            return self.spark.createDataFrame([], "result string")
-        m = _re.match(
-            r"(?is)^\s*EXISTS\s+(?:TABLE\s+)?((?:`[^`]+`|\w+)"
-            r"(?:\.(?:`[^`]+`|\w+))?)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # CH `EXISTS [TABLE] t` -> one row, UInt8 column `result`
-            name = m.group(1).replace("`", "")
-            try:
-                exists = self.spark.catalog.tableExists(name)
-            except Exception:
-                exists = False
-            return self.spark.createDataFrame(
-                [(1 if exists else 0,)], "result tinyint"
-            )
-        from clickhouse_arrow_spark.dialect.sqltext import _find_clean
-
-        m = _find_clean(
-            _re.compile(
-                r"(?is)\bINTO\s+OUTFILE\s+'([^']+)'"
-                r"(?:\s+AND\s+STDOUT)?"
-                r"(?:\s+(APPEND|TRUNCATE))?"
-                r"(?:\s+FORMAT\s+(\w+))?\s*;?\s*$"
-            ),
-            ch_sql,
-        )
-        if m:
-            # clickhouse-client writes the result to a LOCAL file; same
-            # here — executor-written single file moved to the path (no
-            # driver materialization), then a summary row back.
-            # _find_clean skips matches inside string literals, so text
-            # like SELECT 'INTO OUTFILE ...' is never intercepted
-            import os as _os
-
-            from clickhouse_arrow_spark import formats
-
-            path = m.group(1)
-            mode = (m.group(2) or "").upper()
-            fmt = formats.lookup(m.group(3) or "TabSeparated", QueryError)
-            # CH refuses an existing file unless APPEND or TRUNCATE
-            if not mode and _os.path.exists(path):
-                raise QueryError(
-                    f"INTO OUTFILE: {path!r} already exists — add "
-                    "TRUNCATE to overwrite or APPEND to extend "
-                    "(ClickHouse refuses silently clobbering too)"
-                )
-            inner = self.query_ch(ch_sql[: m.start()], qid=qid)
-            formats.write_single_file(
-                inner, path, fmt, append=(mode == "APPEND")
-            )
-            return self.spark.createDataFrame(
-                [(path, _os.path.getsize(path))],
-                "path string, bytes_written bigint",
-            )
-        m = _re.match(
-            r"(?is)^\s*EXPLAIN\s+(AST|SYNTAX|PLAN|PIPELINE|ESTIMATE|"
-            r"QUERY\s+TREE)"
-            r"(\s+json\s*=\s*1)?\s+(.+)$",
-            ch_sql,
-        )
-        if m:
-            # the TEXTUAL EXPLAIN forms CH users type — routed to the
-            # same machinery QueryOptions(explain=...) uses; one plan
-            # line per row, like clickhouse-client renders.
-            # EXPLAIN QUERY TREE (the CH analyzer's resolved tree) maps
-            # to PLAN — Spark's analyzed logical plan is the analogue.
-            if m.group(1).upper().startswith("QUERY"):
-                m = _re.match(
-                    r"(?is)^\s*EXPLAIN\s+(QUERY\s+TREE)"
-                    r"(\s+json\s*=\s*1)?\s+(.+)$",
-                    ch_sql,
-                )
-
-                class _M:  # minimal shim keeping the groups contract
-                    def __init__(self, inner):
-                        self._i = inner
-
-                    def group(self, k):
-                        return "plan" if k == 1 else self._i.group(k)
-
-                m = _M(m)
-            from clickhouse_arrow_spark.explain import (
-                ExplainMode,
-                ExplainOptions,
-                explain_df,
-                explain_estimate,
-            )
-
-            mode = ExplainMode(m.group(1).lower())
-            body = m.group(3)
-            if mode == ExplainMode.ESTIMATE:
-                tables = self._tables_in(body)
-                rows = [
-                    (r.database, r.table, r.parts, r.rows, r.marks)
-                    for r in explain_estimate(self.spark, tables)
-                ]
-                return self.spark.createDataFrame(
-                    rows,
-                    "database string, table string, parts bigint, "
-                    "rows bigint, marks bigint",
-                )
-            text = explain_df(
-                self.query_ch(body),
-                ExplainOptions(mode=mode, json=bool(m.group(2))),
-            )
-            return self.spark.createDataFrame(
-                [(ln,) for ln in text.splitlines() if ln.strip()],
-                "explain string",
-            )
-        m = _re.match(
-            r"(?is)^\s*CHECK\s+TABLE\s+([\w.`]+)\s*;?\s*$", ch_sql
-        )
-        if m:
-            # integrity scan: every parquet footer must open and the
-            # full table must read (count touches all row groups) —
-            # the class of check CH's CHECK TABLE runs on its parts
-            table = m.group(1)
-            try:
-                self.system_parts(table).collect()
-                self.spark.table(table).count()
-                ok = 1
-            except Exception:
-                ok = 0
-            return self.spark.createDataFrame([(ok,)], "result tinyint")
-        m = _re.match(
-            r"(?is)^\s*SHOW\s+CREATE\s+DATABASE\s+(`[^`]+`|\w+)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            db = m.group(1).strip("`")
-            exists = any(
-                d.name == db for d in self.spark.catalog.listDatabases()
-            )
-            if not exists:
-                raise QueryError(f"SHOW CREATE DATABASE: no database {db!r}")
-            return self.spark.createDataFrame(
-                [(f"CREATE DATABASE `{db}`",)], "statement string"
-            )
-        if _re.match(r"(?is)^\s*SHOW\s+GRANTS\b.*$", ch_sql):
-            # no ACL layer here: the session holds full access, which IS
-            # the truthful grant set (CH default-user deployments read
-            # the same)
-            return self.spark.createDataFrame(
-                [("GRANT ALL ON *.* TO 'default'",)], "grants string"
-            )
-        m = _re.match(
-            r"(?is)^\s*SHOW\s+FUNCTIONS(?:\s+LIKE\s+('(?:[^']|'')*'))?"
-            r"\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # ClickHouse names from system.functions, not Spark's own
-            # registry — that's what a CH user's LIKE pattern targets
-            inner = "SELECT name, is_aggregate FROM system.functions"
-            if m.group(1):
-                inner += f" WHERE name LIKE {m.group(1)}"
-            return self.query_ch(inner + " ORDER BY name")
-        if _re.match(r"(?is)^\s*KILL\s+MUTATION\b.*$", ch_sql):
-            # mutations run synchronously here — by the time KILL could
-            # fire there is nothing in flight; CH returns the killed
-            # set, which is truthfully empty
-            return self.spark.createDataFrame(
-                [], "database string, table string, mutation_id string, "
-                "is_done boolean"
-            )
-        m = _re.match(
-            r"(?is)^\s*SHOW\s+DICTIONARIES(?:\s+FROM\s+(`?\w+`?))?"
-            r"(?:\s+LIKE\s+('[^']*'))?\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # dictionaries are catalog tables carrying the dictionary
-            # marker property (dictionary.create_dictionary)
-            from clickhouse_arrow_spark.ddl import _table_props
-
-            dbs = (
-                [m.group(1).strip("`")]
-                if m.group(1)
-                else [d.name for d in self.spark.catalog.listDatabases()]
-            )
-            names = []
-            for db in dbs:
-                try:
-                    tables = self.spark.catalog.listTables(db)
-                except Exception:
-                    continue
-                for t in tables:
-                    if t.isTemporary or not t.database:
-                        continue
-                    try:
-                        props = _table_props(
-                            self.spark, f"{t.database}.{t.name}"
-                        )
-                    except Exception:
-                        continue
-                    if props.get(
-                        "clickhouse_arrow_spark.dictionary"
-                    ) == "true":
-                        names.append((t.name,))
-            from pyspark.sql import functions as _F
-
-            df = self.spark.createDataFrame(names, "name string")
-            if m.group(2):
-                df = df.where(_F.col("name").like(m.group(2).strip("'")))
-            return df.orderBy("name")
-        if _re.match(r"(?is)^\s*SHOW\s+ENGINES\s*;?\s*$", ch_sql):
-            # the engine families CREATE TABLE accepts here, with the
-            # features each one actually provides in this engine
-            rows = [
-                ("MergeTree", True, True, True),
-                ("ReplacingMergeTree", True, True, True),
-                ("SummingMergeTree", True, True, True),
-                ("AggregatingMergeTree", True, True, True),
-                ("CollapsingMergeTree", True, True, True),
-                ("VersionedCollapsingMergeTree", True, True, True),
-                ("Join", False, False, False),
-                ("Null", False, False, False),
-                ("Buffer", False, False, False),
-                ("Memory", False, False, False),
-                ("Kafka", False, False, False),
-                ("FileLog", False, False, False),
-                ("Dictionary", False, False, False),
-            ]
-            return self.spark.createDataFrame(
-                rows,
-                "name string, supports_ttl boolean, "
-                "supports_sort_order boolean, supports_parallel_insert "
-                "boolean",
-            ).orderBy("name")
-        if _re.match(r"(?is)^\s*SHOW\s+MERGES\s*;?\s*$", ch_sql):
-            # merges are eager (OPTIMIZE runs synchronously): the empty
-            # system.merges relation is the truthful answer
-            return self.query_ch("SELECT * FROM system.merges", qid=qid)
-        m = _re.match(
-            r"(?is)^\s*(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?"
-            r"system\s*\.\s*(\w+)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # DESCRIBE of a system table: materialize the relation and
-            # report its schema CH-style (name, type)
-            rel = self._system_relation(m.group(1).lower())
-            schema = self.spark.sql(
-                f"SELECT * FROM {rel} LIMIT 0"
-            ).schema
-            return self.spark.createDataFrame(
-                [(f.name, f.dataType.simpleString()) for f in schema],
-                "name string, type string",
-            )
-        if _re.match(r"(?is)^\s*SHOW\s+PROCESSLIST\s*;?\s*$", ch_sql):
-            # system.processes analogue: active Spark job groups from the
-            # status tracker (qid = job group, set by _run)
-            st = self.spark.sparkContext.statusTracker()
-            rows = []
-            for jid in st.getActiveJobsIds():
-                info = st.getJobInfo(jid)
-                if info is None:
-                    continue
-                rows.append((str(jid), str(info.status)))
-            return self.spark.createDataFrame(
-                rows or [], "query_id string, status string"
-            ) if rows else self.spark.createDataFrame(
-                [], "query_id string, status string"
-            )
-        if _re.match(r"(?is)^\s*SHOW\s+CLUSTERS?\s*;?\s*$", ch_sql):
-            # Spark IS the cluster here; CH lists configured remote
-            # clusters — one logical entry, named like CH's default
-            return self.spark.createDataFrame(
-                [("default",)], "cluster string"
-            )
-        if _re.match(
-            r"(?is)^\s*SHOW\s+(QUOTAS?|ACCESS|USERS|ROLES|"
-            r"ROW\s+POLICIES|SETTINGS\s+PROFILES)\s*;?\s*$",
-            ch_sql,
-        ):
-            # no CH access-control registry: Spark delegates authz to
-            # the cluster manager / catalog ACLs — empty result, shaped
-            return self.spark.createDataFrame([], "name string")
-        m = _re.match(
-            r"(?is)^\s*SET\s+([A-Za-z_][A-Za-z0-9_]*)\s*=\s*"
-            r"('(?:[^']|'')*'|[^;]+?)\s*;?\s*$",
-            ch_sql,
-        )
-        if m and "." not in m.group(1):
-            # `SET <ch_setting> = v` (session-scoped, like CH): route
-            # through the settings shim so the namespaced conf the
-            # feature knobs read (drop retention,
-            # engine_file_truncate_on_insert, ...) actually updates.
-            # Spark-spelled keys contain dots and pass through to
-            # Spark's own SET untouched.
-            from clickhouse_arrow_spark.settings import translate_setting
-
-            val = m.group(2).strip()
-            if val.startswith("'") and val.endswith("'"):
-                val = val[1:-1].replace("''", "'")
-            conf, v = translate_setting(m.group(1), val)
-            self.spark.conf.set(conf, v)
-            return self.spark.createDataFrame(
-                [(conf, v)], "key string, value string"
-            )
-        m = _re.match(
-            r"(?is)^\s*SHOW\s+SETTINGS(?:\s+LIKE\s+('(?:[^']|'')*'))?\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            like = f" WHERE name LIKE {m.group(1)}" if m.group(1) else ""
-            ch_sql = f"SELECT name, value FROM system.settings{like}"
-        m = _re.match(
-            r"(?is)^\s*SHOW\s+(TABLES|DATABASES)(?:\s+FROM\s+(\w+))?\s+"
-            r"LIKE\s+('(?:[^']|'')*')\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # ClickHouse LIKE patterns are SQL (% _); Spark's SHOW ...
-            # LIKE takes a glob — route through system.* with real LIKE
-            # (matches CH's single-column output shape too)
-            kind, db, pat = m.group(1).upper(), m.group(2), m.group(3)
-            if kind == "DATABASES":
-                ch_sql = (
-                    "SELECT name FROM system.databases "
-                    f"WHERE name LIKE {pat} ORDER BY name"
-                )
-            else:
-                dbf = (
-                    f"database = '{db}'" if db
-                    else "database = currentDatabase()"
-                )
-                ch_sql = (
-                    "SELECT name FROM system.tables "
-                    f"WHERE {dbf} AND name LIKE {pat} ORDER BY name"
-                )
-        m = _re.match(
-            r"(?is)^\s*SHOW\s+CREATE\s+(?:(?:TEMPORARY\s+)?TABLE\s+|"
-            r"VIEW\s+|DICTIONARY\s+)?"
-            r"((?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))?)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            try:
-                return self._run(ch_sql, qid)
-            except Exception:
-                # temp views / test-data registrations: synthesize the
-                # ClickHouse-style statement from the resolved schema
-                name = m.group(1).replace("`", "")
-                from clickhouse_arrow_spark.types import spark_type_to_ch
-
-                schema = self.spark.table(name).schema
-                cols = ",\n".join(
-                    f"  `{f.name}` "
-                    f"{spark_type_to_ch(f.dataType, nullable=f.nullable)}"
-                    for f in schema.fields
-                )
-                stmt = f"CREATE TABLE {name}\n(\n{cols}\n)"
-                return self.spark.createDataFrame(
-                    [(stmt,)], "statement string"
-                )
-        # getSetting('name') -> the current value as a literal (the
-        # textual translator has no session)
-        def _get_setting(mm):
-            from clickhouse_arrow_spark.settings import (
-                _CH_TO_SPARK,
-                _PASSTHROUGH_PREFIX,
-            )
-
-            ch_name = mm.group(1)
-            conf = (
-                _CH_TO_SPARK[ch_name][0]
-                if ch_name in _CH_TO_SPARK
-                else f"{_PASSTHROUGH_PREFIX}{ch_name}"
-            )
-            try:
-                val = self.spark.conf.get(conf, "") or ""
-            except Exception:
-                val = ""
-            return "'" + str(val).replace("'", "''") + "'"
-
-        ch_sql = _re.sub(
-            r"(?i)\bgetSetting\s*\(\s*'([^']+)'\s*\)", _get_setting, ch_sql
-        )
-
-        # getSettingOrDefault('name', default): the default expression
-        # wins when the setting is unset/unknown (wave 39)
-        def _get_setting_or_default(mm):
-            val = _get_setting(mm)
-            return val if val != "''" else mm.group(2).strip()
-
-        ch_sql = _re.sub(
-            r"(?i)\bgetSettingOrDefault\s*\(\s*'([^']+)'\s*,"
-            r"\s*([^()]+?)\s*\)",
-            _get_setting_or_default, ch_sql,
-        )
-        if _re.search(
-            r"(?i)\b(?:FROM|JOIN)\s+(?:file|s3|urlCluster|url|merge|"
-            r"generateRandom|remote|remoteSecure|cluster|"
-            r"clusterAllReplicas|input)\s*\(",
-            ch_sql,
-        ):
-            ch_sql = self._rewrite_file_tvfs(ch_sql)
-        # projection routing first: an aggregate query whose shape a
-        # MATERIALIZED projection covers reads the partials table
-        # instead of the base (CH picks projections the same way).
-        # Guarded by a session flag so sessions without projections
-        # never pay the catalog probe.
-        if self.spark.conf.get(
-            "spark.clickhouse_arrow_spark._has_projections", ""
-        ) == "true":
-            from clickhouse_arrow_spark.projections import route_projection
-
-            routed = route_projection(self.spark, ch_sql)
-            if routed is not None:
-                ch_sql = routed
-        ch_sql = self._expand_sql_macros(ch_sql)
-        ch_sql = rewrite_final(self.spark, ch_sql)
-        ch_sql = rewrite_dict_calls(self.spark, ch_sql)
-        if "joinGet" in ch_sql:
-            from clickhouse_arrow_spark.dictionary import rewrite_join_get
-
-            ch_sql = rewrite_join_get(self.spark, ch_sql)
-        ch_sql = rewrite_sample(self.spark, ch_sql)
-        if re.search(r"(?i)\bAPPLY\s*\(|\bCOLUMNS\s*\(", ch_sql):
-            from clickhouse_arrow_spark.dialect import rewrite_star_apply
-
-            ch_sql = rewrite_star_apply(self.spark, ch_sql)
-        ch_sql, fill = extract_with_fill(ch_sql)
-        sql = self._translate(ch_sql, allow_hash_substitution)
-        # after translation: the replacement subqueries use Spark's own
-        # range() TVF, which the CH->Spark translator must not re-touch
-        sql = self._rewrite_system_tables(sql)
-        if params:
-            sql = bind_params(sql, params)
-        df = self._run(sql, qid)
-        if fill:
-            from clickhouse_arrow_spark.operators.timeseries import with_fill
-
-            df = with_fill(
-                df, fill["col"], fill["start"], fill["end"], fill["step"],
-                interpolate=fill.get("interpolate"),
-                staleness=fill.get("staleness"),
-            )
-        return df
+        if rows:
+            return out
+        return self.spark.createDataFrame([], "result string")
 
     def _dialect_settings(self):
         """DialectSettings from the session's SET values (the SET shim
@@ -878,793 +423,18 @@ class Client:
         return self.query_column(sql, params, qid)
 
     def execute_ch(self, ch_sql: str, qid: str | None = None) -> int | None:
-        """Run a ClickHouse-dialect statement. Mutations (`ALTER TABLE
-        ... DELETE/UPDATE`, lightweight `DELETE FROM`) run as synchronous
-        part rewrites (ddl.try_mutation) and return the affected row
-        count — the end state of ClickHouse's async mutation, minus the
-        `system.mutations` wait. Anything else translates through the
-        dialect and executes; returns None."""
-        import re as _re
+        """Run a ClickHouse-dialect statement and discard its rows,
+        through the statement table `query_ch` and `execute_script`
+        share (`commands.STATEMENTS`). Mutations (`ALTER TABLE ...
+        DELETE/UPDATE`, lightweight `DELETE FROM`) and `OPTIMIZE` return
+        the affected row count; anything else returns None."""
+        from clickhouse_arrow_spark import commands
 
-        from clickhouse_arrow_spark.ddl import (
-            _OPTIMIZE_RE,
-            optimize_table,
-            try_mutation,
-        )
-
-        # SQL-macro calls may appear inside any statement's expressions
-        # (INSERT ... SELECT, CTAS, mutations); the definition
-        # statements themselves stay verbatim (late binding, like CH)
-        if not _re.match(r"(?is)^\s*(CREATE|DROP)\s+FUNCTION\b", ch_sql):
-            ch_sql = self._expand_sql_macros(ch_sql)
-
-        settings = self._dialect_settings()
-        n = try_mutation(self.spark, ch_sql, settings)
-        if n is not None:
-            return n
-        from clickhouse_arrow_spark.ddl import try_alter
-
-        if try_alter(self.spark, ch_sql, settings):
+        rows, out = commands.run(self, ch_sql, qid)
+        if rows:
+            out.collect()
             return None
-        m = _OPTIMIZE_RE.match(ch_sql)
-        if m:
-            dedup_by = None
-            if m.group(3):
-                dedup_by = [
-                    c.strip().strip("`")
-                    for c in (m.group(4) or "").split(",")
-                    if c.strip()
-                ]
-            return optimize_table(
-                self.spark,
-                m.group(1),
-                final=bool(m.group(2)),
-                dedup_by=dedup_by,
-            )
-        m = _re.match(
-            r"(?is)^\s*KILL\s+QUERY\s+WHERE\s+query_id\s*=\s*'([^']+)'"
-            r"(\s+SYNC|\s+ASYNC)?\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            self.cancel(m.group(1))
-            return None
-        if _re.match(r"(?is)^\s*SYSTEM\s+DROP\s+QUERY\s+CACHE\s*;?\s*$", ch_sql):
-            self.clear_query_cache()
-            return None
-        m = _re.match(
-            r"(?is)^\s*RENAME\s+TABLE\s+(.+?)\s*;?\s*$", ch_sql
-        )
-        if m and _re.match(
-            r"(?is)^[\w.`]+\s+TO\s+[\w.`]+(\s*,\s*[\w.`]+\s+TO\s+[\w.`]+)*$",
-            m.group(1),
-        ):
-            # CH accepts multiple comma-separated pairs in one statement
-            for pair in m.group(1).split(","):
-                src, dst = _re.split(r"(?is)\s+TO\s+", pair.strip())
-                self.execute(f"ALTER TABLE {src} RENAME TO {dst}", qid)
-            return None
-        m = _re.match(
-            r"(?is)^\s*EXCHANGE\s+(?:TABLES|DICTIONARIES)\s+([\w.`]+)"
-            r"\s+AND\s+([\w.`]+)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # CH's atomic swap, done as three renames (not atomic here —
-            # Spark's catalog has no two-table transaction; documented)
-            a, b = m.group(1), m.group(2)
-            tmp = f"{a}__cas_xchg"
-            self.execute(f"ALTER TABLE {a} RENAME TO {tmp}", qid)
-            self.execute(f"ALTER TABLE {b} RENAME TO {a}", qid)
-            self.execute(f"ALTER TABLE {tmp} RENAME TO {b}", qid)
-            return None
-        m = _re.match(
-            r"(?is)^\s*DROP\s+DATABASE\s+(IF\s+EXISTS\s+)?"
-            r"(`[^`]+`|\w+)(?:\s+ON\s+CLUSTER\s+\S+)?(\s+SYNC)?"
-            r"\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # CH drops non-empty databases (Atomic engine) and accepts
-            # a SYNC modifier; Spark needs CASCADE and knows no SYNC
-            # (drops here are immediate either way). `default` stays
-            # protected like drop_database().
-            name = m.group(2).replace("`", "")
-            if name.lower() in PROTECTED_DATABASES:
-                raise SchemaError(
-                    f"refusing to drop protected database {name!r}"
-                )
-            ine = "IF EXISTS " if m.group(1) else ""
-            self.execute(f"DROP DATABASE {ine}`{name}` CASCADE", qid)
-            return None
-        m = _re.match(
-            r"(?is)^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.`]+)"
-            r"(\s+SYNC)?\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # CH spells DROP TABLE for every engine; Buffer tables are
-            # Spark VIEWS here, which need DROP VIEW
-            name = m.group(2).replace("`", "")
-            try:
-                t = self.spark.catalog.getTable(name)
-                is_view = (t.tableType or "").upper() == "VIEW"
-            except Exception:
-                is_view = False
-            if not is_view and not m.group(3):
-                # Atomic-database semantics: the data moves to a trash
-                # area and stays UNDROP-able for the retention window
-                # (database_atomic_delay_before_drop_table_sec; 0 — or
-                # DROP ... SYNC — means immediate). ddl.undrop_table
-                # is the restore path.
-                from clickhouse_arrow_spark.ddl import (
-                    _drop_retention_sec,
-                    drop_table_to_trash,
-                )
-
-                if (
-                    _drop_retention_sec(self.spark) > 0
-                    and self.spark.catalog.tableExists(name)
-                ):
-                    drop_table_to_trash(self.spark, m.group(2))
-                    return None
-            kw = "VIEW" if is_view else "TABLE"
-            ine = "IF EXISTS " if m.group(1) else ""
-            self.execute(f"DROP {kw} {ine}{m.group(2)}", qid)
-            return None
-        m = _re.match(
-            r"(?is)^\s*TRUNCATE\s+TABLE\s+IF\s+EXISTS\s+([\w.`]+)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # Spark's TRUNCATE has no IF EXISTS — gate on the catalog
-            if self.spark.catalog.tableExists(m.group(1).replace("`", "")):
-                self.execute(f"TRUNCATE TABLE {m.group(1)}", qid)
-            return None
-        if _re.match(r"(?is)^\s*CREATE\s+WINDOW\s+VIEW\b", ch_sql):
-            raise QueryError(
-                "CREATE WINDOW VIEW (experimental in ClickHouse): the "
-                "streaming path here is Structured Streaming — use "
-                "streaming/events tumbling/session aggregations, or a "
-                "materialized view over an ENGINE = Kafka/FileLog "
-                "source (streaming/ingest.start_ingest); the tumble()/"
-                "hop() helpers translate for batch backfills"
-            )
-        if _re.match(r"(?is)^\s*CREATE\s+LIVE\s+VIEW\b", ch_sql):
-            raise QueryError(
-                "CREATE LIVE VIEW is deprecated in ClickHouse; use a "
-                "refreshable materialized view instead: CREATE "
-                "MATERIALIZED VIEW mv REFRESH EVERY <interval> AS "
-                "SELECT ... (matview.create_refreshable_view)"
-            )
-        m = _re.match(
-            r"(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.`]+)"
-            r"\s+CLONE\s+AS\s+([\w.`]+)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # CH 23.x CLONE AS: structure + a SNAPSHOT of the current
-            # rows (CH hardlinks parts; one INSERT...SELECT is the
-            # rewrite-based equivalent on parquet). With IF NOT EXISTS
-            # and an existing dst the WHOLE statement is a no-op in CH
-            # — running the INSERT anyway would silently duplicate
-            # dst's rows on every migration-script re-run.
-            ine = "IF NOT EXISTS " if m.group(1) else ""
-            dst, src = m.group(2), m.group(3)
-            if ine and self.spark.catalog.tableExists(
-                dst.replace("`", "")
-            ):
-                return None
-            self.execute_ch(f"CREATE TABLE {ine}{dst} AS {src}", qid)
-            self.execute_ch(
-                f"INSERT INTO {dst} SELECT * FROM {src}", qid
-            )
-            return None
-        m = _re.match(
-            r"(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.`]+)"
-            r"\s+AS\s+([\w.`]+)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # CH's clone-structure form (AS <table>, no SELECT): Spark's
-            # CREATE TABLE LIKE copies schema+provider; the CH engine
-            # metadata rides along explicitly so FINAL/OPTIMIZE keep
-            # working on the clone
-            ine = "IF NOT EXISTS " if m.group(1) else ""
-            dst, src = m.group(2), m.group(3)
-            self.execute(f"CREATE TABLE {ine}{dst} LIKE {src}", qid)
-            props = {
-                r["key"]: r["value"]
-                for r in self.spark.sql(
-                    f"SHOW TBLPROPERTIES {src}"
-                ).collect()
-                if r["key"].startswith("clickhouse_arrow_spark.")
-            }
-            if props:
-                kv = ", ".join(f"'{k}' = '{v}'" for k, v in props.items())
-                self.execute(
-                    f"ALTER TABLE {dst} SET TBLPROPERTIES ({kv})", qid
-                )
-            return None
-        m = _re.match(
-            r"(?is)^\s*CREATE\s+(?:(OR\s+REPLACE)\s+)?FUNCTION\s+"
-            r"(?:(IF\s+NOT\s+EXISTS)\s+)?"
-            r"(`?\w+`?)\s+AS\s+(?:\(\s*([\w\s,]*?)\s*\)|(\w+))\s*->"
-            r"\s*(.+?);?\s*$",
-            ch_sql,
-        )
-        if m:
-            # CH SQL user-defined functions (CREATE FUNCTION name AS
-            # (a, b) -> expr): session-scoped macros, expanded
-            # textually before translation (CH persists them
-            # server-side; here the session IS the server lifetime)
-            from clickhouse_arrow_spark.dialect import (
-                known_ch_functions,
-            )
-
-            or_replace = bool(m.group(1))
-            fname = m.group(3).strip("`")
-            macros = self._sql_macros
-            if fname in known_ch_functions():
-                raise QueryError(
-                    f"CREATE FUNCTION {fname}: the name collides with "
-                    "a built-in function (CH refuses this too)"
-                )
-            if fname in macros and not m.group(2) and not or_replace:
-                raise QueryError(
-                    f"CREATE FUNCTION: {fname} already exists — DROP "
-                    "FUNCTION it first, or use OR REPLACE / "
-                    "IF NOT EXISTS"
-                )
-            if fname not in macros or or_replace:
-                params_raw = (
-                    m.group(4) if m.group(4) is not None else m.group(5)
-                )
-                params = [
-                    p.strip() for p in (params_raw or "").split(",")
-                    if p.strip()
-                ]
-                body = m.group(6).strip()
-                if _re.search(rf"\b{_re.escape(fname)}\s*\(", body):
-                    raise QueryError(
-                        f"CREATE FUNCTION {fname}: recursive "
-                        "definitions are not supported (CH refuses "
-                        "them too)"
-                    )
-                macros[fname] = (params, body)
-            return None
-        m = _re.match(
-            r"(?is)^\s*DROP\s+FUNCTION\s+(?:(IF\s+EXISTS)\s+)?"
-            r"(`?\w+`?)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            fname = m.group(2).strip("`")
-            macros = self._sql_macros
-            if fname not in macros and not m.group(1):
-                raise QueryError(
-                    f"DROP FUNCTION: no user-defined function {fname!r}"
-                )
-            macros.pop(fname, None)
-            return None
-        created = self._try_create_table_stmt(ch_sql, qid)
-        if created:
-            return None
-        m = _re.match(
-            r"(?is)^\s*CREATE\s+DICTIONARY\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"(?P<name>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))?)\s*"
-            r"\((?P<cols>[^)]*)\)\s*"
-            r"PRIMARY\s+KEY\s+\(?\s*"
-            r"(?P<key>(?:`[^`]+`|\w+)(?:\s*,\s*(?:`[^`]+`|\w+))*)"
-            r"\s*\)?\s*"
-            r"(?P<rest>.*)$",
-            ch_sql.rstrip().rstrip(";"),
-        )
-        if m:
-            # SOURCE(CLICKHOUSE(TABLE 'src' [DB 'db'])) names the backing
-            # table; LAYOUT()/LIFETIME() are accepted and ignored — the
-            # broadcast join IS the hashed layout, refresh = re-create
-            from clickhouse_arrow_spark.dictionary import create_dictionary
-
-            ms = _re.search(
-                r"(?is)SOURCE\s*\(\s*\w+\s*\(\s*(?P<kv>[^)]*)\)\s*\)",
-                m.group("rest"),
-            )
-            if not ms:
-                raise SchemaError(
-                    "CREATE DICTIONARY needs SOURCE(CLICKHOUSE(TABLE "
-                    "'<table>' [DB '<db>'])) to name the backing table"
-                )
-            kv = dict(
-                _re.findall(r"(?is)\b(\w+)\s+'([^']*)'", ms.group("kv"))
-            )
-            kv = {k.upper(): v for k, v in kv.items()}
-            if "TABLE" not in kv:
-                raise SchemaError("dictionary SOURCE has no TABLE")
-            src_name = (
-                f"{kv['DB']}.{kv['TABLE']}" if kv.get("DB") else kv["TABLE"]
-            )
-            source = self.spark.table(src_name)
-            declared = []
-            hierarchical = None
-            for c in m.group("cols").split(","):
-                if not c.strip():
-                    continue
-                cname = _re.match(
-                    r"(`[^`]+`|\w+)", c.strip()).group(1).strip("`")
-                declared.append(cname)
-                # CH marks the parent-key attribute HIERARCHICAL
-                if _re.search(r"(?i)\bHIERARCHICAL\b", c):
-                    hierarchical = cname
-            if declared:
-                missing = [c for c in declared if c not in source.columns]
-                if missing:
-                    raise SchemaError(
-                        f"dictionary columns {missing} not in {src_name}"
-                    )
-                source = source.select(*declared)
-            name = m.group("name").replace("`", "")
-            db, _, dname = name.rpartition(".")
-            key_spec = "|".join(
-                k.strip().strip("`")
-                for k in m.group("key").split(",")
-            )
-            create_dictionary(
-                self.spark,
-                db or self.spark.catalog.currentDatabase(),
-                dname,
-                source,
-                key_spec,
-                hierarchical=hierarchical,
-                source_table=src_name,
-            )
-            return None
-        m = _re.match(
-            r"(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+"
-            r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-            r"(?P<name>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))?)\s*"
-            r"(?:REFRESH\s+(?P<refresh>(?:EVERY|AFTER)\s+\d+\s+\w+"
-            r"(?:\s+\d+\s+\w+)*)\s+(?:(?P<rappend>APPEND)\s+)?)?"
-            r"(?:TO\s+(?P<to>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))?)\s*)?"
-            r"(?:ENGINE\s*=\s*(?P<engine>\w+)(?:\([^)]*\))?\s*)?"
-            r"(?:ORDER\s+BY\s+(?P<order>.*?)\s*)?"
-            r"(?P<empty>EMPTY\s+)?"
-            r"(?P<populate>POPULATE\s+)?AS\s+(?P<select>SELECT\b.*?)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            from clickhouse_arrow_spark.matview import (
-                attach_materialized_view,
-                create_materialized_view,
-            )
-
-            name = m.group("name").replace("`", "")
-            spark_select = self._translate(m.group("select"))
-            # MV machinery runs this SELECT outside _run — register
-            # any lazily-created ch_* UDFs it references first
-            self._ensure_udfs_for(spark_select)
-            if m.group("refresh"):
-                # refreshable MV (not insert-triggered): any SELECT
-                # shape, whole-result replace on SYSTEM REFRESH VIEW
-                from clickhouse_arrow_spark.matview import (
-                    create_refreshable_view,
-                )
-
-                target = (
-                    m.group("to").replace("`", "")
-                    if m.group("to") else name
-                )
-                create_refreshable_view(
-                    self.spark, target, spark_select,
-                    " ".join(m.group("refresh").upper().split()),
-                    empty=bool(m.group("empty")),
-                    to_existing=bool(m.group("to")),
-                    append=bool(m.group("rappend")),
-                )
-                return None
-            msrc = _re.search(
-                r"(?is)\bFROM\s+((?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))?)",
-                spark_select,
-            )
-            if not msrc:
-                raise SchemaError(
-                    "materialized view query has no FROM table to attach to"
-                )
-            source = msrc.group(1).replace("`", "")
-            if m.group("to"):  # TO existing_target form
-                attach_materialized_view(
-                    self.spark,
-                    m.group("to").replace("`", ""),
-                    source,
-                    spark_select,
-                    populate=bool(m.group("populate")),
-                )
-            else:
-                db, _, view = name.rpartition(".")
-                target = create_materialized_view(
-                    self.spark,
-                    db or self.spark.catalog.currentDatabase(),
-                    view,
-                    source,
-                    spark_select,
-                    populate=bool(m.group("populate")),
-                )
-                # carry the inner target's engine metadata so FINAL can
-                # fold aggregating MVs (the canonical CH read pattern)
-                props = {}
-                if m.group("engine"):
-                    props["clickhouse_arrow_spark.engine"] = m.group("engine")
-                if m.group("order"):
-                    cols = [
-                        c.strip().strip("`()")
-                        for c in m.group("order").split(",")
-                        if c.strip().strip("`()")
-                    ]
-                    props["clickhouse_arrow_spark.order_by"] = ",".join(cols)
-                for k, v in props.items():
-                    self.spark.sql(
-                        f"ALTER TABLE {target} SET TBLPROPERTIES "
-                        f"('{k}' = '{v}')"
-                    )
-            return None
-        m = _re.match(
-            r"(?is)^\s*ALTER\s+TABLE\s+([\w.`]+)\s+ADD\s+COLUMN\s+"
-            r"(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|\w+)\s+([^;]+?)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            from clickhouse_arrow_spark.types import (
-                ch_type_to_spark,
-                parse_ch_type,
-            )
-
-            col = m.group(3).strip("`")
-            spec = m.group(4).strip()
-            md = _re.match(r"(?is)^(.*?)\s+DEFAULT\s+(.+)$", spec)
-            ch_t = (md.group(1) if md else spec).strip()
-            try:
-                dt, _null = ch_type_to_spark(parse_ch_type(ch_t), self.type_options)
-                ddl_t = dt.simpleString()
-            except Exception:
-                ddl_t = ch_t  # already a Spark type
-            if m.group(2):
-                # Spark has no ADD COLUMN IF NOT EXISTS: catalog check
-                existing = {
-                    f.name for f in self.spark.table(m.group(1)).schema.fields
-                }
-                if col in existing:
-                    return None
-            stmt = f"ALTER TABLE {m.group(1)} ADD COLUMN `{col}` {ddl_t}"
-            if md:
-                stmt += f" DEFAULT {self._translate(md.group(2).strip())}"
-            self.execute(stmt, qid)
-            return None
-        m = _re.match(
-            r"(?is)^\s*(BACKUP|RESTORE)\s+TABLE\s+([\w.`]+)\s+"
-            r"(TO|FROM)\s+File\s*\(\s*'([^']+)'\s*\)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            from clickhouse_arrow_spark.ddl import (
-                backup_table,
-                restore_table,
-            )
-
-            verb = m.group(1).upper()
-            if verb == "BACKUP" and m.group(3).upper() == "TO":
-                backup_table(self.spark, m.group(2), m.group(4))
-                return None
-            if verb == "RESTORE" and m.group(3).upper() == "FROM":
-                restore_table(self.spark, m.group(2), m.group(4))
-                return None
-        if _re.match(r"(?is)^\s*(BACKUP|RESTORE)\s+TABLE\b", ch_sql):
-            raise QueryError(
-                "BACKUP/RESTORE TABLE: the File('<dir>') destination is "
-                "supported (BACKUP TABLE db.t TO File('/path')); "
-                "Disk()/S3() named-disk forms are server-side disk "
-                "registry concepts — pass the filesystem path directly"
-            )
-        m = _re.match(
-            r"(?is)^\s*UNDROP\s+TABLE\s+([\w.`]+)\s*;?\s*$", ch_sql
-        )
-        if m:
-            from clickhouse_arrow_spark.ddl import undrop_table
-
-            undrop_table(self.spark, m.group(1))
-            return None
-        if _re.match(r"(?is)^\s*UNDROP\s+TABLE\b", ch_sql):
-            raise QueryError(
-                "UNDROP TABLE takes a single table name: "
-                "UNDROP TABLE [db.]t"
-            )
-        m = _re.match(
-            r"(?is)^\s*TRUNCATE\s+ALL\s+TABLES\s+FROM\s+(?:IF\s+EXISTS\s+)?"
-            r"(`?\w+`?)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            db = m.group(1).strip("`")
-            for t in self.spark.catalog.listTables(db):
-                # listTables also returns session temp views — skip
-                # anything not a real table OF THIS database
-                if t.tableType == "VIEW" or t.isTemporary or not t.database:
-                    continue
-                self.spark.sql(f"TRUNCATE TABLE `{t.database}`.`{t.name}`")
-            return None
-        m = _re.match(
-            r"(?is)^\s*(DETACH|ATTACH)\s+TABLE\s+([\w.`]+)"
-            r"(?:\s+PERMANENTLY)?\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # CH keep-the-data semantics: DDL snapshot + directory move
-            # (PERMANENTLY only affects CH server restarts — no-op here)
-            from clickhouse_arrow_spark.ddl import (
-                attach_table,
-                detach_table,
-            )
-
-            if m.group(1).upper() == "DETACH":
-                detach_table(self.spark, m.group(2))
-            else:
-                attach_table(self.spark, m.group(2))
-            return None
-        if _re.match(r"(?is)^\s*(DETACH|ATTACH)\s+TABLE\b", ch_sql):
-            raise QueryError(
-                "DETACH/ATTACH TABLE: one plain table name is supported "
-                "(DETACH TABLE db.t [PERMANENTLY]); ON CLUSTER and "
-                "ATTACH-with-schema forms are not"
-            )
-        m = _re.match(
-            r"(?is)^\s*INSERT\s+INTO\s+(?:TABLE\s+)?FUNCTION\s+"
-            r"(\w+)\s*\(",
-            ch_sql,
-        )
-        if m:
-            # `INSERT INTO FUNCTION file('path', 'Format') SELECT ...`
-            # — ClickHouse's SQL export path, the write-side twin of
-            # the file() TVF (the reference sends it to the server
-            # verbatim, table-functions/file.md)
-            return self._insert_into_function(ch_sql, m, qid)
-        m = _re.match(
-            r"(?is)^\s*INSERT\s+INTO\s+([\w.`]+)\s*(?:\(([^()]*)\))?\s+"
-            r"(SELECT\b.*?\bFROM\s+input\(\s*'([^']+)'\s*\).*?)\s+"
-            r"FORMAT\s+(\w+)[ \t]*\n?(.*)$",
-            ch_sql,
-        )
-        if m:
-            # `INSERT INTO t SELECT ... FROM input('structure') FORMAT
-            # fmt <data>`: transform inline data during insert
-            # (table-functions/input.md). The body parses into a temp
-            # view typed by the structure; the SELECT then runs against
-            # it through the normal trigger-firing INSERT ... SELECT.
-            return self._insert_through_input_tvf(m, qid)
-        m = _re.match(
-            r"(?is)^\s*INSERT\s+INTO\s+([\w.`]+)\s*(?:\(([^()]*)\))?\s+"
-            r"FORMAT\s+(\w+)[ \t]*\n?(.*)$",
-            ch_sql,
-        )
-        if m:
-            # clickhouse-client SCRIPTS carry the data INLINE after the
-            # FORMAT clause — parse it here (inline literals are small
-            # by construction; bulk data belongs in client.insert). An
-            # empty body is the wire protocol's out-of-band shape, which
-            # has no Spark analogue.
-            table, cols, fmt, data = (
-                m.group(1),
-                m.group(2),
-                m.group(3),
-                m.group(4) or "",
-            )
-            if not data.strip():
-                raise QueryError(
-                    "FORMAT-form INSERT with no inline data carries its "
-                    "rows out-of-band on the wire; pass the batch "
-                    "explicitly — client.insert(table, df_or_arrow) "
-                    "(the reference's insert(sql, batch) shape)"
-                )
-            col_clause = f" ({cols})" if cols else ""
-            if fmt.lower() == "values":
-                return self.execute_ch(
-                    f"INSERT INTO {table}{col_clause} VALUES {data}", qid
-                )
-            from clickhouse_arrow_spark.formats import parse_inline
-
-            schema = self.spark.table(table).schema
-            names = (
-                [c.strip().strip("`") for c in cols.split(",")]
-                if cols
-                else schema.names
-            )
-            typed = parse_inline(
-                self.spark, fmt, data, names,
-                {f.name: f.dataType for f in schema.fields},
-            )
-            # the insert path fires MV triggers and fills MATERIALIZED/
-            # DEFAULT columns, same as the VALUES form
-            self.insert(table, typed, qid=qid)
-            return None
-        m = _re.match(
-            r"(?is)^\s*INSERT\s+INTO\s+([\w.`]+)\s*(?:\(([^()]*)\))?\s+"
-            r"(SELECT\b.*|VALUES\b.*?)\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # route through the insert path so MATERIALIZED VIEW
-            # triggers fire for SQL inserts too (CH: MVs trigger on
-            # every insert, not just the client API). The source query
-            # goes through the CH translation first; columns match
-            # POSITIONALLY (to the column list when given, else the
-            # table schema); unlisted columns take their declared
-            # DEFAULT expression (CH semantics — textual CREATE TABLE
-            # records defaults in the Spark column metadata), else NULL.
-            from pyspark.sql import functions as _F
-
-            src_sql = m.group(3)
-            if src_sql.lstrip()[:6].upper() == "SELECT":
-                # the FULL query pre-pass chain (TVF expansion incl.
-                # remote()/file()/url(), FINAL folds, dictGet, SAMPLE,
-                # * APPLY, macros) applies to the INSERT's source query
-                # too — r9 fix: `INSERT INTO t SELECT ... FROM
-                # remote(...)` previously leaked the raw TVF to Spark
-                block = self.query_ch(src_sql, qid=qid)
-            else:
-                block = self._run(self._translate(src_sql), qid)
-            target = self.spark.table(m.group(1)).schema
-            if m.group(2):
-                listed = [c.strip().strip("`") for c in m.group(2).split(",")]
-                block = block.toDF(*listed[: len(block.columns)])
-                mat = self._materialized_exprs(m.group(1))
-                for f in target.fields:
-                    if f.name not in block.columns:
-                        if f.name in mat:
-                            continue  # _align_to_table computes it
-                        default = f.metadata.get("CURRENT_DEFAULT")
-                        fill = (
-                            _F.expr(default)
-                            if default is not None
-                            else _F.lit(None)
-                        )
-                        block = block.withColumn(
-                            f.name, fill.cast(f.dataType)
-                        )
-            else:
-                block = block.toDF(
-                    *[f.name for f in target.fields][: len(block.columns)]
-                )
-            self.insert(m.group(1), block, qid)
-            return None
-        m = _re.match(
-            r"(?is)^\s*SYSTEM\s+UNFREEZE\s+WITH\s+NAME\s+'([^']+)'"
-            r"\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            # remove the named FREEZE snapshot everywhere it exists —
-            # scan each database dir's .shadow/<table>/<name>
-            jvm = self.spark.sparkContext._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path
-            hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-            name = m.group(1)
-            removed = 0
-            for db in self.spark.catalog.listDatabases():
-                root = f"{db.locationUri.rstrip('/')}/.shadow"
-                fs = hpath(root).getFileSystem(hconf)
-                if not fs.exists(hpath(root)):
-                    continue
-                for st in fs.listStatus(hpath(root)):
-                    snap = hpath(f"{st.getPath()}/{name}")
-                    if fs.exists(snap):
-                        fs.delete(snap, True)
-                        removed += 1
-            if removed == 0:
-                raise SchemaError(
-                    f"SYSTEM UNFREEZE: no snapshot named {name!r} under "
-                    "any database's .shadow/ area"
-                )
-            return None
-        mrd = _re.match(
-            r"(?is)^\s*SYSTEM\s+RELOAD\s+DICTIONARY\s+([\w.`]+)\s*;?\s*$",
-            ch_sql,
-        )
-        if mrd:
-            # re-materialize from the recorded SOURCE table (the CH
-            # reload contract) and drop the hierarchy-closure cache
-            from clickhouse_arrow_spark.dictionary import (
-                reload_dictionary,
-            )
-
-            reload_dictionary(
-                self.spark, mrd.group(1).replace("`", "")
-            )
-            return None
-        if _re.match(
-            r"(?is)^\s*SYSTEM\s+(RELOAD\s+DICTIONAR(?:Y\s+[\w.`]+|IES)|"
-            r"FLUSH\s+LOGS|"
-            r"DROP\s+(?:DNS|MARK|UNCOMPRESSED|COMPILED\s+EXPRESSION|"
-            r"FILESYSTEM|SCHEMA)\s+CACHE|"
-            r"(?:STOP|START)\s+(?:TTL\s+)?MERGES(?:\s+[\w.`]+)?|"
-            r"(?:STOP|START)\s+(?:MOVES|FETCHES|REPLICATION\s+QUEUES)"
-            r"(?:\s+[\w.`]+)?)\s*;?\s*$",
-            ch_sql,
-        ):
-            # honest no-ops: dictGet reads the live catalog table on
-            # every query (nothing to reload), the query log is written
-            # synchronously (nothing to flush), merges/moves/fetches
-            # run eagerly inside OPTIMIZE/mutations — there is no
-            # background activity to pause or resume — and the named
-            # caches (DNS/mark/uncompressed/...) are ClickHouse server
-            # internals with no Spark analogue to clear (the QUERY
-            # cache, which DOES exist here, has its own handler)
-            return None
-        m = _re.match(
-            r"(?is)^\s*SYSTEM\s+(REFRESH|WAIT)\s+VIEW\s+([\w.`]+)"
-            r"\s*;?\s*$",
-            ch_sql,
-        )
-        if m:
-            from clickhouse_arrow_spark.matview import refresh_view
-
-            target = m.group(2).replace("`", "")
-            if m.group(1).upper() == "REFRESH":
-                refresh_view(self.spark, target)
-            else:
-                # refreshes here are synchronous — WAIT just validates
-                # the view is refreshable (CH blocks until a running
-                # refresh finishes)
-                from clickhouse_arrow_spark.ddl import _table_props
-
-                if ("clickhouse_arrow_spark.mv_refresh"
-                        not in _table_props(self.spark, target)):
-                    raise SchemaError(
-                        f"SYSTEM WAIT VIEW: {target} is not a "
-                        "refreshable materialized view"
-                    )
-            return None
-        if _re.match(
-            r"(?is)^\s*SYSTEM\s+(STOP|START)\s+(?:REPLICATED\s+)?"
-            r"VIEWS?(?:\s+[\w.`]+)?\s*;?\s*$",
-            ch_sql,
-        ):
-            # no in-session scheduler to pause: schedules are metadata
-            # for the orchestrator; refreshes only run on SYSTEM
-            # REFRESH VIEW — documented no-op
-            return None
-        if _re.match(r"(?is)^\s*GRANT\b", ch_sql):
-            import warnings
-
-            # single-user engine: the session already holds full access,
-            # so granting more is a no-op — warn so scripts know the ACL
-            # itself is not being recorded
-            warnings.warn(
-                "GRANT accepted as a no-op: this engine has no ACL "
-                "layer (the session holds full access); enforce "
-                "permissions at the lakehouse/catalog level",
-                stacklevel=2,
-            )
-            return None
-        if _re.match(r"(?is)^\s*REVOKE\b", ch_sql):
-            raise QueryError(
-                "REVOKE cannot be honored: this engine has no ACL layer "
-                "to restrict — enforce permissions at the lakehouse/"
-                "catalog level (table ACLs, storage IAM)"
-            )
-        try:
-            self._run(self._translate(ch_sql), qid).collect()
-        except Exception as e:
-            if "INVALID_TEMP_OBJ_REFERENCE" in str(e) and _re.match(
-                r"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\b", ch_sql
-            ):
-                raise QueryError(
-                    "CREATE VIEW over session-registered (temporary) "
-                    "tables cannot persist in the catalog; either "
-                    "CREATE TEMPORARY VIEW <name> AS ... (session "
-                    "lifetime, no db qualifier), or persist the source "
-                    "first (create_table + INSERT), then CREATE VIEW "
-                    "over the catalog table"
-                ) from None
-            raise
-        return None
+        return out
 
     # ------------------------------------------------------------------
     # query cache (`use_query_cache` analogue)
@@ -1793,6 +563,22 @@ class Client:
         inserts against the server-provided header types
         (normalize_type, src/arrow/types.rs:123-213).
         """
+        self._write_block(table, [self._as_df(data)])
+
+    def insert_many(
+        self, table: str, batches: list[DataFrame | pa.Table], qid: str | None = None
+    ) -> None:
+        """INSERT many batches in ONE write job — the deferred-flush
+        analogue (reference client.rs:542-589, internal.rs:481-520: N
+        blocks, one syscall; here N batches, one Spark write job)."""
+        if batches:
+            self._write_block(table, [self._as_df(b) for b in batches])
+
+    def _write_block(self, table: str, dfs: list[DataFrame]) -> None:
+        """Write `dfs` as ONE block through the target's engine: a
+        Buffer flushes to its destination, Kafka/FileLog refuse, Join
+        dedupes, Null discards, and attached materialized views see the
+        block once."""
         eng = self._engine_of(table)
         if eng == "Buffer":
             # Buffer flushes to its destination — eagerly, here
@@ -1806,48 +592,21 @@ class Client:
                 "to the broker or write a file into the watch dir "
                 "instead"
             )
-        df = self._as_df(data)
-        aligned = self._align_to_table(df, table)
+        block = self._align_to_table(dfs[0], table)
+        for d in dfs[1:]:
+            block = block.unionByName(self._align_to_table(d, table))
         if eng == "Join":
-            aligned = self._dedupe_join_any(table, aligned)
+            block = self._dedupe_join_any(table, block)
         # Null engine: the block is DISCARDED but attached materialized
         # views still see it — CH's ingest-through-Null pattern
         if eng != "Null":
             from clickhouse_arrow_spark.ddl import bloom_conf_scope
 
             with bloom_conf_scope(self.spark, table):
-                aligned.write.mode("append").insertInto(table)
+                block.write.mode("append").insertInto(table)
         from clickhouse_arrow_spark.matview import propagate_insert
 
-        propagate_insert(self.spark, table, aligned)
-
-    def insert_many(
-        self, table: str, batches: list[DataFrame | pa.Table], qid: str | None = None
-    ) -> None:
-        """INSERT many batches in ONE write job — the deferred-flush
-        analogue (reference client.rs:542-589, internal.rs:481-520: N
-        blocks, one syscall; here N batches, one Spark write job)."""
-        dfs = [self._align_to_table(self._as_df(b), table) for b in batches]
-        if not dfs:
-            return
-        eng = self._engine_of(table)
-        if eng == "Buffer":
-            table = self._buffer_target(table)
-            eng = self._engine_of(table)
-        unioned = dfs[0]
-        for d in dfs[1:]:
-            unioned = unioned.unionByName(d)
-        if eng == "Join":
-            unioned = self._dedupe_join_any(table, unioned)
-        if eng != "Null":
-            from clickhouse_arrow_spark.ddl import bloom_conf_scope
-
-            with bloom_conf_scope(self.spark, table):
-                unioned.write.mode("append").insertInto(table)
-        from clickhouse_arrow_spark.matview import propagate_insert
-
-        # deferred flush = ONE block: attached views see one trigger
-        propagate_insert(self.spark, table, unioned)
+        propagate_insert(self.spark, table, block)
 
     def insert_batches(
         self, table: str, batches, qid: str | None = None
@@ -1904,71 +663,11 @@ class Client:
             self.execute(ddl, qid)
         return ddl
 
-    def _try_create_table_stmt(self, ch_sql: str, qid: str | None) -> bool:
-        """Textual `CREATE TABLE ... ENGINE = ...` (the form DDL
-        scripts contain) routed through the same CreateOptions path as
-        the programmatic API; the CTAS form runs as a Spark CTAS with
-        the engine metadata in TBLPROPERTIES. Returns False when the
-        statement is not a ClickHouse CREATE TABLE (plain Spark DDL
-        falls through to the translate-and-execute path)."""
-        import re as _re
-
-        from clickhouse_arrow_spark.ddl import parse_create_table
-
-        m_rep = _re.match(
-            r"(?is)^\s*(?:CREATE\s+OR\s+REPLACE|REPLACE)\s+(TABLE\s+"
-            r"((?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))?)\b.*)$",
-            ch_sql,
-        )
-        if m_rep and _re.search(r"(?i)\bENGINE\s*=", ch_sql):
-            # CH atomic replace: here DROP IF EXISTS + CREATE (the
-            # non-atomic window is the documented divergence)
-            self.spark.sql(f"DROP TABLE IF EXISTS {m_rep.group(2)}")
-            ch_sql = "CREATE " + m_rep.group(1)
-        m_tmp = _re.match(
-            r"(?is)^(\s*CREATE\s+)TEMPORARY\s+(TABLE\b.*)$", ch_sql
-        )
-        if m_tmp:
-            # CH temp tables are session Memory tables; here they land
-            # in the current database with the engine recorded —
-            # divergence: NOT auto-dropped at session end (documented)
-            ch_sql = m_tmp.group(1) + m_tmp.group(2)
-            if not _re.search(r"(?i)\bENGINE\s*=", ch_sql):
-                ch_sql = ch_sql.rstrip().rstrip(";") + " ENGINE = Memory"
-        if not _re.match(r"(?is)^\s*CREATE\s+TABLE\b", ch_sql):
-            return False
-        if not _re.search(r"(?i)\bENGINE\s*=", ch_sql):
-            return False  # no ENGINE clause: already Spark DDL
-        parsed = parse_create_table(ch_sql, self._dialect_settings())
-        if parsed is None:
-            return False
-        database, table, columns, options, ctas = parsed
-        if ctas is not None and not columns:
-            props = {"clickhouse_arrow_spark.engine": options.engine}
-            if options.order_by:
-                props["clickhouse_arrow_spark.order_by"] = ",".join(
-                    options.order_by
-                )
-            kv = ", ".join(f"'{k}' = '{v}'" for k, v in props.items())
-            ine = "IF NOT EXISTS " if options.if_not_exists else ""
-            self.execute(
-                f"CREATE TABLE {ine}`{database}`.`{table}` USING PARQUET "
-                f"TBLPROPERTIES ({kv}) AS {self._translate(ctas)}",
-                qid,
-            )
-            return True
-        if ctas is not None:
-            raise SchemaError(
-                "CREATE TABLE with BOTH a column list and AS SELECT: "
-                "create the table first, then INSERT INTO ... SELECT"
-            )
-        self.create_table(database, table, columns, options, qid=qid)
-        return True
-
     def execute_script(self, script: str, qid: str | None = None) -> int:
         """Run a semicolon-separated ClickHouse DDL/DML script (the
         shape migration scripts ship in) statement by statement through
-        :meth:`execute_ch`. Statements split at TOP-LEVEL semicolons
+        :meth:`execute_ch`, so each statement takes the one statement
+        table `query_ch` shares (`commands.STATEMENTS`). Statements split at TOP-LEVEL semicolons
         only (string literals, `quoted identifiers`, parentheses and
         comments respected); empty statements
         and `--`/`/* */` comment-only segments are skipped. Returns the
@@ -2071,6 +770,8 @@ class Client:
         `formats.EXTENSIONS`. The optional third argument is a
         ClickHouse column spec ('a Int64, b String') applied through
         the type bridge."""
+        if not _TVF_RE.search(ch_sql):
+            return ch_sql
         import re as _re
 
         from clickhouse_arrow_spark import formats
@@ -2081,13 +782,8 @@ class Client:
             _split_top_args,
         )
 
-        tvf_re = _re.compile(
-            r"(?i)\b(FROM|JOIN)\s+(file|s3|urlCluster|url|merge|"
-            r"generateRandom|remote|remoteSecure|cluster|"
-            r"clusterAllReplicas|input)\s*\("
-        )
         while True:
-            m = _find_clean(tvf_re, ch_sql, depth0=False)
+            m = _find_clean(_TVF_RE, ch_sql, depth0=False)
             if not m:
                 return ch_sql
             close = _find_matching_paren(ch_sql, m.end() - 1)
@@ -2462,150 +1158,6 @@ class Client:
             "refuses them too)"
         )
 
-    def _insert_into_function(self, ch_sql: str, m, qid):
-        """`INSERT INTO [TABLE] FUNCTION file('path', 'Format'
-        [, 'structure']) SELECT ...` — ClickHouse's SQL export path
-        (table-functions/file.md; the reference passes the statement
-        to the server verbatim). File-engine write semantics: an
-        existing file APPENDS for the text formats, and
-        `SET engine_file_truncate_on_insert = 1` truncates first;
-        Parquet and ORC cannot byte-append a single file, so an
-        existing columnar target refuses naming the setting. s3()/url()
-        writes refuse — no remote-write credential path in a library."""
-        import os as _os
-        import re as _re
-
-        from clickhouse_arrow_spark import formats
-        from clickhouse_arrow_spark.dialect.sqltext import (
-            _find_matching_paren,
-            _split_top_args,
-        )
-
-        fn = m.group(1).lower()
-        if fn != "file":
-            raise QueryError(
-                f"INSERT INTO FUNCTION {m.group(1)}(): only file() has "
-                "a write side here — object stores go through "
-                "df.write ('s3a://...') or the DSv2 sink; url()/"
-                "remote() have no write path in this environment"
-            )
-        close = _find_matching_paren(ch_sql, m.end() - 1)
-        if close == -1:
-            raise QueryError(
-                "INSERT INTO FUNCTION file(: unbalanced parentheses"
-            )
-        args = [a.strip() for a in
-                _split_top_args(ch_sql[m.end(): close])]
-        if not args or len(args) > 3:
-            raise QueryError(
-                "file('path', 'Format'[, 'col spec']) takes 1-3 "
-                "arguments"
-            )
-
-        path = self._unquote(args[0])
-        fmt = (
-            formats.lookup(self._unquote(args[1]), QueryError)
-            if len(args) > 1
-            # CH infers the format from the extension when omitted
-            else formats.from_path(path, QueryError)
-        )
-        # an optional 3rd 'col spec' names the file schema in CH; the
-        # SELECT's own schema governs the write here
-        source = ch_sql[close + 1:].strip().rstrip(";").strip()
-        if not source:
-            raise QueryError(
-                "INSERT INTO FUNCTION file(...) needs a SELECT or "
-                "VALUES source in the same statement"
-            )
-        if _re.match(r"(?is)^VALUES\b", source):
-            df = self._run(f"SELECT * FROM {source}", qid)
-        else:
-            df = self.query_ch(source, qid=qid)
-        truncate = str(
-            self.spark.conf.get(
-                "spark.clickhouse_arrow_spark.setting."
-                "engine_file_truncate_on_insert",
-                "0",
-            )
-        ).strip().lower() in ("1", "true")
-        exists = _os.path.exists(path)
-        if exists and truncate:
-            _os.remove(path)
-            exists = False
-        if exists and fmt.source in ("parquet", "orc"):
-            raise QueryError(
-                f"INSERT INTO FUNCTION file(..., '{fmt.name}'): the "
-                f"target exists and {fmt.name} cannot byte-append a "
-                "single file — SET engine_file_truncate_on_insert = 1 "
-                "to overwrite "
-                "(ClickHouse needs the same setting)"
-            )
-        parent = _os.path.dirname(path)
-        if parent and not _os.path.isdir(parent):
-            _os.makedirs(parent, exist_ok=True)
-        formats.write_single_file(df, path, fmt, append=exists)
-        return None
-
-    def _insert_through_input_tvf(self, m, qid):
-        """`INSERT INTO t [(cols)] SELECT ... FROM input('x T, y U')
-        FORMAT fmt <data>`: parse the inline body into a temp view
-        typed by the structure, swap input(...) for the view, and run
-        the result through the normal INSERT ... SELECT route (MV
-        triggers, defaults, engine semantics all apply). The body
-        parses as `INSERT ... FORMAT` parses it (formats.parse_inline),
-        and a structure column no JSONEachRow row carries reads as
-        NULL."""
-        import re as _re
-
-        from pyspark.sql import functions as F
-
-        from clickhouse_arrow_spark.formats import ch_columns, parse_inline
-
-        table, cols, select, structure, fmt, data = (
-            m.group(1), m.group(2), m.group(3), m.group(4),
-            m.group(5), m.group(6) or "",
-        )
-        if not data.strip():
-            raise QueryError(
-                "input(): the FORMAT clause needs inline data rows "
-                "(the wire's out-of-band body has no Spark analogue); "
-                "for bulk data transform a DataFrame and client.insert"
-            )
-        schema = ch_columns(structure, self.type_options)
-        if fmt.lower() == "values":
-            quoted = ", ".join(f"`{n}`" for n in schema.names)
-            src = self.spark.sql(
-                f"SELECT * FROM (VALUES {data.strip().rstrip(';')}) "
-                f"AS __cas_in({quoted})"
-            ).select(*[
-                F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ])
-        else:
-            src = parse_inline(
-                self.spark, fmt, data, schema.names,
-                {f.name: f.dataType for f in schema.fields},
-            )
-            src = src.select(*[
-                F.col(f"`{f.name}`") if f.name in src.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ])
-        # a fresh name per statement: this statement drops the view
-        # when it ends, which must not touch a concurrent one's
-        view = f"__cas_input_{uuid.uuid4().hex}"
-        src.createOrReplaceTempView(view)
-        new_select = _re.sub(
-            r"(?is)\binput\(\s*'[^']+'\s*\)", view, select, count=1
-        )
-        col_clause = f" ({cols})" if cols else ""
-        try:
-            return self.execute_ch(
-                f"INSERT INTO {table}{col_clause} {new_select}", qid
-            )
-        finally:
-            self.spark.catalog.dropTempView(view)
-
     def _expand_merge_tvf(self, ch_sql, m, close, args) -> str:
         """`merge('db', '^regex')` / `merge('^regex')` — union of every
         table in the database whose name matches (CH table-functions/
@@ -2694,451 +1246,6 @@ class Client:
             ch_sql, m, close, base.select(*cols), "genrand",
             f"{args[0].strip()}|{seed}",
         )
-
-    # ------------------------------------------------------------------
-    # introspection (system.tables / system.columns analogues)
-    # ------------------------------------------------------------------
-    def _rewrite_system_tables(self, ch_sql: str) -> str:
-        """Resolve `system.*` table references in ClickHouse SQL.
-
-        `system.numbers` / `system.numbers_mt` become Spark's lazy
-        `range` TVF (a LIMIT streams only what it needs; an unbounded
-        scan runs ~forever — the same contract as ClickHouse's
-        infinite table). Catalog tables (databases/tables/columns/
-        query_log) are materialized as a point-in-time temp view when
-        referenced — the same driver-side catalog introspection class
-        as fetch_tables, never a data scan."""
-        from clickhouse_arrow_spark.dialect.sqltext import _scan_mask
-
-        if "system" not in ch_sql.lower():
-            return ch_sql
-        mask = _scan_mask(ch_sql)
-        out: list[str] = []
-        last = 0
-        # Per-rewrite memo for the expensive catalog scans (round-12):
-        # one query referencing system.tables AND system.parts built the
-        # full listDatabases/listTables inventory twice (~3 s of py4j
-        # catalog chatter each at 10 temp views). Scoping the memo to a
-        # single rewrite also gives every relation in the query the
-        # SAME point-in-time catalog snapshot — the semantics a
-        # multi-subquery introspection statement wants. The memo is a
-        # LOCAL passed down the call chain (round-13, ADVICE r12): an
-        # instance-dict stash was not safe under concurrent or
-        # re-entrant rewrites on the same Client.
-        memo: dict = {}
-        for m in _SYSTEM_SQL_RE.finditer(ch_sql):
-            if mask[m.start()][1]:
-                continue  # inside a string literal
-            out.append(ch_sql[last : m.start()])
-            out.append(self._system_relation(m.group(1).lower(), memo))
-            last = m.end()
-        if not out:
-            return ch_sql
-        out.append(ch_sql[last:])
-        return "".join(out)
-
-    def _system_relation(self, name: str, memo: dict | None = None) -> str:
-        if name in ("numbers", "numbers_mt"):
-            # 2^62 rows ~= unbounded; range's per-partition iterators
-            # are lazy so LIMIT n touches n rows total
-            return "(SELECT id AS number FROM range(4611686018427387904))"
-        if name == "one":
-            return "(SELECT CAST(0 AS TINYINT) AS dummy)"
-        view = f"ch_system_{name}"
-        if name == "databases":
-            rows = [
-                (d.name, "Atomic", d.description or "", d.locationUri or "")
-                for d in self.spark.catalog.listDatabases()
-            ]
-            df = self.spark.createDataFrame(
-                rows, "name string, engine string, comment string, data_path string"
-            )
-        elif name == "tables":
-            df = self._system_tables_df(memo)
-        elif name == "columns":
-            parts = [
-                self.system_columns(db)
-                for db in self.fetch_schemas()
-            ]
-            # session temp views (the registered parquet tables) report
-            # under 'default', same attribution as system.tables
-            temp = [
-                t.name
-                for t in self.spark.catalog.listTables()
-                if t.isTemporary
-            ]
-            if temp:
-                parts.append(self.system_columns(None, tables=temp))
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-        elif name == "query_log":
-            df = self.system_query_log()
-        elif name == "parts":
-            # global form: one row per parquet part across every table
-            # the session can see (the per-table system_parts, unioned)
-            dfs = []
-            for r in self._system_tables_df(memo).collect():
-                qualified = (
-                    r["name"]
-                    if r["is_temporary"]
-                    else f"{r['database']}.{r['name']}"
-                )
-                try:
-                    dfs.append(self.system_parts(qualified))
-                except Exception:
-                    continue  # views without physical files
-            df = dfs[0] if dfs else self.spark.createDataFrame(
-                [],
-                "table string, name string, active boolean, rows bigint, "
-                "bytes_on_disk bigint, row_groups int, "
-                "modification_time timestamp, path string",
-            )
-            for p in dfs[1:]:
-                df = df.unionByName(p)
-        elif name == "processes":
-            # in-flight queries = active Spark job groups (qids); CH
-            # would also show the introspection query itself — Spark
-            # hasn't started its job yet at build time
-            st = self.spark.sparkContext.statusTracker()
-            rows = []
-            for jid in st.getActiveJobsIds():
-                info = st.getJobInfo(jid)
-                if info is not None:
-                    rows.append((str(jid), "", float(0)))
-            df = self.spark.createDataFrame(
-                rows, "query_id string, query string, elapsed double"
-            )
-        elif name == "metrics":
-            rt = self.spark._jvm.java.lang.Runtime.getRuntime()
-            st = self.spark.sparkContext.statusTracker()
-            rows = [
-                ("Query", len(st.getActiveJobsIds()),
-                 "Number of executing queries (active Spark jobs)"),
-                ("MemoryTracking",
-                 int(rt.totalMemory() - rt.freeMemory()),
-                 "Driver JVM heap in use, bytes"),
-            ]
-            df = self.spark.createDataFrame(
-                rows, "metric string, value bigint, description string"
-            )
-        elif name == "events":
-            n_logged = self.system_query_log().count()
-            # Spark's count of generated classes compiled, JVM-wide since
-            # start like ClickHouse's counter: a plan whose classes are
-            # still in the codegen cache adds nothing
-            codegen = self.spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-            n_compiled = codegen.METRIC_COMPILATION_TIME().getCount()
-            df = self.spark.createDataFrame(
-                [("Query", n_logged,
-                  "Queries this session (from the client query log)"),
-                 ("CompileFunction", n_compiled,
-                  "Generated classes compiled by Spark's codegen in this "
-                  "JVM since start")],
-                "event string, value bigint, description string",
-            )
-        elif name == "merges":
-            # merges are EAGER here (OPTIMIZE runs synchronously), so
-            # there is never a background merge in flight — the empty
-            # relation with CH's columns is the truthful answer
-            df = self.spark.createDataFrame(
-                [],
-                "database string, table string, elapsed double, "
-                "progress double, num_parts bigint, "
-                "total_size_bytes_compressed bigint",
-            )
-        elif name == "functions":
-            from clickhouse_arrow_spark.dialect import known_ch_functions
-
-            aggish = {
-                "sum", "min", "max", "count", "avg", "any", "anyLast",
-                "argMax", "argMin", "uniq", "uniqExact", "groupArray",
-                "groupUniqArray", "median", "quantile", "quantiles",
-                "corr", "covarPop", "covarSamp", "stddevPop",
-                "stddevSamp", "varPop", "varSamp", "topK",
-            }
-            names_all = set(known_ch_functions()) | set(self._sql_macros)
-            df = self.spark.createDataFrame(
-                sorted((n, n in aggish) for n in names_all),
-                "name string, is_aggregate boolean",
-            )
-        elif name == "settings":
-            from clickhouse_arrow_spark.settings import _CH_TO_SPARK
-
-            rows = []
-            for ch_name, (conf, _fn) in sorted(_CH_TO_SPARK.items()):
-                try:
-                    val = self.spark.conf.get(conf, "")
-                except Exception:
-                    val = ""
-                rows.append((ch_name, str(val or ""), conf))
-            df = self.spark.createDataFrame(
-                rows, "name string, value string, description string"
-            )
-        elif name == "dropped_tables":
-            # one row per restorable trash-dir incarnation (the UNDROP
-            # inventory; CH's system.dropped_tables is the same view of
-            # store/ within database_atomic_delay_before_drop_table_sec)
-            df = self.spark.createDataFrame(
-                self._scan_ops_dirs(".dropped"),
-                "database string, table string, uuid string, "
-                "metadata_dropped_path string, "
-                "table_dropped_time timestamp",
-            )
-        elif name == "view_refreshes":
-            # one row per refreshable materialized view: recorded
-            # schedule, last manual refresh, and the next due time
-            # computed from the EVERY interval (an orchestrator reads
-            # this to drive SYSTEM REFRESH VIEW)
-            import datetime
-
-            from clickhouse_arrow_spark.ddl import _table_props
-
-            unit_s = {"SECOND": 1, "MINUTE": 60, "HOUR": 3600,
-                      "DAY": 86400, "WEEK": 604800}
-            rows = []
-            for d in self.spark.catalog.listDatabases():
-                try:
-                    tables = self.spark.catalog.listTables(d.name)
-                except Exception:
-                    continue
-                for t in tables:
-                    if t.isTemporary or not t.database:
-                        continue
-                    try:
-                        props = _table_props(
-                            self.spark, f"{t.database}.{t.name}"
-                        )
-                    except Exception:
-                        continue
-                    sched = props.get(
-                        "clickhouse_arrow_spark.mv_refresh"
-                    )
-                    if not sched:
-                        continue
-                    last_raw = props.get(
-                        "clickhouse_arrow_spark.mv_last_refresh"
-                    )
-                    last = (
-                        datetime.datetime.fromtimestamp(int(last_raw))
-                        if last_raw else None
-                    )
-                    nxt = None
-                    pm = re.match(
-                        r"(?i)EVERY\s+(\d+)\s+(\w+)", sched
-                    )
-                    if pm and last is not None:
-                        secs = unit_s.get(pm.group(2).upper().rstrip("S"))
-                        if secs:
-                            nxt = last + datetime.timedelta(
-                                seconds=int(pm.group(1)) * secs
-                            )
-                    rows.append((
-                        t.database, t.name, "Scheduled", sched,
-                        last, nxt,
-                    ))
-            df = self.spark.createDataFrame(
-                rows,
-                "database string, view string, status string, "
-                "refresh_schedule string, last_refresh_time timestamp, "
-                "next_refresh_time timestamp",
-            )
-        elif name == "dictionaries":
-            # catalog tables carrying the dictionary marker property
-            # (dictionary.create_dictionary): name, key, element count,
-            # status (always LOADED — dictionaries here are broadcast
-            # at call time, never in a failed-load state)
-            from clickhouse_arrow_spark.ddl import _table_props
-
-            rows = []
-            for d in self.spark.catalog.listDatabases():
-                try:
-                    tables = self.spark.catalog.listTables(d.name)
-                except Exception:
-                    continue
-                for t in tables:
-                    if t.isTemporary or not t.database:
-                        continue
-                    q = f"{t.database}.{t.name}"
-                    try:
-                        props = _table_props(self.spark, q)
-                    except Exception:
-                        continue
-                    if props.get(
-                        "clickhouse_arrow_spark.dictionary"
-                    ) != "true":
-                        continue
-                    rows.append((
-                        t.database, t.name, "LOADED",
-                        props.get(
-                            "clickhouse_arrow_spark.dict_key", ""
-                        ),
-                        int(self.spark.table(q).count()),
-                    ))
-            df = self.spark.createDataFrame(
-                rows,
-                "database string, name string, status string, "
-                "key string, element_count bigint",
-            )
-        elif name == "detached_parts":
-            # one row per DETACH PARTITION directory awaiting ATTACH:
-            # the `.detached/<table>/` area beside each table location
-            import datetime
-
-            from clickhouse_arrow_spark.ddl import _table_location
-
-            jvm = self.spark.sparkContext._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path
-            hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-            rows = []
-            for r in self._system_tables_df().collect():
-                if r["is_temporary"]:
-                    continue
-                qualified = f"{r['database']}.{r['name']}"
-                try:
-                    loc = _table_location(
-                        self.spark, qualified
-                    ).rstrip("/")
-                    parent, tname = loc.rsplit("/", 1)
-                    droot = hpath(f"{parent}/.detached/{tname}")
-                    fs = droot.getFileSystem(hconf)
-                    if not fs.exists(droot):
-                        continue
-                    for st in fs.listStatus(droot):
-                        if not st.isDirectory():
-                            continue
-                        pname = st.getPath().getName()
-                        size = fs.getContentSummary(
-                            st.getPath()
-                        ).getLength()
-                        rows.append((
-                            r["database"], r["name"],
-                            pname.split("=", 1)[-1], pname, int(size),
-                            datetime.datetime.fromtimestamp(
-                                st.getModificationTime() // 1000
-                            ),
-                        ))
-                except Exception:
-                    continue
-            df = self.spark.createDataFrame(
-                rows,
-                "database string, table string, partition_id string, "
-                "name string, bytes_on_disk bigint, "
-                "modification_time timestamp",
-            )
-        elif name == "detached_tables":
-            # one row per DETACH TABLE snapshot awaiting ATTACH;
-            # is_permanently is uniformly false (PERMANENTLY only
-            # affects CH server restarts — a documented no-op here)
-            rows = [
-                (db, t, u, p)
-                for db, t, u, p, _ts in self._scan_ops_dirs(
-                    ".detached_tables"
-                )
-            ]
-            df = self.spark.createDataFrame(
-                [(db, t, u, p, False) for db, t, u, p in rows],
-                "database string, table string, uuid string, "
-                "metadata_path string, is_permanently boolean",
-            )
-        else:  # pragma: no cover — regex and dispatch kept in sync
-            raise QueryError(f"unhandled system table {name}")
-        df.createOrReplaceTempView(view)
-        return view
-
-    def _scan_ops_dirs(self, area: str):
-        """Inventory of `<dbloc>/<area>/` across every database: one
-        (database, table, uuid, path, ts) per snapshot directory.
-        Pointer files (`<name>.__ptr`) written for custom-LOCATION
-        tables are followed too; directories double-counted through a
-        pointer are deduped by path."""
-        import datetime
-
-        from clickhouse_arrow_spark.ddl import (
-            _database_location,
-            _read_fs_text,
-        )
-
-        jvm = self.spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        out = []
-        seen: set[str] = set()
-        for db in self.fetch_schemas():
-            try:
-                root = f"{_database_location(self.spark, db)}/{area}"
-                p = hpath(root)
-                fs = p.getFileSystem(hconf)
-                if not fs.exists(p):
-                    continue
-                for st in fs.listStatus(p):
-                    fname = st.getPath().getName()
-                    if fname.endswith(".__ptr"):
-                        tname = fname[: -len(".__ptr")]
-                        body = _read_fs_text(
-                            jvm, fs, st.getPath()
-                        ).strip().split("\n")
-                        path = body[0]
-                        ts = (
-                            int(body[1])
-                            if len(body) > 1 and body[1].isdigit()
-                            else st.getModificationTime() // 1000
-                        )
-                    elif st.isDirectory():
-                        path = str(st.getPath().toUri().getPath())
-                        tname = fname.split("__")[0]
-                        ts = st.getModificationTime() // 1000
-                    else:
-                        continue
-                    if path in seen:
-                        continue
-                    seen.add(path)
-                    base = path.rsplit("/", 1)[-1]
-                    uuid_part = (
-                        base.split("__", 1)[1] if "__" in base else ""
-                    )
-                    out.append((
-                        db, tname, uuid_part, path,
-                        datetime.datetime.fromtimestamp(ts),
-                    ))
-            except Exception:
-                continue
-        return out
-
-    def _system_tables_df(self, memo: dict | None = None) -> DataFrame:
-        if memo is not None and "tables_df" in memo:
-            return memo["tables_df"]
-        rows = []
-        seen = set()
-        for db in self.fetch_schemas():
-            for t in self.spark.catalog.listTables(db):
-                key = (t.namespace[0] if t.namespace else "", t.name)
-                if key in seen:
-                    continue
-                seen.add(key)
-                if t.isTemporary:
-                    # session-registered tables live in CH's 'default'
-                    # database from a migrating user's point of view —
-                    # `WHERE database = 'default'` must find them
-                    engine, database = "View", "default"
-                else:
-                    database = key[0]
-                    try:
-                        from clickhouse_arrow_spark.ddl import _table_props
-
-                        engine = _table_props(
-                            self.spark, f"{database}.{t.name}"
-                        ).get("clickhouse_arrow_spark.engine", "") or "Parquet"
-                    except Exception:
-                        engine = str(t.tableType or "Parquet")
-                rows.append((database, t.name, engine, bool(t.isTemporary)))
-        df = self.spark.createDataFrame(
-            rows,
-            "database string, name string, engine string, is_temporary boolean",
-        )
-        if memo is not None:
-            memo["tables_df"] = df
-        return df
 
     def _ensure_variant_udf(self) -> None:
         """Register the `ch_variant_type` helper once per client.

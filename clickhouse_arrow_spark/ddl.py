@@ -877,12 +877,6 @@ def _rebuild_projections_after_mutation(spark: SparkSession,
     rebuild_projections(spark, table)
 
 
-_OPTIMIZE_RE = re.compile(
-    r"(?is)^\s*OPTIMIZE\s+TABLE\s+([\w.`]+?)(\s+FINAL)?"
-    r"(?:\s+(DEDUPLICATE)(?:\s+BY\s+([\w,`\s]+?))?)?\s*;?\s*$"
-)
-
-
 def optimize_table(
     spark: SparkSession,
     table: str,

@@ -3440,7 +3440,7 @@ def q_util_sweep_wave12(spark: SparkSession, sf_dir: str) -> DataFrame:
            (SELECT count(*) FROM lineitem) AS lrows,
            TRUE AS merges_idle
     """,
-    doc="system.* introspection surface (client._system_relation): "
+    doc="system.* introspection surface (system_tables.SYSTEM_TABLES): "
     "session-registered tables report under database 'default' in "
     "system.tables/system.columns (the attribution a migrating user "
     "filters on), system.parts reads parquet footers so its per-table "

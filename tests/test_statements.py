@@ -10,6 +10,7 @@ from clickhouse_arrow_spark.dialect import (
     UntranslatableFunctionError,
     extract_with_fill,
 )
+from clickhouse_arrow_spark.errors import QueryError
 
 
 @pytest.fixture()
@@ -1230,3 +1231,183 @@ def test_session_dialect_settings_reach_mutations(client, spark):
     finally:
         spark.conf.unset(conf)
         spark.sql("DROP DATABASE IF EXISTS setdb CASCADE")
+
+
+# -- one statement table behind query_ch / execute_ch / execute_script --
+
+_SPLIT_CONF = ("spark.clickhouse_arrow_spark.setting."
+               "splitby_max_substrings_includes_remaining_string")
+
+
+def _split2(client):
+    return client.query_ch(
+        "SELECT splitByChar(',', 'a,b,,c', 2) AS s"
+    ).collect()[0].s
+
+
+def test_set_through_execute_ch_reaches_next_query(client, spark):
+    client.execute_ch(
+        "SET splitby_max_substrings_includes_remaining_string = 1"
+    )
+    try:
+        assert _split2(client) == ["a", "b,,c"]
+    finally:
+        spark.conf.unset(_SPLIT_CONF)
+    assert _split2(client) == ["a", "b"]
+
+
+def test_set_through_execute_script_reaches_next_query(client, spark):
+    ran = client.execute_script(
+        "SET splitby_max_substrings_includes_remaining_string = 1; "
+        "SELECT 1"
+    )
+    try:
+        assert ran == 2
+        assert _split2(client) == ["a", "b,,c"]
+    finally:
+        spark.conf.unset(_SPLIT_CONF)
+
+
+def test_execute_ch_accepts_row_statements(client):
+    """Forms that return rows run (and discard their rows) through
+    execute_ch like any statement."""
+    for stmt in ("SHOW GRANTS", "EXISTS TABLE no_such_table",
+                 "SHOW ENGINES"):
+        assert client.execute_ch(stmt) is None
+    assert client.query_ch("EXISTS TABLE no_such_table").collect()[0][0] == 0
+
+
+@pytest.fixture()
+def ctas_db(spark):
+    spark.sql("CREATE DATABASE IF NOT EXISTS ctasdb")
+    yield "ctasdb"
+    spark.sql("DROP DATABASE IF EXISTS ctasdb CASCADE")
+
+
+def test_ctas_over_system_numbers(client, spark, ctas_db):
+    client.execute_ch(
+        "CREATE TABLE ctasdb.n ENGINE = MergeTree ORDER BY number AS "
+        "SELECT number FROM system.numbers LIMIT 3"
+    )
+    assert [r.number for r in spark.table("ctasdb.n").orderBy("number")
+            .collect()] == [0, 1, 2]
+    # the Spark CTAS (no ENGINE) takes the same SELECT path
+    client.execute_ch(
+        "CREATE TABLE ctasdb.n2 AS SELECT number FROM system.numbers LIMIT 2"
+    )
+    assert spark.table("ctasdb.n2").count() == 2
+
+
+def test_ctas_over_get_setting(client, spark, ctas_db):
+    client.execute_ch(
+        "SET splitby_max_substrings_includes_remaining_string = 1"
+    )
+    try:
+        client.execute_ch(
+            "CREATE TABLE ctasdb.s ENGINE = MergeTree ORDER BY v AS SELECT "
+            "getSetting('splitby_max_substrings_includes_remaining_string')"
+            " AS v"
+        )
+    finally:
+        spark.conf.unset(_SPLIT_CONF)
+    assert spark.table("ctasdb.s").collect()[0].v == "1"
+
+
+def test_ctas_over_final_read(client, spark, replacing_table, ctas_db):
+    client.execute_ch(
+        "CREATE TABLE ctasdb.f ENGINE = MergeTree ORDER BY k AS "
+        f"SELECT k, v FROM {replacing_table} FINAL"
+    )
+    rows = {r.k: r.v for r in spark.table("ctasdb.f").collect()}
+    assert rows == {1: "new", 2: "only"}
+
+
+def test_create_view_over_system_one(client, spark, ctas_db):
+    client.execute_ch(
+        "CREATE VIEW ctasdb.v AS SELECT dummy FROM system.one"
+    )
+    assert client.query_ch("SELECT dummy FROM ctasdb.v").collect()[0][0] == 0
+
+
+def test_show_processlist_is_system_processes(client):
+    show = client.query_ch("SHOW PROCESSLIST").schema
+    table = client.query_ch("SELECT * FROM system.processes").schema
+    assert show.names == table.names == ["query_id", "query", "elapsed"]
+
+
+def test_params_bind_in_statement_forms(client, spark, ctas_db):
+    client.execute_ch(
+        "CREATE TABLE ctasdb.p (k Int64) ENGINE = MergeTree ORDER BY k"
+    )
+    client.query_ch(
+        "INSERT INTO ctasdb.p VALUES ({x:Int64})", params={"x": 7}
+    )
+    client.query_ch(
+        "INSERT INTO ctasdb.p SELECT {x:Int64}", params={"x": 8}
+    )
+    assert sorted(r.k for r in spark.table("ctasdb.p").collect()) == [7, 8]
+
+
+def test_insert_many_refuses_filelog(client, tmp_path, ctas_db):
+    import pyarrow as pa
+
+    from clickhouse_arrow_spark.errors import SchemaError
+
+    client.execute_ch(
+        "CREATE TABLE ctasdb.fl (a Int64) "
+        f"ENGINE = FileLog('{tmp_path}', 'JSONEachRow')"
+    )
+    batch = pa.table({"a": [1, 2]})
+    with pytest.raises(SchemaError, match="FileLog"):
+        client.insert_many("ctasdb.fl", [batch, batch])
+
+
+def test_materialized_view_over_projected_source(client, spark, ctas_db):
+    """A MATERIALIZED projection that covers a materialized view's
+    aggregate leaves the view attached to its source: a stored SELECT is
+    not projection-routed, so each inserted block reaches the view."""
+    client.execute_ch(
+        "CREATE TABLE ctasdb.src (k String, v Int64) "
+        "ENGINE = MergeTree ORDER BY k"
+    )
+    client.execute_ch("INSERT INTO ctasdb.src VALUES ('a', 1), ('b', 2)")
+    client.execute_ch(
+        "ALTER TABLE ctasdb.src ADD PROJECTION by_k "
+        "(SELECT k, sum(v) AS s GROUP BY k)"
+    )
+    client.execute_ch("ALTER TABLE ctasdb.src MATERIALIZE PROJECTION by_k")
+    shape = "SELECT k, sum(v) AS s FROM ctasdb.src GROUP BY k"
+    client.execute_ch(
+        "CREATE MATERIALIZED VIEW ctasdb.mv ENGINE = SummingMergeTree "
+        f"ORDER BY k AS {shape}"
+    )
+    client.execute_ch(
+        "CREATE TABLE ctasdb.sums (k String, s Int64) "
+        "ENGINE = SummingMergeTree ORDER BY k"
+    )
+    client.execute_ch(
+        f"CREATE MATERIALIZED VIEW ctasdb.mv_to TO ctasdb.sums AS {shape}"
+    )
+    client.execute_ch("INSERT INTO ctasdb.src VALUES ('a', 10), ('c', 5)")
+    for target in ("ctasdb.mv", "ctasdb.sums"):
+        got = client.query_ch(
+            f"SELECT k, sum(s) AS s FROM {target} GROUP BY k ORDER BY k"
+        ).collect()
+        assert [(r.k, r.s) for r in got] == [("a", 10), ("c", 5)]
+    # the query itself still reads the projection
+    assert {r.k: r.s for r in client.query_ch(shape).collect()} == {
+        "a": 11, "b": 2, "c": 5
+    }
+
+
+def test_explain_into_outfile_writes_the_plan(client, tmp_path):
+    path = tmp_path / "plan.txt"
+    out = client.query_ch(
+        f"EXPLAIN PLAN SELECT 1 AS x INTO OUTFILE '{path}'"
+    ).collect()
+    assert out[0].path == str(path)
+    assert "OneRowRelation" in path.read_text()
+    with pytest.raises(QueryError, match="already exists"):
+        client.query_ch(f"SHOW GRANTS INTO OUTFILE '{path}'")
+    client.query_ch(f"SHOW GRANTS INTO OUTFILE '{path}' TRUNCATE")
+    assert path.read_text().strip() == "GRANT ALL ON *.* TO 'default'"
